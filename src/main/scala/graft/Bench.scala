@@ -2,9 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.GraftListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.GraftBridge
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR.
   *
@@ -129,29 +128,20 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     require(reps >= 1, s"SPARK_GRAFT_BENCH_REPS must be >= 1, got $reps")
     val (gateLoad, gatePassedLoad, gateWaitSec, gateTimedOut) = awaitQuietMachine()
-    val loadGateJson =
-      s"""{"initial_loadavg":$gateLoad,"passed_loadavg":$gatePassedLoad,""" +
-        s""""waited_sec":${(gateWaitSec * 10).round / 10.0},"timed_out":$gateTimedOut}"""
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // FAIR so the parallel warmup's per-family pools share slots
-      // round-robin: under FIFO the GBT chain's hundreds of tiny
-      // latency-critical stages starve behind the dedup/ANN families'
-      // wide stages (measured: q_ml_importances 17s solo -> 117s wall
-      // under FIFO-contended warmup). The timed query loop below is
-      // strictly sequential — one job at a time, where FAIR degenerates
-      // to FIFO — so query medians are unaffected.
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val loadGateJson = Json.obj(Seq("initial_loadavg" -> gateLoad,
+      "passed_loadavg" -> gatePassedLoad, "waited_sec" -> (gateWaitSec * 10).round / 10.0,
+      "timed_out" -> gateTimedOut))
+    // FAIR so the parallel warmup's per-family pools share slots
+    // round-robin: under FIFO the GBT chain's hundreds of tiny
+    // latency-critical stages starve behind the dedup/ANN families'
+    // wide stages (measured: q_ml_importances 17s solo -> 117s wall
+    // under FIFO-contended warmup). The timed query loop below is
+    // strictly sequential — one job at a time, where FAIR degenerates
+    // to FIFO — so query medians are unaffected.
+    val spark = GraftSession.local("spark.scheduler.mode" -> "FAIR")
 
     val shuffleBytes = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -164,12 +154,12 @@ object Bench {
     // brackets ONLY f() — listener-bus drains (up to the 60s swallowed
     // timeout) must never be charged to the query they follow
     def shuffleDelta[A](f: () => A): (A, Long, Double) = {
-      GraftListenerBridge.flushListeners(spark.sparkContext)
+      GraftBridge.flushListeners(spark.sparkContext)
       val before = shuffleBytes.get()
       val t0 = System.nanoTime()
       val out = f()
       val sec = (System.nanoTime() - t0) / 1e9
-      GraftListenerBridge.flushListeners(spark.sparkContext)
+      GraftBridge.flushListeners(spark.sparkContext)
       (out, shuffleBytes.get() - before, sec)
     }
 
@@ -268,12 +258,12 @@ object Bench {
     // high dispersion + high loadavg = environment noise, not code.
     def loadSample(): String = {
       val la = readProc("/proc/loadavg")
-        .map(_.trim.split("\\s+").take(3).mkString(","))
-        .getOrElse("-1,-1,-1")
+        .map(_.trim.split("\\s+").take(3).toSeq)
+        .getOrElse(Seq("-1", "-1", "-1"))
       val memAvail = readProc("/proc/meminfo")
         .flatMap(_.linesIterator.find(_.startsWith("MemAvailable:")))
         .flatMap(_.split("\\s+").lift(1)).map(_.toLong * 1024L).getOrElse(-1L)
-      s"""{"loadavg":[$la],"mem_available_bytes":$memAvail}"""
+      Json.obj(Seq("loadavg" -> Json.arr(la), "mem_available_bytes" -> memAvail))
     }
     val loadStart = loadSample()
 
@@ -351,248 +341,28 @@ object Bench {
     }
     val loadEnd = loadSample()
 
-    // Streaming state at bench scale (VERDICT r4 item 6): replay the SF
-    // events table through the two stateful shapes — flatMapGroupsWithState
-    // percent-change alerts and the transformWithState batch→stream count
-    // handoff — as real Structured Streaming queries (file source,
-    // AvailableNow, RocksDB state store), recording throughput and state
-    // size. Cold + warm replay each (see runStream): the cold number is
-    // the end-to-end measurement (source listing + state build
-    // included), the warm one the round-over-round comparable.
-    var streamTmp: java.nio.file.Path = null
-    val streamingJson = try {
-      import org.apache.spark.sql.streaming.Trigger
-      import graft.streaming.Ingest
-      import spark.implicits._
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val tmp = java.nio.file.Files.createTempDirectory("graft-streambench")
-      streamTmp = tmp
-      val batch = Tables.events(spark, sfDir)
-      // the streaming source must be declared with the RAW on-disk schema
-      // (ts may be timestamp-typed in newer fixture vintages); Tables
-      // .normalizeTs then restores the engine's epoch-nano-long invariant
-      // on the stream, exactly as the batch reader does
-      val rawSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-      // the SF tables are single parquet FILES and the streaming file
-      // source only accepts directories — stage a zero-copy symlink dir
-      val srcDir = tmp.resolve("events_src")
-      java.nio.file.Files.createDirectory(srcDir)
-      java.nio.file.Files.createSymbolicLink(
-        srcDir.resolve("events.parquet"),
-        java.nio.file.Paths.get(sfDir, "events.parquet"))
-      def src = Ingest.typedEvents(
-        Tables.normalizeTs(spark.readStream.schema(rawSchema)
-          .parquet(srcDir.toString)))
-      // each stateful shape replays TWICE against fresh checkpoints: the
-      // first (cold) number is the end-to-end story (source listing,
-      // RocksDB native init, JIT of the state-processor paths all priced
-      // in — each exercised exactly once per bench JVM, which made the
-      // r7-r9 rows/s swing 30-50% run to run); the second (warm) replay
-      // re-lists and rebuilds state identically on a warmed JVM, so IT
-      // is the round-over-round comparable. Both land in the artifact.
-      def runStream(name: String)(mk: org.apache.spark.sql.Dataset[Ingest.Event] =>
-          org.apache.spark.sql.Dataset[_]): String = {
-        def replay(tag: String): (Long, Double, Long, Long) = {
-          val t0 = System.nanoTime()
-          val q = mk(src).writeStream.format("noop")
-            .option("checkpointLocation", s"$tmp/$name/$tag/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          val sec = (System.nanoTime() - t0) / 1e9
-          val progress = q.recentProgress
-          val inRows = progress.map(_.numInputRows).sum
-          val stateRows = progress.flatMap(_.stateOperators.map(_.numRowsTotal))
-            .maxOption.getOrElse(0L)
-          val stateBytes = progress.flatMap(_.stateOperators.map(_.memoryUsedBytes))
-            .maxOption.getOrElse(0L)
-          (inRows, sec, stateRows, stateBytes)
-        }
-        val (inRows, sec, stateRows, stateBytes) = replay("cold")
-        val (_, warmSec, _, _) = replay("warm")
-        s""""$name":{"rows":$inRows,"sec":${(sec * 1000).round / 1000.0},""" +
-          s""""rows_per_sec":${(inRows / sec).round},""" +
-          s""""warm_sec":${(warmSec * 1000).round / 1000.0},""" +
-          s""""warm_rows_per_sec":${(inRows / warmSec).round},""" +
-          s""""state_rows":$stateRows,"state_bytes":$stateBytes}"""
+    // Streaming legs (graft.StreamScale), after the timed queries so
+    // their wall time never touches the headline total. A failed leg
+    // must not discard the run: its error lands in the artifact instead.
+    def leg(name: String)(f: => String): String =
+      try f catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        Json.obj(Seq("err" -> Json.str(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))))
       }
-      val pct = runStream("pct_alerts")(ev => Ingest.statefulPctAlerts(ev))
-      val initial = batch.groupBy("user_id")
-        .agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n"))
-      val tws = runStream("running_counts_tws") { ev =>
-        // handoff seed: per-user historical counts, as a cutover would have
-        Ingest.runningCountsTws(ev, initial)
-      }
-
-      // Replay-determinism certificates (VERDICT r13 ask #5): the batch
-      // board is oracled; the streaming processors' equivalent gate is
-      // "the same input replayed from a fresh checkpoint produces the
-      // SAME output and the SAME state" — each processor runs TWICE
-      // over the identical file source, and the cert row compares an
-      // order-free output hash (sum of per-row xxhash64 over all
-      // columns stringified), the state row count, and the state bytes.
-      // The default (HDFS-backed) state provider keeps state bytes a
-      // deterministic in-memory measure; RocksDB's memoryUsedBytes
-      // reflects SST layout and is restored after.
-      val certsJson = {
-        import org.apache.spark.sql.functions.{col, lit, pmod, sum => fsum, xxhash64}
-        val HdfsProvider =
-          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-        val RocksProvider =
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        def certRun(name: String, tag: String)(
-            mk: org.apache.spark.sql.Dataset[Ingest.Event] => org.apache.spark.sql.Dataset[_])
-            : (Long, Long, Long) = {
-          val qn = s"cert_${name}_$tag"
-          val q = mk(src).writeStream.format("memory").queryName(qn)
-            .option("checkpointLocation", s"$tmp/certs/$name/$tag/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          val stateRows = q.recentProgress
-            .flatMap(_.stateOperators.map(_.numRowsTotal)).maxOption.getOrElse(0L)
-          val stateBytes = q.recentProgress
-            .flatMap(_.stateOperators.map(_.memoryUsedBytes)).maxOption.getOrElse(0L)
-          val out = spark.table(qn)
-          // per-row hashes fold mod a prime: a raw xxhash64 sum
-          // overflows ANSI long arithmetic, and the fold must stay
-          // order-free (sum) for a replay-order-insensitive compare
-          val h = out
-            .select(pmod(xxhash64(
-              out.columns.map(c => col(c).cast("string")): _*),
-              lit(1000000007L)).as("h"))
-            .agg(fsum(col("h"))).head()
-          val hash = if (h.isNullAt(0)) 0L else h.getLong(0)
-          spark.catalog.dropTempView(qn)
-          (hash, stateRows, stateBytes)
-        }
-        def cert(name: String, rocks: Boolean = false)(
-            mk: org.apache.spark.sql.Dataset[Ingest.Event] => org.apache.spark.sql.Dataset[_]): String = {
-          // transformWithState needs RocksDB (multi-column-family state);
-          // everything else certs under the HDFS-backed provider, whose
-          // memoryUsedBytes is a deterministic in-memory measure.
-          // RocksDB's memoryUsedBytes reflects memtable/SST layout whose
-          // timing varies between otherwise-identical replays, so the
-          // rocks-backed cert declares bytes incomparable instead of
-          // risking a false red indistinguishable from real divergence
-          // (review r14)
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-            if (rocks) RocksProvider else HdfsProvider)
-          val (ha, ra, ba) = certRun(name, "a")(mk)
-          val (hb, rb, bb) = certRun(name, "b")(mk)
-          val bytesJson =
-            if (rocks) s""""state_bytes_comparable":false,"state_bytes":$ba"""
-            else s""""state_bytes_match":${ba == bb},"state_bytes":$ba"""
-          s""""$name":{"output_match":${ha == hb},"state_rows_match":${ra == rb},""" +
-            s"""$bytesJson,"state_rows":$ra,"output_hash":$ha}"""
-        }
-        // restore the session provider in a finally: a throwing certRun
-        // would otherwise leave the HDFS-backed provider set for any
-        // streaming work appended after this section (advice r14)
-        val six =
-          try Seq(
-            cert("pct_alerts")(ev => Ingest.statefulPctAlerts(ev)),
-            cert("running_counts_tws", rocks = true)(ev =>
-              Ingest.runningCountsTws(ev, initial)),
-            cert("dedup_daily")(ev => Ingest.dedupDaily(ev.toDF())),
-            cert("welford_zscore")(ev => Ingest.streamingZscoreAnomalies(ev)),
-            cert("psi_drift")(ev => Ingest.psiStream(ev, lo = 0.0, hi = 560.0)),
-            cert("cusum")(ev => Ingest.cusumStream(ev, baselineMean = 49.87, h = 500.0)))
-          finally spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", RocksProvider)
-        // provenance pointer, not a measurement: kill-and-resume
-        // (restart-from-checkpoint) coverage for all six stateful
-        // processors lives in StreamingSpec (VERDICT r15 ask #6); the
-        // certs above verify replay determinism only
-        (six :+ """"restart_specs":"StreamingSpec kill-and-resume x6: pct_alerts, running_counts_tws, dedup_daily, welford_zscore, psi_drift, cusum"""")
-          .mkString("{", ",", "}")
-      }
-      // Quarantine dead-letter cert (VERDICT r18 ask #4): inject a known
-      // poison census into a staged source — 64 contract-clean rows from
-      // the SF events table + 7 rows each missing exactly one required
-      // field — and run the REAL startQuarantineSink (parquet dead-letter,
-      // batch_id partitions) plus the typed main path over it. The cert
-      // is a row-conservation proof: quarantined == injected poison,
-      // typed == injected good, and a second replay from a fresh
-      // checkpoint writes the identical dead-letter set (order-free
-      // reason+key hash).
-      val quarantineJson = {
-        val qsrc = tmp.resolve("quarantine_src")
-        val good = batch
-          .select("event_id", "ts", "user_id", "event_type", "value").limit(64)
-        val poison = spark.range(7).selectExpr(
-          "IF(id % 4 = 0, CAST(NULL AS LONG), 1000000 + id) AS event_id",
-          "IF(id % 4 = 1, CAST(NULL AS LONG), 1700000000000000000 + id) AS ts",
-          "IF(id % 4 = 2, CAST(NULL AS LONG), 9000 + id) AS user_id",
-          "'poison' AS event_type",
-          "IF(id % 4 = 3, CAST(NULL AS DOUBLE), 1.0) AS value")
-        good.unionByName(poison).coalesce(1).write.parquet(qsrc.toString)
-        val qschema = spark.read.parquet(qsrc.toString).schema
-        def qstream = spark.readStream.schema(qschema).parquet(qsrc.toString)
-        def deadLetterRun(tag: String): (Long, Long) = {
-          val dlq = s"$tmp/quarantine_out/$tag"
-          val q = Ingest.startQuarantineSink(qstream, dlq,
-            trigger = Trigger.AvailableNow(), checkpoint = s"$dlq-ckpt")
-          q.awaitTermination()
-          val written = spark.read.parquet(dlq)
-          import org.apache.spark.sql.functions.{col, lit, pmod, sum => fsum, xxhash64}
-          val h = written.select(pmod(xxhash64(
-              written.columns.filter(_ != "batch_id")
-                .map(c => col(c).cast("string")): _*),
-              lit(1000000007L)).as("h"))
-            .agg(fsum(col("h"))).head()
-          (written.count(), if (h.isNullAt(0)) 0L else h.getLong(0))
-        }
-        val (nQuarA, hashA) = deadLetterRun("a")
-        val (nQuarB, hashB) = deadLetterRun("b")
-        val typedQ = Ingest.typedEvents(qstream).writeStream.format("memory")
-          .queryName("cert_quarantine_typed")
-          .option("checkpointLocation", s"$tmp/quarantine_out/typed-ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        typedQ.awaitTermination()
-        val nTyped = spark.table("cert_quarantine_typed").count()
-        spark.catalog.dropTempView("cert_quarantine_typed")
-        s""""quarantine":{"poison_injected":7,"good_injected":64,""" +
-          s""""quarantined":$nQuarA,"typed":$nTyped,""" +
-          s""""poison_match":${nQuarA == 7L && nTyped == 64L},""" +
-          s""""replay_match":${nQuarA == nQuarB && hashA == hashB},""" +
-          s""""deadletter_hash":$hashA}"""
-      }
-      s"{$pct,$tws,$quarantineJson,\"certs\":$certsJson}"
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] streaming replay failed: ${e.getMessage}")
-      // scrub EVERY JSON-illegal char (quotes, backslashes, all control
-      // chars — Spark messages carry tabs and \r too), or the embedded
-      // error re-breaks all three artifacts
-      s"""{"err":"${Option(e.getMessage).getOrElse(e.getClass.getName)
-        .replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200)}"}"""
-    } finally {
-      // drop the symlink dir and RocksDB checkpoint trees on success AND
-      // failure (repeated reps=3 runs would otherwise accumulate /tmp
-      // state — and a failed replay leaks the most, mid-build checkpoints)
-      if (streamTmp != null)
-        try IoUtil.deleteRecursively(streamTmp) catch { case _: Throwable => () }
-    }
-
-    // Streaming state at PRODUCTION cardinality (VERDICT r19 ask #1):
-    // the certs above replay the raw SF events (1.5k keys) — this block
-    // drives ~1M distinct keys (key-split amplification of the same
-    // table) through welford / daily-dedup / pct-alert state, with an
-    // eviction proof (2-day TTL over a month of event time must shrink
-    // state) and a kill-and-resume at full state. The full 5M-key study
-    // incl. HDFS/RocksDB A/B lives in streaming_scale.json
-    // (graft.StreamScale); this compact leg is the per-round regression
-    // surface. Timed queries are already done — this wall time never
-    // touches the headline total.
-    val streamScaleJson = try {
-      StreamScale.study(spark, sfDir,
-        targetKeys = sys.env.getOrElse("SPARK_GRAFT_STREAM_KEYS", "1000000").toLong,
-        evPerKey = 4, nFiles = 6, compact = true)
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] streaming scale leg failed: ${e.getMessage}")
-      s"""{"err":"${Option(e.getMessage).getOrElse(e.getClass.getName)
-        .replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200)}"}"""
-    }
+    // state at bench scale (VERDICT r4 item 6): the raw SF events
+    // replayed through the stateful shapes, plus the replay-determinism
+    // and quarantine certificates
+    val streamingJson = leg("streaming replay")(StreamScale.replay(spark, sfDir))
+    // state at PRODUCTION cardinality (VERDICT r19 ask #1): ~1M distinct
+    // keys (key-split amplification of the same table) through welford /
+    // daily-dedup / pct-alert state, with an eviction proof (2-day TTL
+    // over a month of event time must shrink state) and a kill-and-resume
+    // at full state. The full 5M-key study incl. HDFS/RocksDB A/B lives in
+    // streaming_scale.json (graft.StreamScale main); this compact leg is
+    // the per-round regression surface.
+    val streamScaleJson = leg("streaming scale leg")(StreamScale.study(spark, sfDir,
+      targetKeys = sys.env.getOrElse("SPARK_GRAFT_STREAM_KEYS", "1000000").toLong,
+      evPerKey = 4, nFiles = 6, compact = true))
 
     // native-vs-composed as-of A/B, pinned side by side from the SAME
     // measured reps as the per-query stats (re-running them here would
@@ -600,20 +370,16 @@ object Bench {
     val ab = {
       val n = results("q_asof_join")
       val c = results("q_asof_join_composed")
-      s"""{"native_sec":${n.warm},"native_shuffle_bytes":${n.bytesPerRep},""" +
-        s""""composed_sec":${c.warm},"composed_shuffle_bytes":${c.bytesPerRep}}"""
+      Json.obj(Seq("native_sec" -> n.warm, "native_shuffle_bytes" -> n.bytesPerRep,
+        "composed_sec" -> c.warm, "composed_shuffle_bytes" -> c.bytesPerRep))
     }
 
-    def jmap[A](m: Iterable[(String, A)]): String =
-      m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    // fixed-point, Locale-free rendering: Double.toString on a rounded
-    // value can still emit 17 significant digits for some fractions
-    def r3(v: Double): String = java.lang.String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qs = jmap(results.map { case (k, s) => k -> s.warm })
-    val cold = jmap(results.map { case (k, s) => k -> s.cold })
-    val bytes = jmap(results.map { case (k, s) => k -> s.bytesPerRep })
-    val repArrays = jmap(results.map { case (k, s) =>
-      k -> s.times.map(r3).mkString("[", ",", "]") })
+    // fixed-point Json.num(_, 3) rendering below: Double.toString on a
+    // rounded value can still emit 17 significant digits for some fractions
+    val qs = Json.obj(results.map { case (k, s) => k -> s.warm })
+    val cold = Json.obj(results.map { case (k, s) => k -> s.cold })
+    val bytes = Json.obj(results.map { case (k, s) => k -> s.bytesPerRep })
+    val repArrays = Json.obj(results.map { case (k, s) => k -> Json.arr(s.times.map(Json.num(_, 3))) })
     val okWarm = results.values.map(_.warm).filter(_ >= 0).toSeq.sorted
     val total = okWarm.sum
     val medianQ = if (okWarm.isEmpty) -1.0 else okWarm(okWarm.size / 2)
@@ -629,7 +395,7 @@ object Bench {
     // monotone-growth summary (VERDICT r6 item 3): strictly increasing
     // reps with last/first >= 1.5 and a non-trivial last rep — the
     // median of such a query is NOT its steady-state cost; re-measure in
-    // isolation (graft.TimeOne) before reading it as a regression
+    // isolation (graft.QueryProfile) before reading it as a regression
     val growthFlagged = results.toSeq
       .filter(_._2.monotoneGrowth)
       .sortBy(-_._2.growth)
@@ -639,15 +405,15 @@ object Bench {
     // the two stdout lines below carry the measurements regardless
     val fullJson = s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""warmup_sec":$warmupSec,""" +
-      s""""warmup_breakdown":${jmap(warmupBreakdown.map { case (k, s) => k -> r3(s) })},""" +
+      s""""warmup_breakdown":${Json.obj(warmupBreakdown.map { case (k, s) => k -> Json.num(s, 3) })},""" +
       s""""asof_ab":$ab,"streaming":$streamingJson,""" +
       s""""streaming_scale":$streamScaleJson,""" +
-      s""""reps":$reps,"sf":"$sfDir",""" +
+      s""""reps":$reps,"sf":${Json.str(sfDir)},""" +
       s""""load_start":$loadStart,"load_end":$loadEnd,"load_gate":$loadGateJson,""" +
       s""""dispersion_flagged":${
-        jmap(dispersionFlagged.map { case (k, s) => k -> r3(s.dispersion) })},""" +
+        Json.obj(dispersionFlagged.map { case (k, s) => k -> Json.num(s.dispersion, 3) })},""" +
       s""""growth_flagged":${
-        jmap(growthFlagged.map { case (k, s) => k -> r3(s.growth) })},""" +
+        Json.obj(growthFlagged.map { case (k, s) => k -> Json.num(s.growth, 3) })},""" +
       s""""reps_sec":$repArrays,""" +
       s""""cold":$cold,"shuffle_bytes":$bytes,"queries":$qs}"""
     val outFile = new java.io.File(
@@ -668,18 +434,18 @@ object Bench {
     // failed queries (warm = -1) are not "slowest", they are absent here
     // and visible in the full record's -1 sentinels
     val slowest = results.toSeq.filter(_._2.warm >= 0).sortBy(-_._2.warm).take(12)
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
-      s""""queries":${jmap(slowest.map { case (k, s) => k -> r3(s.warm) })},""" +
+    println(s"""{"metric":"total","value":${Json.num(total, 3)},"unit":"sec",""" +
+      s""""queries":${Json.obj(slowest.map { case (k, s) => k -> Json.num(s.warm, 3) })},""" +
       s""""queries_truncated":${results.size > slowest.size},"n_queries":${results.size},""" +
-      s""""median_query_sec":${r3(medianQ)},"warmup_sec":${r3(warmupSec)},""" +
+      s""""median_query_sec":${Json.num(medianQ, 3)},"warmup_sec":${Json.num(warmupSec, 3)},""" +
       s""""asof_ab":$ab,"streaming":$streamingJson,""" +
       s""""streaming_scale":$streamScaleJson,""" +
       s""""dispersion_flagged":${
-        jmap(dispersionFlagged.take(8).map { case (k, s) => k -> r3(s.dispersion) })},""" +
+        Json.obj(dispersionFlagged.take(8).map { case (k, s) => k -> Json.num(s.dispersion, 3) })},""" +
       s""""growth_flagged":${
-        jmap(growthFlagged.take(8).map { case (k, s) => k -> r3(s.growth) })},""" +
+        Json.obj(growthFlagged.take(8).map { case (k, s) => k -> Json.num(s.growth, 3) })},""" +
       s""""load_start":$loadStart,"load_end":$loadEnd,"load_gate":$loadGateJson,""" +
-      s""""reps":$reps,"sf":"$sfDir","full":"$outPath"}""")
+      s""""reps":$reps,"sf":${Json.str(sfDir)},"full":${Json.str(outPath)}}""")
     spark.stop()
   }
 }

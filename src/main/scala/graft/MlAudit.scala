@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.functions.vector_to_array
 
@@ -23,14 +22,7 @@ object MlAudit {
     require(args.length >= 2, "usage: MlAudit <sfDir> <outDir>")
     val sfDir = args(0)
     val outDir = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     // the exact MlQueries construction: maxIter = 10, temporalSplit(7)

@@ -34,12 +34,7 @@ object RecallProbe {
       case other                    => (None, other)
     }
     val dirs = if (dirArgs.nonEmpty) dirArgs else Seq("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
 
     // no non-local returns (the --json early exit used to `return` out of
     // a foreach closure — NonLocalReturnControl, deprecated in 2.13 — and
@@ -103,11 +98,7 @@ object RecallProbe {
       val floor = perDir.head._2.find(_.query == qn).get.floor
       val sfs = perDir.map { case (sf, rows) =>
         val r = rows.find(_.query == qn).get
-        // Locale.ROOT: the default-locale f interpolator would emit a
-        // comma decimal separator (invalid JSON) under e.g. de_DE
-        val rec = String.format(java.util.Locale.ROOT, "%.4f",
-          Double.box(r.recall))
-        s""""$sf":{"recall":$rec,"corpus_rows":${r.corpusRows},""" +
+        s""""$sf":{"recall":${Json.num(r.recall, 4)},"corpus_rows":${r.corpusRows},""" +
           s""""query_rows":${r.queryRows}}"""
       }.mkString(",")
       s""""$qn":{"floor":$floor,"k":5,"per_sf":{$sfs}}"""

@@ -1,10 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.GraftListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measured scale curves for the dedup/ANN families:
@@ -51,7 +47,7 @@ object ScaleCurve {
   private case class Point(name: String, factor: Int, rows: Long,
                            sec: Double, shuffleBytes: Long,
                            gcSec: Double, cpuSec: Double, runSec: Double,
-                           memSpill: Long, diskSpill: Long)
+                           spillBytes: Long)
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
@@ -67,73 +63,38 @@ object ScaleCurve {
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
     val blockedFactor =
       sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR_BLOCKED", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // r16 fix for the minhash_lsh_pairs wall exponent (1.16 at ×10,
-      // rows exactly linear): the stress fixture's signature/pair
-      // exchanges are byte-TINY (~150 KB carries 5k signatures; 2.7 MB
-      // carries 3M long pairs) while every row above them is CPU-dense
-      // (the fused band-join + jaccard-verify WholeStageCodegen), so
-      // AQE's byte-based coalescing collapsed the whole verify pipeline
-      // to ONE partition — measured wall ≈ executor-run ≈ CPU at both
-      // 1× and ×10 (72.8 / 1049.9 s; zero spill, zero GC growth), a
-      // 32-core box running one thread, with the coalesce also ELIDING
-      // the candidate distinct's exchange (1 partition satisfies any
-      // clustering), lengthening the fused stage further. No byte floor
-      // can express "partition by CPU density" (a 64 KiB
-      // minPartitionSize was measured useless: ~150 KB only spreads
-      // 2-3 ways), so the harness disables coalescing outright —
-      // plan shape is UNCHANGED (same broadcast probes, no join flips,
-      // no extra CPU; contrast the reverted operator-side repartition,
-      // which flipped to shuffle joins at a measured ~10× total-CPU
-      // constant). Production corpora never hit this regime: real
-      // volumes put GBs through these exchanges and byte-based
-      // coalescing then sizes them correctly.
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // r16 fix for the minhash_lsh_pairs wall exponent (1.16 at ×10,
+    // rows exactly linear): the stress fixture's signature/pair
+    // exchanges are byte-TINY (~150 KB carries 5k signatures; 2.7 MB
+    // carries 3M long pairs) while every row above them is CPU-dense
+    // (the fused band-join + jaccard-verify WholeStageCodegen), so
+    // AQE's byte-based coalescing collapsed the whole verify pipeline
+    // to ONE partition — measured wall ≈ executor-run ≈ CPU at both
+    // 1× and ×10 (72.8 / 1049.9 s; zero spill, zero GC growth), a
+    // 32-core box running one thread, with the coalesce also ELIDING
+    // the candidate distinct's exchange (1 partition satisfies any
+    // clustering), lengthening the fused stage further. No byte floor
+    // can express "partition by CPU density" (a 64 KiB
+    // minPartitionSize was measured useless: ~150 KB only spreads
+    // 2-3 ways), so the harness disables coalescing outright —
+    // plan shape is UNCHANGED (same broadcast probes, no join flips,
+    // no extra CPU; contrast the reverted operator-side repartition,
+    // which flipped to shuffle joins at a measured ~10× total-CPU
+    // constant). Production corpora never hit this regime: real
+    // volumes put GBs through these exchanges and byte-based
+    // coalescing then sizes them correctly.
+    val spark = GraftSession.local("spark.sql.adaptive.coalescePartitions.enabled" -> "false")
 
     // shuffle bytes = candidate-volume evidence; GC/CPU/spill decompose
     // a superlinear WALL leg into its mechanism (r15 verdict ask #2:
     // minhash_lsh_pairs read exp_time 1.17 with rows exactly linear —
     // the wall excess had no attributed cause until these counters)
-    val shuffleBytes = new AtomicLong
-    val gcMs = new AtomicLong
-    val cpuNs = new AtomicLong
-    val runMs = new AtomicLong
-    val memSpill = new AtomicLong
-    val diskSpill = new AtomicLong
+    val trace = new StageTrace(spark.sparkContext)
     // SPARK_GRAFT_SCALE_STAGES=1 additionally prints one line per stage
     // (task count + run/cpu/gc + spill + shuffle) — names WHICH stage a
     // serialized or spilling leg spends its wall in
     val stageDump = sys.env.get("SPARK_GRAFT_SCALE_STAGES").contains("1")
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(stage: SparkListenerStageCompleted): Unit = {
-        val m = stage.stageInfo.taskMetrics
-        if (m != null) {
-          shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          gcMs.addAndGet(m.jvmGCTime)
-          cpuNs.addAndGet(m.executorCpuTime)
-          runMs.addAndGet(m.executorRunTime)
-          memSpill.addAndGet(m.memoryBytesSpilled)
-          diskSpill.addAndGet(m.diskBytesSpilled)
-          if (stageDump) {
-            val si = stage.stageInfo
-            println(f"[stage] id=${si.stageId}%4d tasks=${si.numTasks}%3d " +
-              f"run=${m.executorRunTime / 1e3}%8.1fs cpu=${m.executorCpuTime / 1e9}%8.1fs " +
-              f"gc=${m.jvmGCTime / 1e3}%6.1fs spillMB=${(m.memoryBytesSpilled + m.diskBytesSpilled) / 1e6}%8.1f " +
-              f"shufR=${m.shuffleReadMetrics.totalBytesRead / 1e6}%8.2fMB shufW=${m.shuffleWriteMetrics.bytesWritten / 1e6}%8.2fMB " +
-              s"name=${si.name.takeWhile(_ != '\n').take(60)}")
-          }
-        }
-      }
-    })
 
     val tmp = java.nio.file.Files.createTempDirectory("graft-scalecurve")
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
@@ -385,20 +346,18 @@ object ScaleCurve {
       } else Nil)
     }
 
-    case class Timing(rows: Long, sec: Double, shuffle: Long, gcSec: Double,
-                      cpuSec: Double, runSec: Double, mem: Long, disk: Long)
-    def timed(mk: () => DataFrame): Timing = {
-      GraftListenerBridge.flushListeners(spark.sparkContext)
-      val b = (shuffleBytes.get(), gcMs.get(), cpuNs.get(), runMs.get(),
-        memSpill.get(), diskSpill.get())
-      val t0 = System.nanoTime()
-      val rows = mk().queryExecution.toRdd.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      GraftListenerBridge.flushListeners(spark.sparkContext)
-      Timing(rows, sec, shuffleBytes.get() - b._1,
-        (gcMs.get() - b._2) / 1e3, (cpuNs.get() - b._3) / 1e9,
-        (runMs.get() - b._4) / 1e3,
-        memSpill.get() - b._5, diskSpill.get() - b._6)
+    def timed(name: String, f: Int, mk: () => DataFrame): Point = {
+      val (rows, sec, _, stages) = trace.run(mk().queryExecution.toRdd.count())
+      if (stageDump) stages.foreach { st =>
+        println(f"[stage] id=${st.id}%4d tasks=${st.tasks}%3d " +
+          f"run=${st.runMs / 1e3}%8.1fs cpu=${st.cpuNs / 1e9}%8.1fs " +
+          f"gc=${st.gcMs / 1e3}%6.1fs spillMB=${st.spillBytes / 1e6}%8.1f " +
+          f"shufR=${st.readBytes / 1e6}%8.2fMB shufW=${st.writeBytes / 1e6}%8.2fMB " +
+          s"name=${st.name}")
+      }
+      Point(name, f, rows, sec, stages.map(_.writeBytes).sum,
+        stages.map(_.gcMs).sum / 1e3, stages.map(_.cpuNs).sum / 1e9,
+        stages.map(_.runMs).sum / 1e3, stages.map(_.spillBytes).sum)
     }
 
     // the full-run equality check keeps the branch-gate name sets from
@@ -413,14 +372,12 @@ object ScaleCurve {
 
     val points = selected.map { case (name, f, mk) =>
       System.gc()
-      val runs = (1 to reps).map(_ => timed(mk))
-      val best = runs.minBy(_.sec) // min-of-reps: stablest for ratios
-      val p = Point(name, f, best.rows, best.sec, best.shuffle,
-        best.gcSec, best.cpuSec, best.runSec, best.mem, best.disk)
+      // min-of-reps: stablest for ratios
+      val p = (1 to reps).map(_ => timed(name, f, mk)).minBy(_.sec)
       println(f"[scalecurve] ${p.name}%-20s f=${p.factor}%2d rows=${p.rows}%9d " +
         f"sec=${p.sec}%7.3f shuffleMB=${p.shuffleBytes / 1e6}%8.2f " +
         f"gc=${p.gcSec}%6.1f cpu=${p.cpuSec}%7.1f run=${p.runSec}%7.1f " +
-        f"spillMB=${(p.memSpill + p.diskSpill) / 1e6}%8.1f")
+        f"spillMB=${p.spillBytes / 1e6}%8.1f")
       p
     }
 
@@ -439,19 +396,16 @@ object ScaleCurve {
             math.log(b.factor.toDouble / a.factor)
         else Double.NaN
       // NaN or ±Infinity (guard tripped: equal factors, zero-row or
-      // 0-sec leg on either side) must render as JSON null — the bare
-      // tokens NaN/-Infinity make the whole artifact unparseable
-      // (advice r14 + r15)
-      def jnum(v: Double): String =
-        if (java.lang.Double.isFinite(v)) f"$v%.2f" else "null"
-      f"""{"name":"$name","f":${b.factor},"sec_1x":${a.sec}%.3f,""" +
-        f""""sec_fx":${b.sec}%.3f,"exp_time":${jnum(expT)},""" +
-        f""""rows_1x":${a.rows},"rows_fx":${b.rows},"exp_rows":${jnum(expRows)},""" +
-        f""""shuffle_1x":${a.shuffleBytes},"shuffle_fx":${b.shuffleBytes},""" +
-        f""""gc_1x":${a.gcSec}%.1f,"gc_fx":${b.gcSec}%.1f,""" +
-        f""""cpu_1x":${a.cpuSec}%.1f,"cpu_fx":${b.cpuSec}%.1f,""" +
-        f""""run_1x":${a.runSec}%.1f,"run_fx":${b.runSec}%.1f,""" +
-        f""""spill_1x":${a.memSpill + a.diskSpill},"spill_fx":${b.memSpill + b.diskSpill}}"""
+      // 0-sec leg on either side) renders as JSON null via Json.num
+      Json.obj(Seq("name" -> Json.str(name), "f" -> b.factor,
+        "sec_1x" -> Json.num(a.sec, 3), "sec_fx" -> Json.num(b.sec, 3),
+        "exp_time" -> Json.num(expT, 2),
+        "rows_1x" -> a.rows, "rows_fx" -> b.rows, "exp_rows" -> Json.num(expRows, 2),
+        "shuffle_1x" -> a.shuffleBytes, "shuffle_fx" -> b.shuffleBytes,
+        "gc_1x" -> Json.num(a.gcSec, 1), "gc_fx" -> Json.num(b.gcSec, 1),
+        "cpu_1x" -> Json.num(a.cpuSec, 1), "cpu_fx" -> Json.num(b.cpuSec, 1),
+        "run_1x" -> Json.num(a.runSec, 1), "run_fx" -> Json.num(b.runSec, 1),
+        "spill_1x" -> a.spillBytes, "spill_fx" -> b.spillBytes))
     }
     val json = summary.mkString("[", ",\n", "]")
     java.nio.file.Files.write(java.nio.file.Paths.get(outJson),

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
 
 import graft.streaming.Ingest
 
@@ -30,9 +30,12 @@ import graft.streaming.Ingest
   * watermark advances monotonically through the month, exactly like a
   * live feed.
   *
+  * Also home of [[replay]], Bench's raw-SF replay with its determinism
+  * and quarantine certificates.
+  *
   * Run: tools/graft-java.sh graft.StreamScale [sfDir] [outJson]
   * Env: STREAMSCALE_KEYS (default 5000000), STREAMSCALE_EV_PER_KEY (4),
-  *      STREAMSCALE_FILES (6), SPARK_GRAFT_CPUS (32).
+  *      STREAMSCALE_FILES (6); core count as in [[GraftSession]].
   */
 object StreamScale {
 
@@ -41,8 +44,28 @@ object StreamScale {
   private val RocksProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  private def r3(v: Double): String =
-    java.lang.String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+  /** Order-free content hash: per-row xxhash64 over every column
+    * stringified, folded mod a prime (a raw xxhash64 sum overflows ANSI
+    * long arithmetic) and summed, so replay order cannot change it;
+    * 0 for an empty frame. */
+  private def orderFreeHash(df: DataFrame): Long = {
+    val h = df.select(pmod(xxhash64(df.columns.map(c => col(c).cast("string")): _*),
+      lit(1000000007L)).as("h")).agg(sum(col("h"))).head()
+    if (h.isNullAt(0)) 0L else h.getLong(0)
+  }
+
+  /** (state rows, state bytes) of one micro-batch, summed over the
+    * query's stateful operators. Every query measured here has exactly
+    * one, so the peak over batches also equals the max over (batch,
+    * operator) pairs. */
+  private def state(p: StreamingQueryProgress): (Long, Long) =
+    (p.stateOperators.map(_.numRowsTotal).sum, p.stateOperators.map(_.memoryUsedBytes).sum)
+
+  /** Peak (state rows, state bytes) over a query's micro-batches. */
+  private def peakState(prog: Seq[StreamingQueryProgress]): (Long, Long) = {
+    val s = prog.map(state)
+    (s.map(_._1).maxOption.getOrElse(0L), s.map(_._2).maxOption.getOrElse(0L))
+  }
 
   /** Stage the amplified event files; returns (nKeys, nRows, srcDir). */
   private def stage(spark: SparkSession, sfDir: String, targetKeys: Long,
@@ -111,22 +134,17 @@ object StreamScale {
     val wall = (System.nanoTime() - t0) / 1e9
     val prog = q.recentProgress.toSeq
     val perBatch = prog.map { p =>
-      val sr = p.stateOperators.map(_.numRowsTotal).sum
-      val sb = p.stateOperators.map(_.memoryUsedBytes).sum
+      val (sr, sb) = state(p)
       s"""{"batch":${p.batchId},"rows":${p.numInputRows},""" +
         s""""state_rows":$sr,"state_bytes":$sb,""" +
         s""""batch_ms":${p.batchDuration}}"""
     }
     val inRows = prog.map(_.numInputRows).sum
-    val peakRows = prog.map(_.stateOperators.map(_.numRowsTotal).sum)
-      .maxOption.getOrElse(0L)
-    val finalRows = prog.lastOption
-      .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L)
-    val peakBytes = prog.map(_.stateOperators.map(_.memoryUsedBytes).sum)
-      .maxOption.getOrElse(0L)
+    val (peakRows, peakBytes) = peakState(prog)
+    val finalRows = prog.lastOption.map(state(_)._1).getOrElse(0L)
     System.err.println(f"[streamscale] $name%-22s ${wall}%.1f s, " +
       f"$inRows rows, peak state $peakRows rows / ${peakBytes / 1e6}%.0f MB")
-    s""""$name":{"wall_sec":${r3(wall)},"rows":$inRows,""" +
+    s""""$name":{"wall_sec":${Json.num(wall, 3)},"rows":$inRows,""" +
       s""""rows_per_sec":${(inRows / wall).round},""" +
       s""""state_rows_peak":$peakRows,"state_rows_final":$finalRows,""" +
       s""""state_bytes_peak":$peakBytes,"provider":"${provider.split('.').last}",""" +
@@ -240,17 +258,11 @@ object StreamScale {
             q.awaitTermination()
             val wall = (System.nanoTime() - t) / 1e9
             val prog = q.recentProgress.toSeq
-            val peak = prog.map(_.stateOperators.map(_.numRowsTotal).sum)
-              .maxOption.getOrElse(0L)
-            (wall, peak, prog.map(_.numInputRows).sum)
+            (wall, peakState(prog)._1, prog.map(_.numInputRows).sum)
           }
           def dirHash(out: String): (Long, Long) = {
             val df = spark.read.parquet(out)
-            val h = df.select(pmod(xxhash64(
-                df.columns.map(c => col(c).cast("string")): _*),
-                lit(1000000007L)).as("h"))
-              .agg(sum(col("h"))).head()
-            (df.count(), if (h.isNullAt(0)) 0L else h.getLong(0))
+            (df.count(), orderFreeHash(df))
           }
           link(files.take(half).toSeq)
           val (w1, state1, rows1) = phase(splitOut, label)
@@ -261,8 +273,8 @@ object StreamScale {
           val ctlOut = s"$tmp/${label}_out_ctl"
           val (_, _, _) = phase(ctlOut, s"${label}_ctl")
           val (nc, hc) = dirHash(ctlOut)
-          s""""$label":{"phase1_sec":${r3(w1)},"phase1_rows":$rows1,""" +
-            s""""state_at_kill":$state1,"phase2_sec":${r3(w2)},""" +
+          s""""$label":{"phase1_sec":${Json.num(w1, 3)},"phase1_rows":$rows1,""" +
+            s""""state_at_kill":$state1,"phase2_sec":${Json.num(w2, 3)},""" +
             s""""phase2_rows":$rows2,"state_after_resume":$state2,""" +
             s""""out_rows_split":$nSplit,"out_rows_uninterrupted":$nc,""" +
             s""""output_match":${nSplit == nc && hSplit == hc}}"""
@@ -277,11 +289,185 @@ object StreamScale {
         legs += resumeLeg("resume_changelog", changelog = true)
 
       s"""{"keys":$nKeys,"rows":$nRows,"files":$nFiles,""" +
-        s""""ev_per_key":$evPerKey,"stage_sec":${r3(stageSec)},""" +
+        s""""ev_per_key":$evPerKey,"stage_sec":${Json.num(stageSec, 3)},""" +
         s""""eviction_proof":${evFinal < evPeak / 2},""" +
         s""""eviction_peak":$evPeak,"eviction_final":$evFinal,""" +
         s""""legs":{${legs.mkString(",")}}}"""
     } finally {
+      try IoUtil.deleteRecursively(tmp) catch { case _: Throwable => () }
+    }
+  }
+
+  /** Streaming state at bench scale (VERDICT r4 item 6): replays the SF
+    * events table through the two stateful shapes — flatMapGroupsWithState
+    * percent-change alerts and the transformWithState batch→stream count
+    * handoff — as real Structured Streaming queries (file source,
+    * AvailableNow, RocksDB state store), recording throughput and state
+    * size; then the six replay-determinism certificates and the
+    * quarantine dead-letter certificate. Returns Bench's `streaming`
+    * object. */
+  def replay(spark: SparkSession, sfDir: String): String = {
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass", RocksProvider)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-streambench")
+    try {
+      val batch = Tables.events(spark, sfDir)
+      // the streaming source must be declared with the RAW on-disk schema
+      // (ts may be timestamp-typed in newer fixture vintages); Tables
+      // .normalizeTs then restores the engine's epoch-nano-long invariant
+      // on the stream, exactly as the batch reader does
+      val rawSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
+      // the SF tables are single parquet FILES and the streaming file
+      // source only accepts directories — stage a zero-copy symlink dir
+      val srcDir = tmp.resolve("events_src")
+      java.nio.file.Files.createDirectory(srcDir)
+      java.nio.file.Files.createSymbolicLink(
+        srcDir.resolve("events.parquet"),
+        java.nio.file.Paths.get(sfDir, "events.parquet"))
+      def src = Ingest.typedEvents(
+        Tables.normalizeTs(spark.readStream.schema(rawSchema)
+          .parquet(srcDir.toString)))
+      // each stateful shape replays TWICE against fresh checkpoints: the
+      // first (cold) number is the end-to-end story (source listing,
+      // RocksDB native init, JIT of the state-processor paths all priced
+      // in — each exercised exactly once per bench JVM, which made the
+      // r7-r9 rows/s swing 30-50% run to run); the second (warm) replay
+      // re-lists and rebuilds state identically on a warmed JVM, so IT
+      // is the round-over-round comparable. Both land in the artifact.
+      def runStream(name: String)(mk: Dataset[Ingest.Event] => Dataset[_]): (String, String) = {
+        def replayOnce(tag: String): (Long, Double, (Long, Long)) = {
+          val t0 = System.nanoTime()
+          val q = mk(src).writeStream.format("noop")
+            .option("checkpointLocation", s"$tmp/$name/$tag/ckpt")
+            .trigger(Trigger.AvailableNow()).start()
+          q.awaitTermination()
+          val sec = (System.nanoTime() - t0) / 1e9
+          (q.recentProgress.map(_.numInputRows).sum, sec, peakState(q.recentProgress.toSeq))
+        }
+        val (inRows, sec, (stateRows, stateBytes)) = replayOnce("cold")
+        val (_, warmSec, _) = replayOnce("warm")
+        name -> Json.obj(Seq("rows" -> inRows, "sec" -> (sec * 1000).round / 1000.0,
+          "rows_per_sec" -> (inRows / sec).round,
+          "warm_sec" -> (warmSec * 1000).round / 1000.0,
+          "warm_rows_per_sec" -> (inRows / warmSec).round,
+          "state_rows" -> stateRows, "state_bytes" -> stateBytes))
+      }
+      val pct = runStream("pct_alerts")(ev => Ingest.statefulPctAlerts(ev))
+      // handoff seed: per-user historical counts, as a cutover would have
+      val initial = batch.groupBy("user_id").agg(count(lit(1)).as("n"))
+      val tws = runStream("running_counts_tws")(ev => Ingest.runningCountsTws(ev, initial))
+
+      // Replay-determinism certificates (VERDICT r13 ask #5): the batch
+      // board is oracled; the streaming processors' equivalent gate is
+      // "the same input replayed from a fresh checkpoint produces the
+      // SAME output and the SAME state" — each processor runs TWICE
+      // over the identical file source, and the cert row compares the
+      // order-free output hash, the state row count, and the state bytes.
+      // The default (HDFS-backed) state provider keeps state bytes a
+      // deterministic in-memory measure; RocksDB's memoryUsedBytes
+      // reflects SST layout and is restored after.
+      def certRun(name: String, tag: String)(
+          mk: Dataset[Ingest.Event] => Dataset[_]): (Long, Long, Long) = {
+        val qn = s"cert_${name}_$tag"
+        val q = mk(src).writeStream.format("memory").queryName(qn)
+          .option("checkpointLocation", s"$tmp/certs/$name/$tag/ckpt")
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+        val (stateRows, stateBytes) = peakState(q.recentProgress.toSeq)
+        val hash = orderFreeHash(spark.table(qn))
+        spark.catalog.dropTempView(qn)
+        (hash, stateRows, stateBytes)
+      }
+      def cert(name: String, rocks: Boolean = false)(
+          mk: Dataset[Ingest.Event] => Dataset[_]): (String, String) = {
+        // transformWithState needs RocksDB (multi-column-family state);
+        // everything else certs under the HDFS-backed provider, whose
+        // memoryUsedBytes is a deterministic in-memory measure.
+        // RocksDB's memoryUsedBytes reflects memtable/SST layout whose
+        // timing varies between otherwise-identical replays, so the
+        // rocks-backed cert declares bytes incomparable instead of
+        // risking a false red indistinguishable from real divergence
+        // (review r14)
+        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+          if (rocks) RocksProvider else HdfsProvider)
+        val (ha, ra, ba) = certRun(name, "a")(mk)
+        val (hb, rb, bb) = certRun(name, "b")(mk)
+        val bytes =
+          if (rocks) Seq("state_bytes_comparable" -> false, "state_bytes" -> ba)
+          else Seq("state_bytes_match" -> (ba == bb), "state_bytes" -> ba)
+        name -> Json.obj(Seq("output_match" -> (ha == hb), "state_rows_match" -> (ra == rb)) ++
+          bytes ++ Seq("state_rows" -> ra, "output_hash" -> ha))
+      }
+      // restore the session provider in a finally: a throwing certRun
+      // would otherwise leave the HDFS-backed provider set for any
+      // streaming work appended after this section (advice r14)
+      val six =
+        try Seq(
+          cert("pct_alerts")(ev => Ingest.statefulPctAlerts(ev)),
+          cert("running_counts_tws", rocks = true)(ev =>
+            Ingest.runningCountsTws(ev, initial)),
+          cert("dedup_daily")(ev => Ingest.dedupDaily(ev.toDF())),
+          cert("welford_zscore")(ev => Ingest.streamingZscoreAnomalies(ev)),
+          cert("psi_drift")(ev => Ingest.psiStream(ev, lo = 0.0, hi = 560.0)),
+          cert("cusum")(ev => Ingest.cusumStream(ev, baselineMean = 49.87, h = 500.0)))
+        finally spark.conf.set(
+          "spark.sql.streaming.stateStore.providerClass", RocksProvider)
+      // provenance pointer, not a measurement: kill-and-resume
+      // (restart-from-checkpoint) coverage for all six stateful
+      // processors lives in StreamingSpec (VERDICT r15 ask #6); the
+      // certs above verify replay determinism only
+      val certs = Json.obj(six :+ ("restart_specs" -> Json.str("StreamingSpec kill-and-resume x6: " +
+        "pct_alerts, running_counts_tws, dedup_daily, welford_zscore, psi_drift, cusum")))
+
+      // Quarantine dead-letter cert (VERDICT r18 ask #4): inject a known
+      // poison census into a staged source — 64 contract-clean rows from
+      // the SF events table + 7 rows each missing exactly one required
+      // field — and run the REAL startQuarantineSink (parquet dead-letter,
+      // batch_id partitions) plus the typed main path over it. The cert
+      // is a row-conservation proof: quarantined == injected poison,
+      // typed == injected good, and a second replay from a fresh
+      // checkpoint writes the identical dead-letter set (order-free
+      // reason+key hash).
+      val quarantine = {
+        val qsrc = tmp.resolve("quarantine_src")
+        val good = batch
+          .select("event_id", "ts", "user_id", "event_type", "value").limit(64)
+        val poison = spark.range(7).selectExpr(
+          "IF(id % 4 = 0, CAST(NULL AS LONG), 1000000 + id) AS event_id",
+          "IF(id % 4 = 1, CAST(NULL AS LONG), 1700000000000000000 + id) AS ts",
+          "IF(id % 4 = 2, CAST(NULL AS LONG), 9000 + id) AS user_id",
+          "'poison' AS event_type",
+          "IF(id % 4 = 3, CAST(NULL AS DOUBLE), 1.0) AS value")
+        good.unionByName(poison).coalesce(1).write.parquet(qsrc.toString)
+        val qschema = spark.read.parquet(qsrc.toString).schema
+        def qstream = spark.readStream.schema(qschema).parquet(qsrc.toString)
+        def deadLetterRun(tag: String): (Long, Long) = {
+          val dlq = s"$tmp/quarantine_out/$tag"
+          val q = Ingest.startQuarantineSink(qstream, dlq,
+            trigger = Trigger.AvailableNow(), checkpoint = s"$dlq-ckpt")
+          q.awaitTermination()
+          val written = spark.read.parquet(dlq)
+          (written.count(), orderFreeHash(written.drop("batch_id")))
+        }
+        val (nQuarA, hashA) = deadLetterRun("a")
+        val (nQuarB, hashB) = deadLetterRun("b")
+        val typedQ = Ingest.typedEvents(qstream).writeStream.format("memory")
+          .queryName("cert_quarantine_typed")
+          .option("checkpointLocation", s"$tmp/quarantine_out/typed-ckpt")
+          .trigger(Trigger.AvailableNow()).start()
+        typedQ.awaitTermination()
+        val nTyped = spark.table("cert_quarantine_typed").count()
+        spark.catalog.dropTempView("cert_quarantine_typed")
+        Json.obj(Seq("poison_injected" -> 7, "good_injected" -> 64,
+          "quarantined" -> nQuarA, "typed" -> nTyped,
+          "poison_match" -> (nQuarA == 7L && nTyped == 64L),
+          "replay_match" -> (nQuarA == nQuarB && hashA == hashB),
+          "deadletter_hash" -> hashA))
+      }
+      Json.obj(Seq(pct, tws, "quarantine" -> quarantine, "certs" -> certs))
+    } finally {
+      // drop the symlink dir and checkpoint trees on success AND failure
+      // (repeated reps=3 runs would otherwise accumulate /tmp state — and
+      // a failed replay leaks the most, mid-build checkpoints)
       try IoUtil.deleteRecursively(tmp) catch { case _: Throwable => () }
     }
   }
@@ -292,15 +478,7 @@ object StreamScale {
     val targetKeys = sys.env.getOrElse("STREAMSCALE_KEYS", "5000000").toLong
     val evPerKey = sys.env.getOrElse("STREAMSCALE_EV_PER_KEY", "4").toInt
     val nFiles = sys.env.getOrElse("STREAMSCALE_FILES", "6").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val json = study(spark, sfDir, targetKeys, evPerKey, nFiles, compact = false)
     println(json)
     java.nio.file.Files.write(java.nio.file.Paths.get(outJson),

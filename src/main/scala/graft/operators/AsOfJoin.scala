@@ -105,6 +105,6 @@ object AsOfJoin {
     val node = AsOfJoinNode(lPlan, rPlan,
       attr(lPlan, key), attr(lPlan, ts), attr(rPlan, key), attr(rPlan, ts), rv,
       AttributeReference(outCol, rv.dataType, nullable = true)())
-    org.apache.spark.sql.GraftPlanBridge.ofRows(spark, node)
+    org.apache.spark.sql.GraftBridge.ofRows(spark, node)
   }
 }

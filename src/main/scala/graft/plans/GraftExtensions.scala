@@ -99,7 +99,7 @@ case class UnresolvedGraftOp2(
 }
 
 /** Resolves [[UnresolvedGraftOp]] by wrapping the resolved child in a
-  * DataFrame (GraftPlanBridge) and applying the corresponding operator
+  * DataFrame (GraftBridge.ofRows) and applying the corresponding operator
   * from graft.operators — the composed plan is analyzed and spliced
   * back; the surrounding fixpoint then resolves any parent references
   * against its output. */
@@ -112,11 +112,11 @@ case class ResolveGraftOp(spark: org.apache.spark.sql.SparkSession)
   override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsUp {
     case u: UnresolvedGraftOp if u.childrenResolved =>
       splice(u.op, u.args,
-        Seq(org.apache.spark.sql.GraftPlanBridge.ofRows(spark, u.child)))
+        Seq(org.apache.spark.sql.GraftBridge.ofRows(spark, u.child)))
     case u: UnresolvedGraftOp2 if u.childrenResolved =>
       splice(u.op, u.args,
-        Seq(org.apache.spark.sql.GraftPlanBridge.ofRows(spark, u.left),
-          org.apache.spark.sql.GraftPlanBridge.ofRows(spark, u.right)))
+        Seq(org.apache.spark.sql.GraftBridge.ofRows(spark, u.left),
+          org.apache.spark.sql.GraftBridge.ofRows(spark, u.right)))
   }
 
   /** Shared splice path for the one- and two-table placeholders: build

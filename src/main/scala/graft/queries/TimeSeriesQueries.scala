@@ -559,9 +559,10 @@ object TimeSeriesQueries {
     // racing the first InMemoryRelation build serialize on block locks,
     // and the columnar encode/decode costs more than the raw
     // checkpoint-block reads on every consumer. The sibling swaps
-    // (bigram pairs, tfidf tf) measured neutral and kept persist; this
-    // frame is the smallest of the three, so the truncated-lineage
-    // exposure is also the smallest.
+    // (bigram pairs, tfidf tf) were measured and reverted too: both
+    // keep localCheckpoint (TextStats bigramLogprobOf and the tfidf tf
+    // table); this frame is the smallest of the three, so its
+    // truncated-lineage exposure is also the smallest.
     val bask = df
       .select(col(userCol).as("user_id"), day.as("day"),
         col(typeCol).as("event_type"))

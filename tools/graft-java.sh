@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# Run a graft main (graft.Verify / graft.Bench / graft.TimeOne ...) under a
+# Run a graft main (graft.Verify / graft.Bench / graft.QueryProfile ...) under a
 # bare JVM with the SAME --add-opens set Spark's launcher injects.
 #
 # Why this exists: `java -cp app.jar:/opt/spark/jars/* graft.X` skips
