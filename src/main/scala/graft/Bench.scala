@@ -22,13 +22,17 @@ import org.apache.spark.sql.GraftBridge
   *  3. stdout FINAL line: a compact summary guaranteed to fit the tail
   *     window whole — `{"metric":"total","value":N,"unit":"sec",
   *     "queries":{12 slowest},"queries_truncated":true,"n_queries":N,
-  *     "median_query_sec":N,"warmup_sec":N,"asof_ab":{...},
+  *     "median_query_sec":N,"warmup_sec":N,"failed":[...],"n_failed":N,
+  *     "asof_ab":{...},
   *     "streaming":{...},"dispersion_flagged":{...},"growth_flagged":{...},
   *     "load_start":{...},
   *     "load_end":{...},"reps":N,"sf":...,"full":"/abs/bench_full.json"}`.
-  *     `value` is the true total over ALL queries; the embedded map holds
-  *     only the slowest 12 (flagged by queries_truncated) so the line
-  *     stays ~8x under the window.
+  *     `value` totals every query that ran; the embedded map holds
+  *     only the slowest 12 (flagged by queries_truncated) and `failed`
+  *     the first 12 failure names (all of them in `bench_full.json`),
+  *     so the line stays under the window. Any failure — a query rep, a
+  *     warmer or a streaming leg that threw — is counted in `n_failed`
+  *     and makes the main exit 1.
   *
   * Noise forensics (VERDICT r5 item 1 — the r5 driver artifact was
   * load-inflated 2-5x and unprovably so): `reps_sec` carries every
@@ -214,6 +218,10 @@ object Bench {
       "text" -> Seq("q_unigram_logprob", "q_json_profile", "q_repetition"),
       // JIT/codegen + window path + PNG fixture synthesis
       "core" -> Seq("q1_pricing_summary", "q_lag_lead", "q_multimodal_decode"))
+    // every failure by name — "warmer:<name>", "query:<name>" (any rep
+    // threw), "leg:<name>" — so a crash is counted, never just a faster
+    // total; any entry makes the main exit nonzero
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val tWarm0 = System.nanoTime()
     val warmupBreakdown = {
       import scala.concurrent.{Await, ExecutionContext, Future}
@@ -223,7 +231,10 @@ object Bench {
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
       def timed(name: String)(f: => Unit): (String, Double) = {
         val t0 = System.nanoTime()
-        try f catch { case _: Throwable => () }
+        try f catch { case e: Throwable =>
+          failures.add(s"warmer:$name")
+          System.err.println(s"[bench] warmer $name failed: ${e.getMessage}")
+        }
         val sec = (System.nanoTime() - t0) / 1e9
         System.err.println(f"[bench] warmer $name%-28s ${sec}%.2f s")
         name -> sec
@@ -326,6 +337,7 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); None
         }
       }
+      if (repsOut.size < reps) failures.add(s"query:$name")
       name -> (if (repsOut.isEmpty) QStats(-1.0, -1.0, -1L, Nil, Nil)
       else {
         val sortedTimes = repsOut.map(_._2).sorted
@@ -346,6 +358,7 @@ object Bench {
     // must not discard the run: its error lands in the artifact instead.
     def leg(name: String)(f: => String): String =
       try f catch { case e: Throwable =>
+        failures.add(s"leg:$name")
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         Json.obj(Seq("err" -> Json.str(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))))
       }
@@ -381,6 +394,9 @@ object Bench {
     val bytes = Json.obj(results.map { case (k, s) => k -> s.bytesPerRep })
     val repArrays = Json.obj(results.map { case (k, s) => k -> Json.arr(s.times.map(Json.num(_, 3))) })
     val okWarm = results.values.map(_.warm).filter(_ >= 0).toSeq.sorted
+    val failed = failures.toArray(Array.empty[String]).toSeq
+    def failedJson(names: Seq[String]) =
+      s""""failed":${Json.arr(names.map(Json.str))},"n_failed":${failed.size}"""
     val total = okWarm.sum
     val medianQ = if (okWarm.isEmpty) -1.0 else okWarm(okWarm.size / 2)
     // dispersion summary: flag queries whose slowest WARM rep is >2x
@@ -404,7 +420,7 @@ object Bench {
     // failed write (read-only cwd, full disk) must NOT discard the run:
     // the two stdout lines below carry the measurements regardless
     val fullJson = s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""warmup_sec":$warmupSec,""" +
+      s""""warmup_sec":$warmupSec,${failedJson(failed)},""" +
       s""""warmup_breakdown":${Json.obj(warmupBreakdown.map { case (k, s) => k -> Json.num(s, 3) })},""" +
       s""""asof_ab":$ab,"streaming":$streamingJson,""" +
       s""""streaming_scale":$streamScaleJson,""" +
@@ -431,13 +447,14 @@ object Bench {
     println(fullJson)
 
     // (3) compact summary LAST — sized to always fit the tail window;
-    // failed queries (warm = -1) are not "slowest", they are absent here
-    // and visible in the full record's -1 sentinels
+    // failed queries (warm = -1) are not "slowest": they are absent here
+    // and named in `failed`
     val slowest = results.toSeq.filter(_._2.warm >= 0).sortBy(-_._2.warm).take(12)
     println(s"""{"metric":"total","value":${Json.num(total, 3)},"unit":"sec",""" +
       s""""queries":${Json.obj(slowest.map { case (k, s) => k -> Json.num(s.warm, 3) })},""" +
       s""""queries_truncated":${results.size > slowest.size},"n_queries":${results.size},""" +
       s""""median_query_sec":${Json.num(medianQ, 3)},"warmup_sec":${Json.num(warmupSec, 3)},""" +
+      s"""${failedJson(failed.take(12))},""" +
       s""""asof_ab":$ab,"streaming":$streamingJson,""" +
       s""""streaming_scale":$streamScaleJson,""" +
       s""""dispersion_flagged":${
@@ -447,5 +464,9 @@ object Bench {
       s""""load_start":$loadStart,"load_end":$loadEnd,"load_gate":$loadGateJson,""" +
       s""""reps":$reps,"sf":${Json.str(sfDir)},"full":${Json.str(outPath)}}""")
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.ml.classification.{GBTClassificationModel, GBTClassifier
 import org.apache.spark.ml.evaluation.{BinaryClassificationEvaluator, RegressionEvaluator}
 import org.apache.spark.ml.feature.{RobustScaler, StringIndexer, VectorAssembler}
 import org.apache.spark.ml.regression.{GBTRegressionModel, GBTRegressor}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -111,23 +111,45 @@ object Pipelines {
     AssembledFeatureNames.toSeq.zip(imp.toArray)
   }
 
-  /** M2-M6: class-weighted GBT direction classifier.
-    * Weights = total/(2·count_class) (classifier.py:62-67), computed with
-    * an aggregate→broadcast join instead of collectAsMap. */
+  /** Reads a fit's input once and weights it by class balance: the
+    * input is materialized, the per-class counts and their total come
+    * from ONE aggregate over that copy, and `weight` = total/(2·n_class)
+    * (classifier.py:62-67, regression.py:351-371) is a literal `when`
+    * chain over the collected counts (the same IEEE value the in-plan
+    * division gives). Without the copy every MLlib pass of the fit
+    * (StringIndexer, RobustScaler, GBT metadata, split finding, binning)
+    * re-runs the whole lineage: scan, window sort, split cutoff.
+    *
+    * Declared loud-failure contract (degenerate sweep r19): a degenerate
+    * fixture (one event per user, all-NULL features) leaves ZERO rows
+    * after feature derivation + na.drop, and the pipeline would then die
+    * in RobustScaler with a cryptic "QuantileSummaries on some features
+    * are missing" — `emptyMessage` names the contract here instead. */
+  private def classBalanced(input: DataFrame, cls: Column, emptyMessage: String): DataFrame = {
+    // localCheckpoint, not persist: persist() fitted other models
+    // (perfbench cold_pipeline, seed 720: AUC 0.7961 → 0.8076, another
+    // top-K). A cached plan may keep shuffle partitions that AQE
+    // coalesces in the uncached plan (canChangeCachedPlanOutputPartitioning
+    // is off by default), and GBT subsamples per partition. The
+    // checkpoint runs the plan as the lazy lineage would, so the models
+    // stay bit-identical to fitting over that lineage.
+    val materialized = input.localCheckpoint()
+    val counts = materialized.groupBy(cls).count().collect().map(r => (r.get(0), r.getLong(1)))
+    val total = counts.map(_._2).sum.toDouble
+    require(total > 0, emptyMessage)
+    val weight = counts.tail.foldLeft(when(cls === counts.head._1, total / (2.0 * counts.head._2))) {
+      case (w, (c, n)) => w.when(cls === c, total / (2.0 * n))
+    }
+    materialized.withColumn("weight", weight)
+  }
+
+  /** M2-M6: class-weighted GBT direction classifier, fitted over one
+    * materialized copy of `train` ([[classBalanced]]). */
   def trainClassifier(train: DataFrame, maxIter: Int = 20): (PipelineModel, DataFrame => DataFrame) = {
-    val counts = train.groupBy("label").agg(count(lit(1)).as("n_class"))
-    val total = train.count().toDouble
-    // Declared loud-failure contract (degenerate sweep r19): a degenerate
-    // fixture (one event per user, all-NULL features) leaves ZERO rows
-    // after feature derivation + na.drop, and the pipeline then dies in
-    // RobustScaler with a cryptic "QuantileSummaries on some features
-    // are missing" — name the contract here, where total is already paid
-    require(total > 0,
+    val weighted = classBalanced(train, col("label"),
       "trainClassifier: training input is empty after feature derivation " +
         "(lag/rolling features need per-user history; an empty train set " +
         "is a declared loud-failure contract, not a model)")
-    val weighted = train.join(broadcast(counts), "label")
-      .withColumn("weight", lit(total) / (lit(2.0) * col("n_class")))
     val gbt = new GBTClassifier()
       .setFeaturesCol("features").setLabelCol("label").setWeightCol("weight")
       .setMaxIter(maxIter).setMaxDepth(5).setStepSize(0.1)
@@ -166,19 +188,12 @@ object Pipelines {
     * are dropped BEFORE weighting, as the reference does
     * (regression.py:182-186): total/(2·n_sign) assumes two sign
     * classes, and a rare third sgn=0 group would receive enormous
-    * weights that dominate the loss. */
+    * weights that dominate the loss. Fitted over one materialized copy
+    * of the non-zero-return rows ([[classBalanced]]). */
   def trainRegressor(train: DataFrame, maxIter: Int = 20): PipelineModel = {
-    val nonZero = train.filter(signum(col("target")) =!= 0)
-    val signCounts = nonZero.withColumn("sgn", signum(col("target")))
-      .groupBy("sgn").agg(count(lit(1)).as("n_sign"))
-    val total = nonZero.count().toDouble
-    // same declared loud-failure contract as trainClassifier (r19)
-    require(total > 0,
+    val weighted = classBalanced(train.filter(signum(col("target")) =!= 0), signum(col("target")),
       "trainRegressor: training input has no non-zero-return rows — " +
         "an empty train set is a declared loud-failure contract, not a model")
-    val weighted = nonZero.withColumn("sgn", signum(col("target")))
-      .join(broadcast(signCounts), "sgn")
-      .withColumn("weight", lit(total) / (lit(2.0) * col("n_sign")))
     val gbt = new GBTRegressor()
       .setFeaturesCol("features").setLabelCol("target").setWeightCol("weight")
       .setMaxIter(maxIter).setMaxDepth(5).setStepSize(0.1)

@@ -1,7 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, input_file_name}
+import java.net.URI
+import java.nio.charset.StandardCharsets
+
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.spark.sql.{classic, DataFrame, SparkSession}
 
 /** S2: HTML-table ingestion adapter (ref scraper/main.py:36-49 — the
   * scraper selects every table row of a quotes page and sanitizes the
@@ -20,7 +24,8 @@ import org.apache.spark.sql.functions.{col, input_file_name}
   *    padded with null / truncated to the header width;
   *  - parsing runs on executors (one task per landed page via the
   *    wholetext reader), so a million landed pages scale like any other
-  *    scan. Only the header row is inspected on the driver.
+  *    scan. The driver reads one page, the header donor, and lists
+  *    the rest without running a job.
   *
   * A JDK-regex parser is deliberate: the reference's tables are
   * machine-generated (`<tr><td>v</td>...</tr>`); a full DOM parser is a
@@ -59,36 +64,33 @@ object HtmlSource {
   def readTable(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     val pages = spark.read.option("wholetext", "true").textFile(path)
-    // header donor: lexicographically-first file (Spark orders splits by
-    // size, so the order must be explicit). input_file_name() yields
-    // URI-ENCODED strings (space → %20, % → %25), which break BOTH uses
-    // the old code made of them: min() over encoded names can pick the
-    // wrong donor ('a b.html' < 'a!b.html' by real name but %20 > '!'
-    // encoded), and feeding the encoded string back into a read
-    // re-interprets it as a path/glob and drops the URI authority
-    // (s3a://bucket/... → s3a:/...). So: collect the per-file name list
-    // (one short string per page — the file listing already lives on
-    // the driver), order by the DECODED path, and extract the header by
-    // exact raw-URI equality against the same pages dataset — no second
-    // read, no glob, no authority surgery.
-    val fileNames = spark.read.option("wholetext", "true").text(path)
-      .select(input_file_name().as("f"))
-      .distinct().as[String].collect()
+    // header donor: the first file by DECODED path (Spark orders splits
+    // by size, so the order must be explicit). The listing already lives
+    // on the driver: `inputFiles` holds the same URI-encoded strings
+    // input_file_name() yields (space → %20, % → %25). Ordering by the
+    // encoded string picks the wrong donor ('a b.html' < 'a!b.html' by
+    // real name, but %20 > '!'), and handing it back to a read would
+    // re-interpret it as a glob and drop the URI authority
+    // (s3a://bucket/... → s3a:/...). So the donor is ordered decoded and
+    // opened through the FileSystem at its exact URI: no job, no glob.
+    val fileNames = pages.inputFiles
     require(fileNames.nonEmpty, s"no input pages found under $path")
     def decoded(f: String): String =
       try {
-        val p = new java.net.URI(f).getPath
+        val p = new URI(f).getPath
         if (p != null && p.nonEmpty) p else f
       } catch { case _: java.net.URISyntaxException => f }
-    val donorRaw = fileNames.minBy(decoded)
-    val headerCells = spark.read.option("wholetext", "true").text(path)
-      .select(input_file_name().as("f"), col("value"))
-      .filter(col("f") === donorRaw)
-      .select("value").as[String]
-      .map(html => tableRows(html).headOption.map(rowCells).getOrElse(Seq.empty))
-      .collect()
-    require(headerCells.nonEmpty, s"no input pages found under $path")
-    val header = headerCells.head.map(Sources.sanitizeName)
+    val donor = new Path(new URI(fileNames.minBy(decoded)))
+    // the session's Hadoop conf, as the page reader uses: it carries
+    // filesystem settings made through spark.conf at run time
+    val conf = spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+    val raw = donor.getFileSystem(conf).open(donor)
+    // decompress like the text reader would (a landed page.html.gz)
+    val in = Option(new CompressionCodecFactory(conf).getCodec(donor))
+      .fold[java.io.InputStream](raw)(_.createInputStream(raw))
+    val donorHtml = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+    val headerCells = tableRows(donorHtml).headOption.map(rowCells).getOrElse(Seq.empty)
+    val header = headerCells.map(Sources.sanitizeName)
     require(header.nonEmpty, s"no <table> header row found under $path")
     val n = header.length
     val rows = pages.flatMap { html =>

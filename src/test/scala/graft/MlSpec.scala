@@ -1,6 +1,12 @@
 package graft
 
-import org.apache.spark.ml.PipelineModel
+import org.apache.spark.ml.{Pipeline, PipelineModel}
+import org.apache.spark.ml.feature.{RobustScalerModel, StringIndexerModel}
+import org.apache.spark.ml.classification.GBTClassificationModel
+import org.apache.spark.ml.regression.GBTRegressionModel
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.functions.{broadcast, col, count, lit, signum}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ml.Pipelines
 
@@ -139,5 +145,76 @@ class MlSpec extends AnyFunSuite {
       .select("predicted_return").as[Double].collect()
     assert(served.nonEmpty)
     assert(served.zip(served.tail).forall { case (x, y) => x >= y })
+  }
+
+  /** Runs `f` over the training side of an UNCACHED feature frame: the
+    * lineage a cold caller hands the trainers (scan, window sort, split
+    * cutoff). It reads a private copy of the events table, so the suite's
+    * cached `features` (same plan over the shared SF dir) cannot stand
+    * in for it. */
+  private def withLazyTrain(f: DataFrame => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ml-lazy")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(TestSpark.Sf, "events.parquet"),
+      dir.resolve("events.parquet"))
+    try f(Pipelines.temporalSplit(Pipelines.featureFrame(spark, dir.toString), 7)._1)
+    finally IoUtil.deleteRecursively(dir)
+  }
+
+  test("one-read fits equal the lazy-lineage, broadcast-join-weighted fits") {
+    // Blind spot: on the fixtures the training side is partitioned the
+    // same on every path, so this cannot see a persist() in place of
+    // the trainers' localCheckpoint() (which does change the trees on
+    // perfbench's landed panel; see Pipelines)
+    withLazyTrain { train =>
+      // the earlier construction: class counts aggregated over the lazy
+      // lineage and joined back as a broadcast, total from its own count()
+      def joinWeighted(frame: DataFrame, key: String): DataFrame = {
+        val counts = frame.groupBy(key).agg(count(lit(1)).as("n_key"))
+        val total = frame.count().toDouble
+        frame.join(broadcast(counts), key)
+          .withColumn("weight", lit(total) / (lit(2.0) * col("n_key")))
+      }
+      // refit with the very Pipeline (stages and params) the trainer used
+      def refit(model: PipelineModel, weighted: DataFrame): PipelineModel =
+        model.parent.asInstanceOf[Pipeline].fit(weighted)
+      def assertSameFit(got: PipelineModel, want: PipelineModel): Unit = {
+        def parts(m: PipelineModel) = (m.stages(0).asInstanceOf[StringIndexerModel],
+          m.stages(2).asInstanceOf[RobustScalerModel], m.stages.last match {
+            case g: GBTClassificationModel => (g.treeWeights.toSeq, g.toDebugString)
+            case g: GBTRegressionModel => (g.treeWeights.toSeq, g.toDebugString)
+          })
+        val (gi, gs, gg) = parts(got)
+        val (wi, ws, wg) = parts(want)
+        assert(gi.labelsArray.map(_.toSeq).toSeq == wi.labelsArray.map(_.toSeq).toSeq)
+        assert(gs.median == ws.median && gs.range == ws.range)
+        assert(gg == wg)
+      }
+      val (cls, _) = Pipelines.trainClassifier(train, maxIter = 5)
+      assertSameFit(cls, refit(cls, joinWeighted(train, "label")))
+      val reg = Pipelines.trainRegressor(train, maxIter = 5)
+      val nonZero = train.filter(signum(col("target")) =!= 0).withColumn("sgn", signum(col("target")))
+      assertSameFit(reg, refit(reg, joinWeighted(nonZero, "sgn")))
+    }
+  }
+
+  test("trainRegressor reads the training lineage's files once") {
+    withLazyTrain { train =>
+      val sc = spark.sparkContext
+      val scanStages = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new SparkListener {
+        override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+          if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD")) scanStages.incrementAndGet()
+      }
+      GraftBridge.flushListeners(sc)
+      sc.addSparkListener(listener)
+      try {
+        Pipelines.trainRegressor(train, maxIter = 3)
+        GraftBridge.flushListeners(sc)
+      } finally sc.removeSparkListener(listener)
+      // 2 = the one materializing job's two scans: the window-sort side
+      // and the split-cutoff aggregate. Fitting over the lazy lineage
+      // re-ran both for every MLlib pass: 9 file-scan stages at sf0.001.
+      assert(scanStages.get() == 2)
+    }
   }
 }

@@ -54,6 +54,36 @@ class SourcesSpec extends AnyFunSuite {
     assert(spark.read.parquet(landing).count() == 3)
   }
 
+  test("html table adapter: multi-page donor is the first DECODED name; encoded names land") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-html-multi").toString
+    def page(header: Seq[String], rows: Seq[Seq[String]]): String =
+      (s"<table><tr>${header.map(h => s"<th>$h</th>").mkString}</tr>" +:
+        rows.map(r => s"<tr>${r.map(c => s"<td>$c</td>").mkString}</tr>") :+
+        "</table>").mkString("<html><body>", "\n", "</body></html>")
+    // 'a b.html' sorts first by real name (space < '!') but after
+    // 'a!b.html' by encoded name ('%20' > '!'); 'z%.html' is 'z%25.html'
+    // encoded. Each page has its own header, so the donor is observable.
+    Seq(
+      "a b.html" -> page(Seq("Alpha", "Beta", "Gamma"), Seq(Seq("a1", "a2", "a3"))),
+      "a!b.html" -> page(Seq("Bang", "Bong", "Bung"), Seq(Seq("b1", "b2", "b3"))),
+      "z%.html" -> page(Seq("Zed", "Zod", "Zud"),
+        Seq(Seq("z1", "z2", "z3"), Seq("z4")))) // ragged: padded to 3
+      .foreach { case (name, html) =>
+        java.nio.file.Files.write(java.nio.file.Paths.get(tmp, name), html.getBytes("UTF-8"))
+      }
+    // readTable's donor choice decodes the same strings input_file_name()
+    // yields; the Dataset's file listing must be exactly those strings
+    val pages = spark.read.option("wholetext", "true").text(tmp)
+    assert(pages.inputFiles.toSet ==
+      pages.select(input_file_name()).as[String].collect().toSet)
+    val df = HtmlSource.readTable(spark, tmp)
+    assert(df.columns.toSeq == Seq("Alpha", "Beta", "Gamma"))
+    val rows = df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    assert(rows.toSet == Set(
+      ("a1", "a2", "a3"), ("b1", "b2", "b3"),
+      ("z1", "z2", "z3"), ("z4", null, null)))
+  }
+
   test("writeLanding is idempotent per day partition") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-landing").toString + "/t"
     val day1 = Seq((1L, "2024-01-01"), (2L, "2024-01-01")).toDF("id", "day")
