@@ -151,9 +151,6 @@ object TextFunctions {
     // on /0 where DuckDB's division natively yields NULL (hostile r18)
     hitCountOf(ts, words) / nullif(size(ts), lit(0)).cast("double")
 
-  def stopwordRatio(c: Column, words: Seq[String] = EnStop): Column =
-    stopwordRatioOf(tokens(c), words)
-
   /** N-gram-heuristic language ID over a token array: stopword-hit score
     * per language, deterministic argmax with fixed tie order
     * (en, de, es, fr), 'und' (undetermined) when nothing scores. */
@@ -191,6 +188,4 @@ object TextFunctions {
       length(regexp_replace(c, "[^a-zA-Z0-9 ]", "")).cast("double") / nullif(length(c), lit(0))
     lengthScore * 0.4 + stopScore * 0.3 + coalesce(cleanScore, lit(0.0)) * 0.3
   }
-
-  def qualityScore(c: Column): Column = qualityScoreOf(c, tokens(c))
 }

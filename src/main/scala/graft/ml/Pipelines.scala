@@ -73,12 +73,29 @@ object Pipelines {
   def holdoutCutoff(df: DataFrame, holdoutDays: Int): DataFrame =
     df.agg((max(col("ts")) - lit(holdoutDays * 86400e9.toLong)).as("cutoff"))
 
-  /** M13: temporal split at (max ts − `holdoutDays` days of nanos); the
-    * cutoff stays in-plan via a broadcast join — no driver round-trip. */
+  /** M13: temporal split at (max ts − `holdoutDays` days of nanos), and
+    * the one place a run's features are materialized: `df` is copied
+    * once with `localCheckpoint()`, the cutoff is ONE 1-row collect over
+    * that copy, and both sides are literal filters over it. Both fits,
+    * both evals and serve then read the copy instead of re-running the
+    * scan, the per-user window sort and the cutoff aggregate each time.
+    *
+    * localCheckpoint, not persist: persist() fitted other models
+    * (perfbench cold_pipeline, seed 720: AUC 0.7961 → 0.8076, another
+    * top-K). A cached plan may keep shuffle partitions that AQE
+    * coalesces in the uncached plan (canChangeCachedPlanOutputPartitioning
+    * is off by default), and GBT subsamples per partition. The
+    * checkpoint keeps the partitioning `df` would execute with (the
+    * lazy lineage's AQE-coalesced shuffle partitions, or a cached
+    * frame's own partitions), so the models are those of fitting over
+    * `df` itself.
+    *
+    * An empty `df` has a null cutoff: both sides are then empty, and
+    * the trainers' empty-input contracts fire. */
   def temporalSplit(df: DataFrame, holdoutDays: Int): (DataFrame, DataFrame) = {
-    val tagged = df.crossJoin(broadcast(holdoutCutoff(df, holdoutDays)))
-    (tagged.filter(col("ts") < col("cutoff")).drop("cutoff"),
-      tagged.filter(col("ts") >= col("cutoff")).drop("cutoff"))
+    val mat = df.localCheckpoint()
+    val cutoff = lit(holdoutCutoff(mat, holdoutDays).head().get(0)).cast("long")
+    (mat.filter(col("ts") < cutoff), mat.filter(col("ts") >= cutoff))
   }
 
   /** M1+M7+M8 assembly stages shared by both trainers: numeric block
@@ -111,14 +128,16 @@ object Pipelines {
     AssembledFeatureNames.toSeq.zip(imp.toArray)
   }
 
-  /** Reads a fit's input once and weights it by class balance: the
-    * input is materialized, the per-class counts and their total come
-    * from ONE aggregate over that copy, and `weight` = total/(2·n_class)
-    * (classifier.py:62-67, regression.py:351-371) is a literal `when`
-    * chain over the collected counts (the same IEEE value the in-plan
-    * division gives). Without the copy every MLlib pass of the fit
-    * (StringIndexer, RobustScaler, GBT metadata, split finding, binning)
-    * re-runs the whole lineage: scan, window sort, split cutoff.
+  /** Weights a fit's input by class balance: the per-class counts and
+    * their total come from ONE aggregate, and `weight` =
+    * total/(2·n_class) (classifier.py:62-67, regression.py:351-371) is
+    * a literal `when` chain over the collected counts (the same IEEE
+    * value the in-plan division gives). No copy is taken here: every
+    * MLlib pass of the fit (StringIndexer, RobustScaler, GBT metadata,
+    * split finding, binning) re-reads `input`, so the trainers expect
+    * a materialized frame — a side of [[temporalSplit]], whose filter
+    * over the split's checkpoint is cheap to re-run and keeps its
+    * partitioning.
     *
     * Declared loud-failure contract (degenerate sweep r19): a degenerate
     * fixture (one event per user, all-NULL features) leaves ZERO rows
@@ -126,25 +145,18 @@ object Pipelines {
     * in RobustScaler with a cryptic "QuantileSummaries on some features
     * are missing" — `emptyMessage` names the contract here instead. */
   private def classBalanced(input: DataFrame, cls: Column, emptyMessage: String): DataFrame = {
-    // localCheckpoint, not persist: persist() fitted other models
-    // (perfbench cold_pipeline, seed 720: AUC 0.7961 → 0.8076, another
-    // top-K). A cached plan may keep shuffle partitions that AQE
-    // coalesces in the uncached plan (canChangeCachedPlanOutputPartitioning
-    // is off by default), and GBT subsamples per partition. The
-    // checkpoint runs the plan as the lazy lineage would, so the models
-    // stay bit-identical to fitting over that lineage.
-    val materialized = input.localCheckpoint()
-    val counts = materialized.groupBy(cls).count().collect().map(r => (r.get(0), r.getLong(1)))
+    val counts = input.groupBy(cls).count().collect().map(r => (r.get(0), r.getLong(1)))
     val total = counts.map(_._2).sum.toDouble
     require(total > 0, emptyMessage)
     val weight = counts.tail.foldLeft(when(cls === counts.head._1, total / (2.0 * counts.head._2))) {
       case (w, (c, n)) => w.when(cls === c, total / (2.0 * n))
     }
-    materialized.withColumn("weight", weight)
+    input.withColumn("weight", weight)
   }
 
-  /** M2-M6: class-weighted GBT direction classifier, fitted over one
-    * materialized copy of `train` ([[classBalanced]]). */
+  /** M2-M6: class-weighted GBT direction classifier ([[classBalanced]]);
+    * `train` is read once per MLlib pass, so pass a materialized frame
+    * such as [[temporalSplit]]'s training side. */
   def trainClassifier(train: DataFrame, maxIter: Int = 20): (PipelineModel, DataFrame => DataFrame) = {
     val weighted = classBalanced(train, col("label"),
       "trainClassifier: training input is empty after feature derivation " +
@@ -188,8 +200,9 @@ object Pipelines {
     * are dropped BEFORE weighting, as the reference does
     * (regression.py:182-186): total/(2·n_sign) assumes two sign
     * classes, and a rare third sgn=0 group would receive enormous
-    * weights that dominate the loss. Fitted over one materialized copy
-    * of the non-zero-return rows ([[classBalanced]]). */
+    * weights that dominate the loss. `train` is read once per MLlib
+    * pass ([[classBalanced]]), so pass a materialized frame such as
+    * [[temporalSplit]]'s training side. */
   def trainRegressor(train: DataFrame, maxIter: Int = 20): PipelineModel = {
     val weighted = classBalanced(train.filter(signum(col("target")) =!= 0), signum(col("target")),
       "trainRegressor: training input has no non-zero-return rows — " +
@@ -231,17 +244,18 @@ object Pipelines {
   }
 
   /** M11+M12: RMSE/MSE/MAE/R² + directional accuracy and sign confusion.
-    * Persisted for the duration (see [[evalClassifier]]) — the three
-    * evaluator passes plus the direction aggregate would otherwise each
-    * re-run the GBT transform; mse is rmse² by definition, not a fourth
-    * pass. */
+    * rmse, mae and r2 come from ONE `RegressionMetrics` summary (the
+    * object `RegressionEvaluator.evaluate` builds afresh per metric, so
+    * the values are bit-identical to three evaluator calls at a third of
+    * the passes); mse is rmse² by definition. Persisted for the duration
+    * (see [[evalClassifier]]) — the summary and the direction aggregate
+    * would otherwise each re-run the GBT transform. */
   def evalRegressor(scored: DataFrame): DataFrame = {
     scored.persist()
     try {
-      def metric(m: String): Double = new RegressionEvaluator()
-        .setLabelCol("target").setPredictionCol("prediction")
-        .setMetricName(m).evaluate(scored)
-      val rmse = metric("rmse")
+      val metrics = new RegressionEvaluator()
+        .setLabelCol("target").setPredictionCol("prediction").getMetrics(scored)
+      val rmse = metrics.rootMeanSquaredError
       val dir = scored.agg(
         count(lit(1)).as("n"),
         sum(when(signum(col("target")) === signum(col("prediction")), 1).otherwise(0))
@@ -249,8 +263,8 @@ object Pipelines {
         .withColumn("dir_accuracy", col("n_dir_correct") / col("n"))
         .withColumn("rmse", lit(rmse))
         .withColumn("mse", lit(rmse * rmse))
-        .withColumn("mae", lit(metric("mae")))
-        .withColumn("r2", lit(metric("r2")))
+        .withColumn("mae", lit(metrics.meanAbsoluteError))
+        .withColumn("r2", lit(metrics.r2))
       dir.localCheckpoint(true) // materialize before unpersisting the input
     } finally scored.unpersist()
   }

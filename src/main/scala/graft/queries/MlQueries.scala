@@ -14,31 +14,39 @@ import graft.ml.Pipelines
 object MlQueries {
 
   /** Shared-feature memo (M15 made literal): the three training queries
-    * reuse ONE cached feature frame and ONE fitted regressor per
+    * reuse ONE materialized feature split and ONE fitted regressor per
     * (session, dir) instead of re-deriving and re-training — in a Verify/
     * Bench run that executes all ML queries this is a 3× saving, and it
     * mirrors production, where the feature table and model are artifacts,
     * not per-query recomputations. */
-  private val featureMemo = new SessionMemo[String, DataFrame]("featureMemo")
   private val regressorMemo = new SessionMemo[String, org.apache.spark.ml.PipelineModel]("regressorMemo")
   private val classifierMemo = new SessionMemo[String, org.apache.spark.ml.PipelineModel]("classifierMemo")
 
-  private def cachedFeatures(spark: SparkSession, dir: String): DataFrame =
-    featureMemo.getOrElseUpdate(spark, dir) {
-      val f = Pipelines.featureFrame(spark, dir).cache()
-      f.count() // materialize once
-      f
+  /** The 7-day split, built once per (session, dir). temporalSplit is
+    * eager (a localCheckpoint of its input and a cutoff collect), and
+    * Bench re-runs every query constructor in each timed rep:
+    * unmemoized, each rep would pay a checkpoint job and pin another
+    * copy of the features. The features are cached only while the
+    * checkpoint is taken: a cached plan keeps its nproc shuffle
+    * partitions, which fixes the fits' partitioning (and so the
+    * models), and afterwards the checkpoint is the one copy pinned. */
+  private val splitMemo = new SessionMemo[String, (DataFrame, DataFrame)]("splitMemo")
+
+  private def cachedSplit(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
+    splitMemo.getOrElseUpdate(spark, dir) {
+      val features = Pipelines.featureFrame(spark, dir).cache()
+      try Pipelines.temporalSplit(features, 7) finally features.unpersist()
     }
 
   private def cachedRegressor(spark: SparkSession, dir: String): org.apache.spark.ml.PipelineModel =
     regressorMemo.getOrElseUpdate(spark, dir) {
-      val (train, _) = Pipelines.temporalSplit(cachedFeatures(spark, dir), 7)
+      val (train, _) = cachedSplit(spark, dir)
       Pipelines.trainRegressor(train, maxIter = 10)
     }
 
   private def cachedClassifier(spark: SparkSession, dir: String): org.apache.spark.ml.PipelineModel =
     classifierMemo.getOrElseUpdate(spark, dir) {
-      val (train, _) = Pipelines.temporalSplit(cachedFeatures(spark, dir), 7)
+      val (train, _) = cachedSplit(spark, dir)
       Pipelines.trainClassifier(train, maxIter = 10)._1
     }
 
@@ -52,13 +60,13 @@ object MlQueries {
 
   private def cachedClassifierMetrics(spark: SparkSession, dir: String): DataFrame =
     clsMetricsMemo.getOrElseUpdate(spark, dir) {
-      val (_, test) = Pipelines.temporalSplit(cachedFeatures(spark, dir), 7)
+      val (_, test) = cachedSplit(spark, dir)
       Pipelines.evalClassifier(cachedClassifier(spark, dir).transform(test))
     }
 
   private def cachedRegressorMetrics(spark: SparkSession, dir: String): DataFrame =
     regMetricsMemo.getOrElseUpdate(spark, dir) {
-      val (_, test) = Pipelines.temporalSplit(cachedFeatures(spark, dir), 7)
+      val (_, test) = cachedSplit(spark, dir)
       Pipelines.evalRegressor(cachedRegressor(spark, dir).transform(test))
     }
 
@@ -128,7 +136,7 @@ object MlQueries {
     * produced the ranking stops clearing its floors, the served rows
     * vanish with it. */
   def qMlServe(spark: SparkSession, dir: String): DataFrame = {
-    val (_, test) = Pipelines.temporalSplit(cachedFeatures(spark, dir), 7)
+    val (_, test) = cachedSplit(spark, dir)
     // gate the SCORED frame, then rank — the ranking orderBy+limit must
     // stay the plan's top-level sort (a sort below a join confers no
     // output ordering, and this query is documented as ranked output)
@@ -143,7 +151,7 @@ object MlQueries {
     * split, as a 1-row broadcastable frame — the split-leakage
     * certificate both metric certs carry. */
   private def splitBounds(spark: SparkSession, dir: String): DataFrame = {
-    val (train, test) = Pipelines.temporalSplit(cachedFeatures(spark, dir), 7)
+    val (train, test) = cachedSplit(spark, dir)
     train.agg(max(col("ts")).as("train_max_ts"))
       .crossJoin(broadcast(test.agg(min(col("ts")).as("test_min_ts"))))
   }
@@ -228,8 +236,7 @@ object MlQueries {
     * red). */
   def qMlServeCert(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val feats = cachedFeatures(spark, dir)
-    val (train, test) = Pipelines.temporalSplit(feats, 7)
+    val (train, test) = cachedSplit(spark, dir)
     val scored = cachedRegressor(spark, dir).transform(test)
       .crossJoin(broadcast(gateMarker(
         cachedRegressorMetrics(spark, dir), Pipelines.regressorGate)))
@@ -237,7 +244,7 @@ object MlQueries {
     val served = Pipelines.servePredictions(scored, topK = 20)
     // the SAME boundary definition the split itself uses — not a
     // re-derivation that could drift from temporalSplit's constant
-    val cutoff = Pipelines.holdoutCutoff(feats, 7)
+    val cutoff = Pipelines.holdoutCutoff(train.unionByName(test), 7)
     val trainCats = train.filter(signum(col("target")) =!= 0)
       .select(col("event_type")).distinct().withColumn("cat_in_train", lit(1))
     // 20 rows by construction — the global window ranks the bounded

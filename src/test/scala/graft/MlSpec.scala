@@ -4,7 +4,7 @@ import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.ml.feature.{RobustScalerModel, StringIndexerModel}
 import org.apache.spark.ml.classification.GBTClassificationModel
 import org.apache.spark.ml.regression.GBTRegressionModel
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.functions.{broadcast, col, count, lit, signum}
 import org.scalatest.funsuite.AnyFunSuite
@@ -147,27 +147,33 @@ class MlSpec extends AnyFunSuite {
     assert(served.zip(served.tail).forall { case (x, y) => x >= y })
   }
 
-  /** Runs `f` over the training side of an UNCACHED feature frame: the
-    * lineage a cold caller hands the trainers (scan, window sort, split
-    * cutoff). It reads a private copy of the events table, so the suite's
-    * cached `features` (same plan over the shared SF dir) cannot stand
-    * in for it. */
-  private def withLazyTrain(f: DataFrame => Unit): Unit = {
+  /** Runs `f` over an UNCACHED feature frame: the lineage a cold caller
+    * hands temporalSplit (scan, window sort). It reads a private copy of
+    * the events table, so the suite's cached `features` (same plan over
+    * the shared SF dir) cannot stand in for it. */
+  private def withLazyFeatures(f: DataFrame => Unit): Unit = {
     val dir = java.nio.file.Files.createTempDirectory("graft-ml-lazy")
     java.nio.file.Files.copy(java.nio.file.Paths.get(TestSpark.Sf, "events.parquet"),
       dir.resolve("events.parquet"))
-    try f(Pipelines.temporalSplit(Pipelines.featureFrame(spark, dir.toString), 7)._1)
+    try f(Pipelines.featureFrame(spark, dir.toString))
     finally IoUtil.deleteRecursively(dir)
   }
 
   test("one-read fits equal the lazy-lineage, broadcast-join-weighted fits") {
     // Blind spot: on the fixtures the training side is partitioned the
     // same on every path, so this cannot see a persist() in place of
-    // the trainers' localCheckpoint() (which does change the trees on
+    // the split's localCheckpoint() (which does change the trees on
     // perfbench's landed panel; see Pipelines)
-    withLazyTrain { train =>
-      // the earlier construction: class counts aggregated over the lazy
-      // lineage and joined back as a broadcast, total from its own count()
+    withLazyFeatures { feats =>
+      // the trainers fit over the split's materialized copy; the
+      // references refit over the earlier lazy lineage: the cutoff
+      // broadcast-joined in-plan, no copy anywhere
+      val (train, _) = Pipelines.temporalSplit(feats, 7)
+      val lazyTrain = feats.crossJoin(broadcast(Pipelines.holdoutCutoff(feats, 7)))
+        .filter(col("ts") < col("cutoff")).drop("cutoff")
+      // the earlier weighting: class counts aggregated over the
+      // training frame and joined back as a broadcast, total from its
+      // own count()
       def joinWeighted(frame: DataFrame, key: String): DataFrame = {
         val counts = frame.groupBy(key).agg(count(lit(1)).as("n_key"))
         val total = frame.count().toDouble
@@ -190,31 +196,60 @@ class MlSpec extends AnyFunSuite {
         assert(gg == wg)
       }
       val (cls, _) = Pipelines.trainClassifier(train, maxIter = 5)
-      assertSameFit(cls, refit(cls, joinWeighted(train, "label")))
+      assertSameFit(cls, refit(cls, joinWeighted(lazyTrain, "label")))
       val reg = Pipelines.trainRegressor(train, maxIter = 5)
-      val nonZero = train.filter(signum(col("target")) =!= 0).withColumn("sgn", signum(col("target")))
+      val nonZero = lazyTrain.filter(signum(col("target")) =!= 0)
+        .withColumn("sgn", signum(col("target")))
       assertSameFit(reg, refit(reg, joinWeighted(nonZero, "sgn")))
     }
   }
 
-  test("trainRegressor reads the training lineage's files once") {
-    withLazyTrain { train =>
-      val sc = spark.sparkContext
-      val scanStages = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new SparkListener {
-        override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-          if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD")) scanStages.incrementAndGet()
-      }
-      GraftBridge.flushListeners(sc)
-      sc.addSparkListener(listener)
-      try {
-        Pipelines.trainRegressor(train, maxIter = 3)
-        GraftBridge.flushListeners(sc)
-      } finally sc.removeSparkListener(listener)
-      // 2 = the one materializing job's two scans: the window-sort side
-      // and the split-cutoff aggregate. Fitting over the lazy lineage
-      // re-ran both for every MLlib pass: 9 file-scan stages at sf0.001.
-      assert(scanStages.get() == 2)
+  /** `f`'s result, with the jobs started and the file-scan stages
+    * completed while it runs. */
+  private def countDuring[A](f: => A): (A, Int, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val scans = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD")) scans.incrementAndGet()
     }
+    GraftBridge.flushListeners(sc)
+    sc.addSparkListener(listener)
+    val result = try {
+      val r = f
+      GraftBridge.flushListeners(sc)
+      r
+    } finally sc.removeSparkListener(listener)
+    (result, jobs.get(), scans.get())
+  }
+
+  test("the ML path reads the feature frame's files once") {
+    withLazyFeatures { feats =>
+      val (_, _, scans) = countDuring {
+        val (train, test) = Pipelines.temporalSplit(feats, 7)
+        val (_, score) = Pipelines.trainClassifier(train, maxIter = 3)
+        Pipelines.evalClassifier(score(test))
+        val reg = Pipelines.trainRegressor(train, maxIter = 3)
+        Pipelines.evalRegressor(reg.transform(test))
+        Pipelines.servePredictions(reg.transform(test)).collect()
+      }
+      // 1 = the scan under the split's one materializing job. With the
+      // split as a lazy broadcast-join filter, every fit, eval and serve
+      // re-derived the features: 10 file-scan stages at sf0.001.
+      assert(scans == 1)
+    }
+  }
+
+  test("constructing qMlServe twice in one session builds the split once") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    def checkpoints(df: DataFrame): Set[Int] =
+      df.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id }.toSet
+    val first = graft.queries.MlQueries.qMlServe(spark, TestSpark.Sf)
+    val (second, jobs, _) = countDuring(graft.queries.MlQueries.qMlServe(spark, TestSpark.Sf))
+    // an unmemoized split would checkpoint and collect the cutoff again
+    assert(jobs == 0)
+    assert(checkpoints(first).nonEmpty && checkpoints(first) == checkpoints(second))
   }
 }

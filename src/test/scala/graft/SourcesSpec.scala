@@ -26,6 +26,27 @@ class SourcesSpec extends AnyFunSuite {
     assert(back.as[(Long, Double)].collect().toSet == Set((1L, 2.5), (2L, 3.5)))
   }
 
+  test("json snapshot read with and without an explicit schema (S4/S7)") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-json")
+    java.nio.file.Files.write(tmp.resolve("snap.json"), Seq(
+      """{"symbol": "ABC", "last trade": 12.5, "vol.day": 100}""",
+      """{"symbol": "DEF", "last trade": 99.0}""").mkString("\n").getBytes("UTF-8"))
+    // schema-on-read: inferred types, columns in inference (name) order
+    val inferred = Sources.readJson(spark, tmp.toString)
+    assert(inferred.columns.toSeq == Seq("last_trade", "symbol", "vol_day"))
+    assert(inferred.schema("vol_day").dataType == LongType)
+    assert(inferred.select("symbol", "last_trade", "vol_day").collect()
+      .map(r => (r.getString(0), r.getDouble(1), r.get(2))).toSet ==
+      Set(("ABC", 12.5, 100L), ("DEF", 99.0, null)))
+    // explicit schema: its order and types win; a key it omits is not read
+    val schema = StructType(Seq(
+      StructField("symbol", StringType), StructField("last trade", DoubleType)))
+    val typed = Sources.readJson(spark, tmp.toString, Some(schema))
+    assert(typed.columns.toSeq == Seq("symbol", "last_trade"))
+    assert(typed.as[(String, Double)].collect().toSet == Set(("ABC", 12.5), ("DEF", 99.0)))
+    IoUtil.deleteRecursively(tmp)
+  }
+
   test("html table adapter: scrape → sanitize headers → landing round trip (S2)") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-html").toString
     // the reference's quote-table shape: styled cells, dirty headers,
