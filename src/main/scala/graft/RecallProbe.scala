@@ -94,16 +94,17 @@ object RecallProbe {
     }
     // query → {floor, per_sf: {sfX: {recall, corpus_rows, query_rows}}}
     val names = perDir.head._2.map(_.query)
-    val body = names.map { qn =>
+    val queries = names.map { qn =>
       val floor = perDir.head._2.find(_.query == qn).get.floor
       val sfs = perDir.map { case (sf, rows) =>
         val r = rows.find(_.query == qn).get
-        s""""$sf":{"recall":${Json.num(r.recall, 4)},"corpus_rows":${r.corpusRows},""" +
-          s""""query_rows":${r.queryRows}}"""
-      }.mkString(",")
-      s""""$qn":{"floor":$floor,"k":5,"per_sf":{$sfs}}"""
-    }.mkString(",\n  ")
-    val json = s"""{"generated_by":"graft.RecallProbe --json","queries":{\n  $body\n}}\n"""
+        sf -> Json.obj(Seq("recall" -> Json.num(r.recall, 4),
+          "corpus_rows" -> r.corpusRows, "query_rows" -> r.queryRows))
+      }
+      qn -> Json.obj(Seq("floor" -> floor, "k" -> 5, "per_sf" -> Json.obj(sfs)))
+    }
+    val json = Json.obj(Seq("generated_by" -> Json.str("graft.RecallProbe --json"),
+      "queries" -> Json.obj(queries))) + "\n"
     java.nio.file.Files.write(java.nio.file.Paths.get(path),
       json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     println(s"RECALL json written to $path")

@@ -112,6 +112,10 @@ object StreamScale {
     (users * ampl, staged.count(), srcDir)
   }
 
+  /** A leg's `name -> object` entry in the study's `legs`, plus the
+    * state counts the eviction proof reads back. */
+  private case class Leg(entry: (String, String), peakRows: Long, finalRows: Long)
+
   /** One streaming leg over the staged files: AvailableNow +
     * maxFilesPerTrigger=1 (time-ordered micro-batches), noop sink
     * (the resume leg uses the file sink separately — the memory sink
@@ -119,7 +123,7 @@ object StreamScale {
     * from StreamingQueryProgress. */
   private def runLeg(spark: SparkSession, name: String, srcDir: String,
                      ckpt: String, provider: String)
-                    (mk: Dataset[Ingest.Event] => Dataset[_]): String = {
+                    (mk: Dataset[Ingest.Event] => Dataset[_]): Leg = {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
     val schema = spark.read.parquet(srcDir).schema
     val src = Ingest.typedEvents(
@@ -135,20 +139,19 @@ object StreamScale {
     val prog = q.recentProgress.toSeq
     val perBatch = prog.map { p =>
       val (sr, sb) = state(p)
-      s"""{"batch":${p.batchId},"rows":${p.numInputRows},""" +
-        s""""state_rows":$sr,"state_bytes":$sb,""" +
-        s""""batch_ms":${p.batchDuration}}"""
+      Json.obj(Seq("batch" -> p.batchId, "rows" -> p.numInputRows,
+        "state_rows" -> sr, "state_bytes" -> sb, "batch_ms" -> p.batchDuration))
     }
     val inRows = prog.map(_.numInputRows).sum
     val (peakRows, peakBytes) = peakState(prog)
     val finalRows = prog.lastOption.map(state(_)._1).getOrElse(0L)
     System.err.println(f"[streamscale] $name%-22s ${wall}%.1f s, " +
       f"$inRows rows, peak state $peakRows rows / ${peakBytes / 1e6}%.0f MB")
-    s""""$name":{"wall_sec":${Json.num(wall, 3)},"rows":$inRows,""" +
-      s""""rows_per_sec":${(inRows / wall).round},""" +
-      s""""state_rows_peak":$peakRows,"state_rows_final":$finalRows,""" +
-      s""""state_bytes_peak":$peakBytes,"provider":"${provider.split('.').last}",""" +
-      s""""batches":[${perBatch.mkString(",")}]}"""
+    Leg(name -> Json.obj(Seq("wall_sec" -> Json.num(wall, 3), "rows" -> inRows,
+      "rows_per_sec" -> (inRows / wall).round,
+      "state_rows_peak" -> peakRows, "state_rows_final" -> finalRows,
+      "state_bytes_peak" -> peakBytes, "provider" -> Json.str(provider.split('.').last),
+      "batches" -> Json.arr(perBatch))), peakRows, finalRows)
   }
 
   /** The full study. `compact` (Bench mode) runs the three core legs
@@ -164,22 +167,22 @@ object StreamScale {
       System.err.println(f"[streamscale] staged $nRows rows / $nKeys keys " +
         f"in ${stageSec}%.1f s ($nFiles files)")
       def ck(n: String) = s"$tmp/ckpt/$n"
-      val legs = scala.collection.mutable.ArrayBuffer[String]()
+      val legs = scala.collection.mutable.ArrayBuffer[(String, String)]()
 
       // 1. Welford z-score — the O(1)-per-key running-moments shape.
       // Cold under RocksDB; the standalone study adds a warm replay
       // (fresh checkpoint, warmed JVM) and the HDFS-provider A/B.
       legs += runLeg(spark, "welford_rocks_cold", srcDir, ck("wr1"), RocksProvider)(
-        ev => Ingest.streamingZscoreAnomalies(ev))
+        ev => Ingest.streamingZscoreAnomalies(ev)).entry
       if (!compact) {
         legs += runLeg(spark, "welford_rocks_warm", srcDir, ck("wr2"), RocksProvider)(
-          ev => Ingest.streamingZscoreAnomalies(ev))
+          ev => Ingest.streamingZscoreAnomalies(ev)).entry
         legs += runLeg(spark, "welford_hdfs", srcDir, ck("wh"), HdfsProvider)(
-          ev => Ingest.streamingZscoreAnomalies(ev))
+          ev => Ingest.streamingZscoreAnomalies(ev)).entry
         // pct alerts at the production 30-day TTL (no eviction inside
         // the one-month window — the steady-state price of the shape)
         legs += runLeg(spark, "pct_alerts_rocks", srcDir, ck("pa"), RocksProvider)(
-          ev => Ingest.statefulPctAlerts(ev))
+          ev => Ingest.statefulPctAlerts(ev)).entry
       }
 
       // 1b. Changelog-checkpointing A/B (STREAMSCALE_CHANGELOG=1, full
@@ -197,7 +200,7 @@ object StreamScale {
       if (!compact && sys.env.get("STREAMSCALE_CHANGELOG").contains("1")) {
         spark.conf.set(ChangelogConf, "true")
         try legs += runLeg(spark, "welford_rocks_changelog", srcDir,
-          ck("wrchg"), RocksProvider)(ev => Ingest.streamingZscoreAnomalies(ev))
+          ck("wrchg"), RocksProvider)(ev => Ingest.streamingZscoreAnomalies(ev)).entry
         finally spark.conf.set(ChangelogConf, "false")
       }
 
@@ -205,18 +208,16 @@ object StreamScale {
       // the leg proves the within-watermark variant evicts closed days
       // as the watermark advances (peak state ≪ total distinct pairs).
       legs += runLeg(spark, "dedup_daily_rocks", srcDir, ck("dd"), RocksProvider)(
-        ev => Ingest.dedupDaily(ev.toDF()))
+        ev => Ingest.dedupDaily(ev.toDF())).entry
 
       // 3. Eviction proof — pct alerts with a 2-DAY idle TTL over a
       // month of event time: keys idle ≥2 days behind the watermark
       // MUST be evicted, so final state ≪ peak state. A flat curve
       // here would falsify the bounded-state claim.
-      val evictJson = runLeg(spark, "pct_ttl2d_evict", srcDir, ck("ev"), RocksProvider)(
+      val evict = runLeg(spark, "pct_ttl2d_evict", srcDir, ck("ev"), RocksProvider)(
         ev => Ingest.statefulPctAlerts(ev,
           idleTimeout = java.time.Duration.ofDays(2)))
-      legs += evictJson
-      val evPeak = """"state_rows_peak":(\d+)""".r.findFirstMatchIn(evictJson).get.group(1).toLong
-      val evFinal = """"state_rows_final":(\d+)""".r.findFirstMatchIn(evictJson).get.group(1).toLong
+      legs += evict.entry
 
       // 4. Kill-and-resume at FULL state: phase 1 streams the first
       // half of the files into pct-alert state, the query stops, a new
@@ -227,7 +228,7 @@ object StreamScale {
       // conservation check vacuous, as welford's minN=20 does at 4
       // events/key. Output conservation: phase1+phase2 rows/hash ==
       // an uninterrupted run over the same files.
-      def resumeLeg(label: String, changelog: Boolean): String = {
+      def resumeLeg(label: String, changelog: Boolean): (String, String) = {
         spark.conf.set("spark.sql.streaming.stateStore.providerClass", RocksProvider)
         spark.conf.set(ChangelogConf, changelog.toString)
         try {
@@ -273,11 +274,11 @@ object StreamScale {
           val ctlOut = s"$tmp/${label}_out_ctl"
           val (_, _, _) = phase(ctlOut, s"${label}_ctl")
           val (nc, hc) = dirHash(ctlOut)
-          s""""$label":{"phase1_sec":${Json.num(w1, 3)},"phase1_rows":$rows1,""" +
-            s""""state_at_kill":$state1,"phase2_sec":${Json.num(w2, 3)},""" +
-            s""""phase2_rows":$rows2,"state_after_resume":$state2,""" +
-            s""""out_rows_split":$nSplit,"out_rows_uninterrupted":$nc,""" +
-            s""""output_match":${nSplit == nc && hSplit == hc}}"""
+          label -> Json.obj(Seq("phase1_sec" -> Json.num(w1, 3), "phase1_rows" -> rows1,
+            "state_at_kill" -> state1, "phase2_sec" -> Json.num(w2, 3),
+            "phase2_rows" -> rows2, "state_after_resume" -> state2,
+            "out_rows_split" -> nSplit, "out_rows_uninterrupted" -> nc,
+            "output_match" -> (nSplit == nc && hSplit == hc)))
         } finally spark.conf.set(ChangelogConf, "false")
       }
       legs += resumeLeg("resume", changelog = false)
@@ -288,11 +289,11 @@ object StreamScale {
       if (!compact && sys.env.get("STREAMSCALE_CHANGELOG").contains("1"))
         legs += resumeLeg("resume_changelog", changelog = true)
 
-      s"""{"keys":$nKeys,"rows":$nRows,"files":$nFiles,""" +
-        s""""ev_per_key":$evPerKey,"stage_sec":${Json.num(stageSec, 3)},""" +
-        s""""eviction_proof":${evFinal < evPeak / 2},""" +
-        s""""eviction_peak":$evPeak,"eviction_final":$evFinal,""" +
-        s""""legs":{${legs.mkString(",")}}}"""
+      Json.obj(Seq("keys" -> nKeys, "rows" -> nRows, "files" -> nFiles,
+        "ev_per_key" -> evPerKey, "stage_sec" -> Json.num(stageSec, 3),
+        "eviction_proof" -> (evict.finalRows < evict.peakRows / 2),
+        "eviction_peak" -> evict.peakRows, "eviction_final" -> evict.finalRows,
+        "legs" -> Json.obj(legs)))
     } finally {
       try IoUtil.deleteRecursively(tmp) catch { case _: Throwable => () }
     }

@@ -8,6 +8,7 @@ import org.apache.spark.ml.regression.{GBTRegressionModel, GBTRegressor}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.Tables
 import graft.functions.TimeSeries._
 
@@ -173,12 +174,12 @@ object Pipelines {
   }
 
   /** M4+M5: AUC, accuracy, and the grouped-count confusion matrix.
-    * The scored frame is persisted for the duration: it is the output
-    * of a lazy GBT transform, and without caching the AUC evaluator and
-    * the confusion aggregate would each re-score the whole holdout. */
-  def evalClassifier(scored: DataFrame): DataFrame = {
-    scored.persist()
-    try {
+    * The scored frame is held in memory for the duration
+    * ([[holdingInMemory]]): it is the output of a lazy GBT transform,
+    * and without caching the AUC evaluator and the confusion aggregate
+    * would each re-score the whole holdout. */
+  def evalClassifier(scored: DataFrame): DataFrame =
+    holdingInMemory(scored) {
       val auc = new BinaryClassificationEvaluator()
         .setLabelCol("label").setRawPredictionCol("rawPrediction")
         .setMetricName("areaUnderROC").evaluate(scored)
@@ -192,8 +193,7 @@ object Pipelines {
         .withColumn("accuracy", col("n_correct") / col("n"))
         .withColumn("auc", lit(auc))
       agg.localCheckpoint(true) // materialize before unpersisting the input
-    } finally scored.unpersist()
-  }
+    }
 
   /** M9-M10: GBT return regressor with direction-balanced sample weights
     * (inverse sign frequency, regression.py:351-371). Zero-return rows
@@ -247,12 +247,11 @@ object Pipelines {
     * rmse, mae and r2 come from ONE `RegressionMetrics` summary (the
     * object `RegressionEvaluator.evaluate` builds afresh per metric, so
     * the values are bit-identical to three evaluator calls at a third of
-    * the passes); mse is rmse² by definition. Persisted for the duration
-    * (see [[evalClassifier]]) — the summary and the direction aggregate
-    * would otherwise each re-run the GBT transform. */
-  def evalRegressor(scored: DataFrame): DataFrame = {
-    scored.persist()
-    try {
+    * the passes); mse is rmse² by definition. Held in memory for the
+    * duration (see [[evalClassifier]]) — the summary and the direction
+    * aggregate would otherwise each re-run the GBT transform. */
+  def evalRegressor(scored: DataFrame): DataFrame =
+    holdingInMemory(scored) {
       val metrics = new RegressionEvaluator()
         .setLabelCol("target").setPredictionCol("prediction").getMetrics(scored)
       val rmse = metrics.rootMeanSquaredError
@@ -266,8 +265,18 @@ object Pipelines {
         .withColumn("mae", lit(metrics.meanAbsoluteError))
         .withColumn("r2", lit(metrics.r2))
       dir.localCheckpoint(true) // materialize before unpersisting the input
-    } finally scored.unpersist()
-  }
+    }
+
+  /** Runs `f` over `scored` held in memory. A frame the caller cached
+    * stays cached: persisting it again is a no-op, and unpersisting it
+    * would make the caller's next read re-run the model's transform.
+    * Any other frame is persisted for the call only. */
+  private def holdingInMemory[A](scored: DataFrame)(f: => A): A =
+    if (scored.storageLevel != StorageLevel.NONE) f
+    else {
+      scored.persist()
+      try f finally scored.unpersist()
+    }
 
   /** In-plan quality gates for the rows-only ML queries, mirroring the
     * ANN recall gates (SimilarityQueries.recallGated): the metric row —

@@ -57,10 +57,19 @@ object Sources {
     * replaces it instead of duplicating (the reference's check-then-write
     * dedup race, scraper/main.py:69-77, made safe). */
   def writeLanding(df: DataFrame, path: String, dayCol: String = "day"): Unit =
+    overwritePartitions(df, path, dayCol)
+
+  /** The landing and ingest sinks' one write: parquet partitioned by
+    * `partitionCols` under dynamic partition overwrite, so a rerun
+    * replaces exactly the partitions its rows name and leaves the
+    * others. Local paths go through [[NioLocalFileSystem]]: the same
+    * files and permissions, without a forked `chmod` per file. */
+  def overwritePartitions(df: DataFrame, path: String, partitionCols: String*): Unit =
     df.write
       .mode("overwrite")
-      .partitionBy(dayCol)
+      .partitionBy(partitionCols: _*)
       .option("partitionOverwriteMode", "dynamic")
+      .options(NioLocalFileSystem.writeOptions(df.sparkSession))
       .parquet(path)
 
   /** Compaction / write-shaping sink: lay the frame out as UP TO

@@ -252,4 +252,25 @@ class MlSpec extends AnyFunSuite {
     assert(jobs == 0)
     assert(checkpoints(first).nonEmpty && checkpoints(first) == checkpoints(second))
   }
+
+  test("the evaluators keep a caller's cache and release only their own") {
+    import org.apache.spark.storage.StorageLevel
+    val (train, test) = split
+    val (_, score) = Pipelines.trainClassifier(train, maxIter = 3)
+    val reg = Pipelines.trainRegressor(train, maxIter = 3)
+    val scoredC = score(test).cache()
+    val scoredR = reg.transform(test).cache()
+    try {
+      val levels = (scoredC.storageLevel, scoredR.storageLevel)
+      Pipelines.evalClassifier(scoredC)
+      Pipelines.evalRegressor(scoredR)
+      // an eval that unpersisted these would make the caller's next
+      // read (MlAudit's serve after evalRegressor) re-run the transform
+      assert((scoredC.storageLevel, scoredR.storageLevel) == levels)
+      assert(levels == (StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK))
+    } finally { scoredC.unpersist(); scoredR.unpersist() }
+    val plain = reg.transform(test)
+    Pipelines.evalRegressor(plain)
+    assert(plain.storageLevel == StorageLevel.NONE)
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.{HtmlSource, Sources}
+import graft.sources.{HtmlSource, NioLocalFileSystem, Sources}
 
 class SourcesSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -111,6 +111,95 @@ class SourcesSpec extends AnyFunSuite {
     Sources.writeLanding(day1, tmp)
     Sources.writeLanding(day1, tmp) // re-run same day: replaces, no dup
     assert(spark.read.parquet(tmp).count() == 2)
+  }
+
+  test("NioLocalFileSystem gives files and dirs the permissions Hadoop's local filesystem gives") {
+    import java.nio.file.Files
+    import java.nio.file.attribute.PosixFilePermissions
+    import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+    import org.apache.hadoop.fs.permission.FsPermission
+    def init(fs: RawLocalFileSystem) = {
+      fs.initialize(java.net.URI.create("file:///"), new org.apache.hadoop.conf.Configuration())
+      fs
+    }
+    val stock = init(new RawLocalFileSystem)
+    val nio = init(new NioLocalFileSystem.Raw)
+    val tmp = Files.createTempDirectory("graft-niofs")
+    def perms(name: String) = PosixFilePermissions.toString(Files.getPosixFilePermissions(tmp.resolve(name)))
+    for (mode <- Seq("644", "755", "600", "700")) {
+      val m = new FsPermission(Integer.parseInt(mode, 8).toShort)
+      // (file, dir) bits as created through `fs`; the configured umask
+      // (022) leaves these four modes whole
+      def made(fs: RawLocalFileSystem, name: String): (String, String) = {
+        fs.create(new Path(tmp.resolve(s"$name-f$mode").toUri), m, true, 4096,
+          1.toShort, 1L << 20, null).close()
+        assert(fs.mkdirs(new Path(tmp.resolve(s"$name-d$mode").toUri), m))
+        (perms(s"$name-f$mode"), perms(s"$name-d$mode"))
+      }
+      val viaNio = made(nio, "nio")
+      assert(viaNio == made(stock, "stock"), s"mode $mode")
+      assert(viaNio == (m.toString, m.toString), s"mode $mode")
+    }
+    // rwx alone cannot carry the sticky bit: it must take Hadoop's path
+    val sticky = Files.createDirectory(tmp.resolve("sticky"))
+    nio.setPermission(new Path(sticky.toUri), new FsPermission(Integer.parseInt("1755", 8).toShort))
+    assert((Files.getAttribute(sticky, "unix:mode").asInstanceOf[Int] & Integer.parseInt("1000", 8)) != 0)
+  }
+
+  test("startIngest lands the same files, permissions and rows through NioLocalFileSystem as through Hadoop's") {
+    import java.nio.file.{Files, Path}
+    import java.nio.file.attribute.PosixFilePermissions
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.streaming.Ingest
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val dayNs = 86400L * 1000000000L
+    // one batch over 6 days x 3 users, with alerts, an in-batch duplicate and poison
+    val rows = (for (d <- 1L to 6L; u <- 1L to 3L)
+      yield RawEvent(Some(d * 10 + u), Some(d * dayNs), Some(u), "view", Some(150.0 * u + d))) ++
+      Seq(RawEvent(Some(99L), Some(dayNs + 1L), Some(1L), "view", Some(7.0)),
+        RawEvent(Some(98L), None, Some(1L), "view", Some(8.0)))
+    def land(root: Path): Unit = {
+      val src = MemoryStream[RawEvent]
+      src.addData(rows: _*)
+      val q = Ingest.startIngest(src.toDF(), s"$root/landing", s"$root/alerts",
+        trigger = Trigger.AvailableNow(), checkpoint = s"$root/ckpt",
+        quarantinePath = s"$root/deadletter")
+      try {
+        assert(q.awaitTermination(60000), "stream did not finish within 60s")
+        assert(q.exception.isEmpty, s"stream failed: ${q.exception}")
+      } finally q.stop()
+    }
+    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
+    def tree(root: Path): Seq[(String, String)] = {
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.map { p =>
+        (root.relativize(p).toString.replaceAll(uuid, "<uuid>"),
+          PosixFilePermissions.toString(Files.getPosixFilePermissions(p)) +
+            (if (Files.isDirectory(p)) "/" else ""))
+      }.toSeq.sorted finally walk.close()
+    }
+    def table(root: Path, t: String) = spark.read.parquet(s"$root/$t").collect().map(_.toString).sorted.toSeq
+
+    val viaNio = Files.createTempDirectory("graft-ingest-nio")
+    assert(NioLocalFileSystem.writeOptions(spark).nonEmpty)
+    land(viaNio)
+    // a session that names its own fs.file.impl keeps it: the stock run
+    val stock = Files.createTempDirectory("graft-ingest-stock")
+    spark.conf.set("fs.file.impl", classOf[org.apache.hadoop.fs.LocalFileSystem].getName)
+    try {
+      assert(NioLocalFileSystem.writeOptions(spark).isEmpty)
+      land(stock)
+    } finally spark.conf.unset("fs.file.impl")
+    for (t <- Seq("landing", "alerts", "deadletter")) {
+      val files = tree(viaNio.resolve(t))
+      assert(files.exists(_._1.endsWith(".parquet.crc")), s"$t: $files")
+      assert(files == tree(stock.resolve(t)), t)
+      assert(table(viaNio, t) == table(stock, t), t)
+    }
+    assert(table(viaNio, "landing").size == 18)
+    assert(table(viaNio, "alerts").size == 6)
   }
 
   test("qCsvRoundtrip: text write/read returns the parquet source verbatim") {

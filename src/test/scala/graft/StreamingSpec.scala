@@ -825,6 +825,45 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("startIngest forks no process for the files it lands") {
+    // without libhadoop, Hadoop's local filesystem forks a chmod per
+    // file, .crc sidecar and directory it creates: about 4 per landed file
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import scala.jdk.CollectionConverters._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-ingest-forks")
+    val sinks = Seq("landing", "alerts", "deadletter").map(t => s"$tmp/$t")
+    val src = MemoryStream[RawEvent]
+    // one AvailableNow batch over 10 days x 4 users: 40 landed partitions
+    src.addData((for (d <- 1L to 10L; u <- 1L to 4L)
+      yield RawEvent(Some(d * 10 + u), Some(d * DayNs), Some(u), "view", Some(150.0 * u))) :+
+      RawEvent(Some(999L), None, Some(1L), "view", Some(1.0)): _*)
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try {
+      val q = Ingest.startIngest(src.toDF(), sinks(0), sinks(1),
+        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
+        checkpoint = s"$tmp/ckpt", quarantinePath = sinks(2))
+      try {
+        assert(q.awaitTermination(60000), "stream did not finish within 60s")
+        assert(q.exception.isEmpty, s"stream failed: ${q.exception}")
+      } finally q.stop()
+    } finally rec.stop()
+    val dump = tmp.resolve("forks.jfr")
+    rec.dump(dump)
+    rec.close()
+    val commands = RecordingFile.readAllEvents(dump).asScala
+      .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command")).toSeq
+    println(s"[forks] startIngest: ${commands.count(_.contains(s"$tmp/ckpt"))} forks under " +
+      s"the checkpoint, ${commands.size} in the JVM while it ran")
+    val intoSinks = commands.filter(c => sinks.exists(s => c.contains(s)))
+    assert(intoSinks.isEmpty, s"${intoSinks.size} forks, e.g. ${intoSinks.take(3)}")
+    assert(spark.read.parquet(sinks(0)).count() == 40)
+    assert(spark.read.parquet(sinks(1)).count() == 20)
+    assert(spark.read.parquet(sinks(2)).count() == 1)
+  }
+
   test("streaming incremental dedup classifies against the bucketed index like the batch path") {
     import graft.operators.Dedup
     import graft.streaming.DedupStream
