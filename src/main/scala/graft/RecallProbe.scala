@@ -13,13 +13,13 @@ import graft.operators.{ProductQuantization, Similarity}
   * Prints one line per tier: `RECALL <tier> <dir> <mean_recall@5>`.
   * The floors pinned in SimilarityQueries must sit just UNDER the
   * minimum across sf0.001/0.01/0.1, so a quality regression trips the
-  * in-plan gate while fixture-to-fixture variance does not.
+  * in-plan certificate while fixture-to-fixture variance does not.
   *
   * With `--json <path>` as the leading args, instead measures every
-  * recall-gated registered query (the q_ann_* tiers and
+  * recall-certified registered query (the q_ann_* tiers and
   * q_semantic_dedup — the list lives in recallReport, one place) per
   * SF dir through the exact operator paths and
-  * recall definition their in-plan gates use
+  * recall definition their certificates use
   * ([[graft.queries.SimilarityQueries.recallReport]]) and writes one
   * JSON artifact — the per-round `RECALL_r{N}.json` that makes recall
   * drift across rounds diffable:
@@ -83,8 +83,9 @@ object RecallProbe {
     }
   }
 
-  /** The per-round RECALL_r{N}.json artifact: every recall-gated
-    * registered query measured per SF through the gates' own paths. */
+  /** The per-round RECALL_r{N}.json artifact: every recall-certified
+    * registered query measured per SF through the certificates' own
+    * paths. */
   private def writeJsonReport(spark: SparkSession, path: String,
                               dirs: Seq[String]): Unit = {
     val perDir = dirs.map { dir =>

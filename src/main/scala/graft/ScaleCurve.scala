@@ -96,11 +96,7 @@ object ScaleCurve {
     // serialized or spilling leg spends its wall in
     val stageDump = sys.env.get("SPARK_GRAFT_SCALE_STAGES").contains("1")
 
-    val tmp = java.nio.file.Files.createTempDirectory("graft-scalecurve")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      try IoUtil.deleteRecursively(tmp)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }))
+    val tmp = IoUtil.scratchDir("graft-scalecurve")
 
     // ---- replicated fixtures (materialized parquet per factor) ----
     val IdStride = 10000000L

@@ -278,50 +278,58 @@ object Pipelines {
       try f finally scored.unpersist()
     }
 
-  /** In-plan quality gates for the rows-only ML queries, mirroring the
-    * ANN recall gates (SimilarityQueries.recallGated): the metric row —
-    * and every row cross-joined against it — survives only while the
-    * seeded model clears measured floors, so the driver's rows-only
-    * CORRECTNESS count is a live quality gate, not a bare count.
-    *
-    * Floors sit just under the minima measured across sf0.001/0.01/0.1
-    * (maxIter=10, temporalSplit(7), probe run 2026-08-12):
-    * AUC 0.761/0.816/0.818 → floor 0.70; accuracy 0.726/0.745/0.741 →
-    * floor 0.65; directional accuracy 0.665/0.665/0.710 → floor 0.60
-    * (chance ≈ 0.5). R² measured NEGATIVE at every SF (−44.9/−11.1/−0.06):
-    * next-step returns are heavy-tailed, so squared error rewards the
-    * mean-predictor and R² is not a usable quality floor here — the gate
-    * instead checks it is finite and ≤ 1 and leans on directional
-    * accuracy, the metric the reference itself ranks serving output by.
-    * MlSpec asserts the measured metrics clear the floors AND that
-    * sabotaged scored frames (flipped labels / negated predictions)
-    * produce ZERO gated rows. */
+  /** Quality floors of the seeded models, sitting just under the minima
+    * measured across sf0.001/0.01/0.1 (maxIter=10, temporalSplit(7),
+    * probe run 2026-08-12): AUC 0.761/0.816/0.818 → floor 0.70;
+    * accuracy 0.726/0.745/0.741 → floor 0.65; directional accuracy
+    * 0.665/0.665/0.710 → floor 0.60 (chance ≈ 0.5). R² measured NEGATIVE
+    * at every SF (−44.9/−11.1/−0.06): next-step returns are
+    * heavy-tailed, so squared error rewards the mean-predictor and R² is
+    * not a usable quality floor here — `r2_ok` instead checks it is
+    * finite and ≤ 1 and the checks lean on directional accuracy, the
+    * metric the reference itself ranks serving output by. MlSpec asserts
+    * that the measured metrics clear the floors AND that sabotaged scored
+    * frames (flipped labels / negated predictions) fail the gates. */
   val AucFloor = 0.70
   val AccuracyFloor = 0.65
   val DirAccuracyFloor = 0.60
 
-  /** Gate over [[evalClassifier]] output: metric floors plus internal
+  /** Named checks over [[evalClassifier]]'s metric row — ONE definition
+    * that [[classifierGate]] conjoins and the q_ml_classifier certificate
+    * emits as its boolean columns: the metric floors plus internal
     * consistency (confusion cells partition n; n_correct = tp + tn). */
-  def classifierGate: org.apache.spark.sql.Column =
-    col("auc") > AucFloor && col("auc") <= 1.0 &&
-      col("accuracy") >= AccuracyFloor && col("accuracy") <= 1.0 &&
-      col("n") > 0 &&
+  val ClassifierChecks: Seq[(String, Column)] = Seq(
+    "auc_ok" -> (!isnan(col("auc")) && col("auc") > AucFloor && col("auc") <= 1.0),
+    "accuracy_ok" -> (col("accuracy") >= AccuracyFloor && col("accuracy") <= 1.0),
+    "confusion_ok" -> (col("n") > 0 &&
       (col("tp") + col("fp") + col("fn") + col("tn") === col("n")) &&
-      (col("n_correct") === col("tp") + col("tn"))
+      (col("n_correct") === col("tp") + col("tn"))))
 
-  /** Gate over [[evalRegressor]] output: directional-accuracy floor plus
-    * finite error metrics. rmse/mae are allowed to be exactly 0 — a
-    * perfect fit must not read as a failure — and r2 is bounded BELOW by
+  /** Named checks over [[evalRegressor]]'s metric row, conjoined by
+    * [[regressorGate]] and emitted by the q_ml_regressor certificate.
+    * rmse/mae may be exactly 0 (a perfect fit must not read as a
+    * failure) but must be finite, and r2 is bounded BELOW by
     * Double.MinValue so a constant-target holdout's r2 = −Infinity fails
-    * the finiteness claim instead of sneaking past a NaN-only check.
-    * (No mse-vs-rmse² clause: evalRegressor constructs mse AS rmse², so
-    * such a check would be tautological dead code, not a safeguard.) */
-  def regressorGate: org.apache.spark.sql.Column =
-    col("dir_accuracy") >= DirAccuracyFloor && col("dir_accuracy") <= 1.0 &&
-      col("n") > 0 &&
-      !isnan(col("rmse")) && col("rmse") >= 0 &&
-      !isnan(col("mae")) && col("mae") >= 0 &&
-      !isnan(col("r2")) && col("r2") <= 1.0 && col("r2") >= lit(Double.MinValue)
+    * instead of sneaking past a NaN-only check. mae ≤ rmse is a THEOREM
+    * (power-mean inequality) for any unweighted error distribution, so a
+    * failure means the metrics were computed over different populations
+    * (the ε absorbs last-ulp rounding at equality). No mse-vs-rmse²
+    * check: evalRegressor constructs mse AS rmse². */
+  val RegressorChecks: Seq[(String, Column)] = Seq(
+    "dir_ok" -> (col("dir_accuracy") >= DirAccuracyFloor &&
+      col("dir_accuracy") <= 1.0 && col("n") > 0),
+    "err_finite_ok" -> (
+      !isnan(col("rmse")) && col("rmse") >= 0 && col("rmse") < Double.MaxValue &&
+        !isnan(col("mae")) && col("mae") >= 0 && col("mae") < Double.MaxValue),
+    "mae_le_rmse" -> (col("mae") <= col("rmse") + lit(1e-9)),
+    "r2_ok" -> (!isnan(col("r2")) && col("r2") <= 1.0 &&
+      col("r2") >= lit(Double.MinValue)))
+
+  /** TRUE iff every [[ClassifierChecks]] check holds. */
+  def classifierGate: Column = ClassifierChecks.map(_._2).reduce(_ && _)
+
+  /** TRUE iff every [[RegressorChecks]] check holds. */
+  def regressorGate: Column = RegressorChecks.map(_._2).reduce(_ && _)
 
   /** M16: serving post-processing — predicted next value from predicted
     * return, next-step timestamp, ranked output (ml_impl.py:146-156,191). */

@@ -420,8 +420,8 @@ object Similarity {
     * against broadcast centroids), then score exact cosine ONLY within
     * each cell. Work drops from n²/2 to Σ|cell|²/2 (≈ n²/2k balanced) at
     * the cost of missing cross-cell pairs — an APPROXIMATE operator whose
-    * recall the caller must gate (qSemanticDedup gates against the exact
-    * grid join in-plan).
+    * recall the caller must check (q_semantic_dedup certifies it against
+    * the exact grid join in-plan).
     *
     * The intra-cell join is pinned shuffle-hash for the same reason as
     * [[nearDupPairsBlocked]]: AQE would broadcast one side and serialize

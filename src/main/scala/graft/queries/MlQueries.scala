@@ -7,9 +7,9 @@ import graft.ml.Pipelines
 
 /** ML training/eval/serving surface (SURVEY.md §2.10) as verifiable
   * queries. Training metrics are model-dependent, so the GBT queries are
-  * rows-only (driver records a weaker check); the whitelist query (M14,
-  * the reference's train-category filter, ml_impl.py:124-125) is pure
-  * relational and fully oracle-checked.
+  * theorem certificates (boolean invariants the oracle pins to TRUE);
+  * the whitelist query (M14, the reference's train-category filter,
+  * ml_impl.py:124-125) is pure relational and fully oracle-checked.
   */
 object MlQueries {
 
@@ -90,63 +90,6 @@ object MlQueries {
       .orderBy("user_id")
   }
 
-  /** M1-M6: class-weighted GBT direction classifier, temporal split,
-    * AUC + accuracy + confusion counts. Rows-only, but GATED in-plan
-    * (Pipelines.classifierGate): the single metric row vanishes if the
-    * seeded model stops clearing the measured AUC/accuracy floors or the
-    * confusion matrix goes inconsistent, so the driver's spark_rows=1 is
-    * a live quality check. */
-  def qMlClassifier(spark: SparkSession, dir: String): DataFrame =
-    cachedClassifierMetrics(spark, dir).filter(Pipelines.classifierGate)
-
-  /** M6: named, ranked GBT feature importances from the (seeded,
-    * deterministic) classifier — ref classifier.py:96-100 (rows-only:
-    * importances are model internals, not SQL-expressible). Gated twice:
-    * on internal consistency (complete slate, non-negative, sums to 1,
-    * not degenerate-sparse) and on the classifier quality gate — junk
-    * model ⇒ zero rows. */
-  def qMlImportances(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val imp = Pipelines.featureImportances(cachedClassifier(spark, dir))
-      .toDF("feature", "importance")
-    val consistency = imp.agg(
-      count(lit(1)).as("n_imp"),
-      sum(col("importance")).as("sum_imp"),
-      min(col("importance")).as("min_imp"),
-      sum(when(col("importance") > 0, 1).otherwise(0)).as("nz_imp"))
-    imp.crossJoin(broadcast(consistency))
-      .filter(col("n_imp") === Pipelines.AssembledFeatureNames.length &&
-        abs(col("sum_imp") - 1.0) < 1e-6 && col("min_imp") >= 0 &&
-        col("nz_imp") >= 3)
-      .crossJoin(broadcast(gateMarker(
-        cachedClassifierMetrics(spark, dir), Pipelines.classifierGate)))
-      .select(col("feature"), rnd(col("importance"), 6).as("importance"))
-      .orderBy(desc("importance"), col("feature"))
-  }
-
-  /** M9-M12: direction-weighted GBT return regressor, RMSE/MSE/MAE/R² +
-    * directional accuracy. Rows-only but gated in-plan
-    * (Pipelines.regressorGate — directional-accuracy floor; see the gate
-    * Scaladoc for why R² cannot be the floor on this data). */
-  def qMlRegressor(spark: SparkSession, dir: String): DataFrame =
-    cachedRegressorMetrics(spark, dir).filter(Pipelines.regressorGate)
-
-  /** M15-M16: ranked serving output — top predicted next-step returns on
-    * the holdout. Gated on the regressor quality gate: if the model that
-    * produced the ranking stops clearing its floors, the served rows
-    * vanish with it. */
-  def qMlServe(spark: SparkSession, dir: String): DataFrame = {
-    val (_, test) = cachedSplit(spark, dir)
-    // gate the SCORED frame, then rank — the ranking orderBy+limit must
-    // stay the plan's top-level sort (a sort below a join confers no
-    // output ordering, and this query is documented as ranked output)
-    val gated = cachedRegressor(spark, dir).transform(test)
-      .crossJoin(broadcast(gateMarker(
-        cachedRegressorMetrics(spark, dir), Pipelines.regressorGate)))
-      .drop("gate_ok")
-    Pipelines.servePredictions(gated, topK = 20)
-  }
-
   /** The (max train ts, min test ts) pair of the shared 7-day temporal
     * split, as a 1-row broadcastable frame — the split-leakage
     * certificate both metric certs carry. */
@@ -159,51 +102,37 @@ object MlQueries {
   /** THEOREM-CERTIFICATE forms of the four model-metric queries (VERDICT
     * r9 ask #6 — the q_sketch_lean pattern): model metrics are not
     * SQL-oracle-able, but their INVARIANTS are booleans the DuckDB
-    * oracle pins to literal TRUE, which moves these entries from the
-    * driver's rows-only count onto its cell-exact compare. The booleans
-    * are computed from the UNGATED metric frames, so a floor violation
-    * or broken invariant shows up as a FALSE cell (hash mismatch → red),
-    * not as a silently absent row; an empty/degenerate split nulls the
-    * leakage certificate, which mismatches TRUE just the same. The rich
-    * metric rows stay available as [[qMlClassifier]]/[[qMlRegressor]]
-    * (API + MlSpec surface); the registered queries are these. */
+    * oracle pins to literal TRUE, which puts these entries on the
+    * oracle's cell-exact compare. A floor violation or broken invariant
+    * shows up as a FALSE cell (hash mismatch → red), not as an absent
+    * row; an empty/degenerate split nulls the leakage certificate, which
+    * mismatches TRUE just the same.
+    *
+    * M1-M6: class-weighted GBT direction classifier, temporal split:
+    * the split-leakage bound plus [[Pipelines.ClassifierChecks]] (AUC
+    * and accuracy floors, confusion-matrix consistency). */
   def qMlClassifierCert(spark: SparkSession, dir: String): DataFrame =
-    cachedClassifierMetrics(spark, dir)
-      .crossJoin(broadcast(splitBounds(spark, dir)))
-      .select(
-        (col("train_max_ts") < col("test_min_ts")).as("split_leakfree"),
-        (!isnan(col("auc")) && col("auc") > Pipelines.AucFloor &&
-          col("auc") <= 1.0).as("auc_ok"),
-        (col("accuracy") >= Pipelines.AccuracyFloor &&
-          col("accuracy") <= 1.0).as("accuracy_ok"),
-        (col("n") > 0 &&
-          (col("tp") + col("fp") + col("fn") + col("tn") === col("n")) &&
-          (col("n_correct") === col("tp") + col("tn"))).as("confusion_ok"))
+    certificate(cachedClassifierMetrics(spark, dir), spark, dir,
+      Pipelines.ClassifierChecks)
 
-  /** Regressor certificates: the split-leakage bound, the directional-
-    * accuracy floor, finiteness/sign of the error metrics, and mae ≤
-    * rmse — a THEOREM (power-mean inequality) for any unweighted error
-    * distribution, so a FALSE here means the metrics were computed over
-    * different populations (the ε absorbs last-ulp rounding at
-    * equality). */
+  /** M9-M12: direction-weighted GBT return regressor: the split-leakage
+    * bound plus [[Pipelines.RegressorChecks]] (directional-accuracy
+    * floor, finite error metrics, mae ≤ rmse, bounded r2). */
   def qMlRegressorCert(spark: SparkSession, dir: String): DataFrame =
-    cachedRegressorMetrics(spark, dir)
-      .crossJoin(broadcast(splitBounds(spark, dir)))
-      .select(
-        (col("train_max_ts") < col("test_min_ts")).as("split_leakfree"),
-        (col("dir_accuracy") >= Pipelines.DirAccuracyFloor &&
-          col("dir_accuracy") <= 1.0 && col("n") > 0).as("dir_ok"),
-        (!isnan(col("rmse")) && col("rmse") >= 0 && col("rmse") < Double.MaxValue &&
-          !isnan(col("mae")) && col("mae") >= 0 && col("mae") < Double.MaxValue)
-          .as("err_finite_ok"),
-        (col("mae") <= col("rmse") + lit(1e-9)).as("mae_le_rmse"),
-        (!isnan(col("r2")) && col("r2") <= 1.0 &&
-          col("r2") >= lit(Double.MinValue)).as("r2_ok"))
+    certificate(cachedRegressorMetrics(spark, dir), spark, dir,
+      Pipelines.RegressorChecks)
 
-  /** Importances certificates: the feature SLATE is exact (the literal
-    * [[Pipelines.AssembledFeatureNames]], oracle-pinned row for row,
-    * ordered by name — the importance-ranked view stays on
-    * [[qMlImportances]]), plus the non-negativity / sums-to-one /
+  private def certificate(metrics: DataFrame, spark: SparkSession, dir: String,
+                          checks: Seq[(String, org.apache.spark.sql.Column)]): DataFrame =
+    metrics.crossJoin(broadcast(splitBounds(spark, dir)))
+      .select((col("train_max_ts") < col("test_min_ts")).as("split_leakfree") +:
+        checks.map { case (name, check) => check.as(name) }: _*)
+
+  /** M6: named GBT feature importances of the (seeded, deterministic)
+    * classifier — ref classifier.py:96-100. Importances are model
+    * internals, so the certificate pins the feature SLATE exactly (the
+    * literal [[Pipelines.AssembledFeatureNames]], oracle-pinned row for
+    * row, ordered by name), plus the non-negativity / sums-to-one /
     * completeness invariants as TRUE-pinned booleans. Cross-joined
     * against the classifier quality gate: a junk model zeroes the rows
     * (mismatch vs the oracle's 9). */
@@ -227,13 +156,13 @@ object MlQueries {
       .orderBy("feature")
   }
 
-  /** Serving certificates over the SAME top-20 [[qMlServe]] emits: rank
-    * 1..20 exact, every served row future-dated (ts ≥ the split cutoff)
-    * and category-whitelisted (event_type seen by the regressor's
-    * train-fitted StringIndexer — the P8 drop-unseen rule; the fit set
-    * is the nonzero-target train rows), prediction finite. Regressor
-    * quality gate kept: a junk model empties the result (0 vs 20 rows →
-    * red). */
+  /** M15-M16: serving certificates over the ranked top-20 predicted
+    * next-step returns on the holdout: rank 1..20 exact, every served
+    * row future-dated (ts ≥ the split cutoff) and category-whitelisted
+    * (event_type seen by the regressor's train-fitted StringIndexer —
+    * the P8 drop-unseen rule; the fit set is the nonzero-target train
+    * rows), prediction finite. Gated on the regressor quality gate: a
+    * junk model empties the result (0 vs 20 rows → red). */
   def qMlServeCert(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val (train, test) = cachedSplit(spark, dir)

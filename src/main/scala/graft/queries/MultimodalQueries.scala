@@ -94,28 +94,10 @@ object MultimodalQueries {
     * (the driver's sf tables are text-only). */
   private val fixtureMemo = new SessionMemo[String, String]("fixtureMemo")
 
-  // SessionMemo eviction drops only the map entry, so fixture temp dirs
-  // must be swept at JVM exit — through ONE static hook draining a shared
-  // queue, not one hook per fixture: a long-lived process creating many
-  // sessions would otherwise accumulate hooks (and their retained dirs)
-  // unboundedly (ADVICE r4)
-  private val fixtureDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      var tmp = fixtureDirs.poll()
-      while (tmp != null) {
-        try graft.IoUtil.deleteRecursively(tmp)
-        catch { case scala.util.control.NonFatal(_) => () }
-        tmp = fixtureDirs.poll()
-      }
-    }))
-  }
-
   def fixturePath(spark: SparkSession, dir: String): String =
     fixtureMemo.getOrElseUpdate(spark, dir) {
       import spark.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("graft-media")
-      fixtureDirs.add(tmp)
+      val tmp = graft.IoUtil.scratchDir("graft-media")
       val path = tmp.toString + "/media"
       (0L until NumImages.toLong).map(id => Multimodal.MediaRecord(id, mimeFor(id), imageBytes(id)))
         .toDF().repartition(4).write.mode("overwrite").parquet(path)

@@ -241,8 +241,9 @@ object SimilarityQueries {
   private val quantMemo =
     new SessionMemo[(String, Int), org.apache.spark.ml.clustering.KMeansModel]("quantMemo")
 
-  /** The exact top-5 ground truth both recall gates compare against —
-    * computed once per (session, dir) and kept cached (100 rows). */
+  /** The exact top-5 ground truth every recall certificate compares
+    * against — computed once per (session, dir) and kept cached (100
+    * rows). */
   private val bruteMemo = new SessionMemo[String, DataFrame]("bruteMemo")
 
   private def cachedQuantizer(spark: SparkSession, dir: String, nlist: Int) =
@@ -258,50 +259,23 @@ object SimilarityQueries {
       df
     }
 
-  // SessionMemo eviction drops only the map entry, so index scratch dirs
-  // must be swept at JVM exit — ONE static hook draining a shared queue
-  // (the MultimodalQueries.fixtureDirs discipline, ADVICE r4): repeated
-  // sessions would otherwise accumulate full parquet copies of the
-  // encoded corpus under /tmp unboundedly
-  private val indexTmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      var tmp = indexTmpDirs.poll()
-      while (tmp != null) {
-        try graft.IoUtil.deleteRecursively(tmp)
-        catch { case scala.util.control.NonFatal(_) => () }
-        tmp = indexTmpDirs.poll()
-      }
-    }))
-  }
-
-  private def newIndexTmp(prefix: String): String = {
-    val tmp = java.nio.file.Files.createTempDirectory(prefix)
-    indexTmpDirs.add(tmp)
-    tmp.toString + "/idx"
-  }
-
   /** Materialized IVF index written once per (session, dir) — the memo
-    * stores the path; the files are scratch, swept by the shared
-    * shutdown hook. */
+    * stores the path; the files are scratch, swept at JVM exit
+    * ([[graft.IoUtil.scratchDir]]): repeated sessions would otherwise
+    * accumulate full parquet copies of the encoded corpus under /tmp. */
   private val ivfIndexMemo = new SessionMemo[String, String]("ivfIndexMemo")
 
   private def cachedIvfIndex(spark: SparkSession, dir: String): String =
     ivfIndexMemo.getOrElseUpdate(spark, dir) {
-      val path = newIndexTmp("graft-ivf-index")
+      val path = graft.IoUtil.scratchDir("graft-ivf-index").toString + "/idx"
       Similarity.writeIvfIndex(
         Tables.embeddings(spark, dir),
         cachedQuantizer(spark, dir, cachedParams(spark, dir).nlist), path)
       path
     }
 
-  /** Per-query recall@k of an approximate ANN result against the exact
-    * brute-force result computed in the same plan, gated on the mean:
-    * if mean recall over all queries drops below `floor`, EVERY row is
-    * filtered out, so the driver's rows-only check (spark_rows = number
-    * of queries) becomes a hard recall gate rather than a bare count. */
   /** Per-query recall@k of `approx` against `exact` ground truth — ONE
-    * definition shared by the in-plan gates below and by
+    * definition shared by the recall certificates below and by
     * [[graft.RecallProbe]] (the harness the floor constants are measured
     * with), so the measurement and the enforcement cannot drift. */
   private[graft] def perQueryRecall(approx: DataFrame, exact: DataFrame): DataFrame =
@@ -312,18 +286,14 @@ object SimilarityQueries {
       .agg(rnd(sum(coalesce(col("hit"), lit(0))).cast("double") / count(lit(1)), 4)
         .as("recall_at_5"))
 
-  /** THEOREM-CERTIFICATE form of a recall gate (VERDICT r12 ask #4 —
-    * the pattern that moved the 4 ML metric rows onto the driver's
-    * cell-exact compare in r10): measured recall is data-dependent so
-    * it cannot be hashed against a constant, but its INVARIANTS can —
-    * one row of (n_queries, floor_pct, recall_ok) that a FROM-less
-    * DuckDB oracle pins to literals. Computed from the UNGATED
-    * per-query recall frame, so a floor violation shows up as a FALSE
-    * cell (hash mismatch → driver red), not as silently absent rows;
-    * the rich per-query surface stays available as
-    * [[qAnnLsh]]/[[qAnnIvf]]/… (API + SimilaritySpec floor asserts),
-    * and the measured values themselves ship per round in
-    * `RECALL_r{N}.json`. floor_pct is an exact integer
+  /** THEOREM-CERTIFICATE form of a recall floor (the pattern the ML
+    * metric certificates use): measured recall is data-dependent so it
+    * cannot be hashed against a constant, but its INVARIANTS can — one
+    * row of (n_queries, floor_pct, recall_ok) that a FROM-less DuckDB
+    * oracle pins to literals. A floor violation shows up as a FALSE
+    * cell (a hash mismatch against the oracle), not as absent rows; the
+    * measured values themselves ship per round in `RECALL_r{N}.json`
+    * ([[recallReport]]). floor_pct is an exact integer
     * (round(100·floor)) — no double in the certificate row, the
     * q_ks_test lesson. */
   private[graft] def recallCert(approx: DataFrame, exact: DataFrame,
@@ -342,34 +312,17 @@ object SimilarityQueries {
        |  CAST(${math.round(floor * 100)} AS BIGINT) AS floor_pct,
        |  TRUE AS recall_ok""".stripMargin
 
-  private def recallGated(approx: DataFrame, exact: DataFrame, floor: Double): DataFrame = {
-    val perQuery = perQueryRecall(approx, exact)
-    // the gate scalar comes back as a broadcast — no global window
-    val gate = perQuery.agg(avg(col("recall_at_5")).as("mean_recall"))
-    perQuery.crossJoin(broadcast(gate))
-      .filter(col("mean_recall") >= floor)
-      .select(col("query_id"), col("recall_at_5"))
-      .orderBy("query_id")
-  }
-
-  /** LSH-bucketed ANN (8 hyperplanes → 256 buckets, multi-probe h≤3 →
-    * 93/256 buckets probed ≈ 36% of the corpus): the 100 TB path.
-    * Parameters chosen by measurement — best recall per probed fraction
-    * on this embedding distribution (recall@5 ≈ 0.55 vs 0.46 for
-    * 4-plane/h≤1 at the same probe cost). Emits per-query recall@5
-    * against brute force computed in-plan; the whole result vanishes if
-    * mean recall < [[LshRecallFloor]], so the driver's rows-only CORRECTNESS entry is
-    * a live recall gate (the serving query is Similarity.lshTopK itself
-    * — this is its quality harness). */
-  def qAnnLsh(spark: SparkSession, dir: String): DataFrame =
-    recallGated(lshApprox(spark, dir), cachedBruteTop5(spark, dir),
-      floor = LshRecallFloor)
-
-  /** Registered certificate form of [[qAnnLsh]]. */
+  /** q_ann_lsh: recall certificate of the LSH-bucketed ANN, the 100 TB
+    * path (the serving query is Similarity.lshTopK itself — this is its
+    * quality harness). */
   def qAnnLshCert(spark: SparkSession, dir: String): DataFrame =
     recallCert(lshApprox(spark, dir), cachedBruteTop5(spark, dir),
       floor = LshRecallFloor)
 
+  /** 8 hyperplanes → 256 buckets, multi-probe h≤3 → 93/256 buckets
+    * probed ≈ 36% of the corpus. Parameters chosen by measurement — best
+    * recall per probed fraction on this embedding distribution
+    * (recall@5 ≈ 0.55 vs 0.46 for 4-plane/h≤1 at the same probe cost). */
   private def lshApprox(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     Similarity.lshTopK(emb, emb.filter(col("vec_id") < AnnQueryIdBound), 5,
@@ -379,24 +332,20 @@ object SimilarityQueries {
   /** Recall floors sit just under the MINIMUM measured mean recall@5
     * across sf0.001/0.01/0.1 (probe run 2026-08-13 with the
     * corpus-scaled [[annParams]]: LSH 0.54-0.62, IVF 0.64-0.77), so a
-    * real quality regression trips the gate while fixture-to-fixture
-    * variance does not. Asserted in SimilaritySpec; the measurements
-    * live in RECALL_r{N}.json. */
+    * real quality regression trips the certificate while
+    * fixture-to-fixture variance does not. Asserted in SimilaritySpec;
+    * the measurements live in RECALL_r{N}.json. IVF, probing a quarter
+    * of its cells, must clear a higher floor than LSH. */
   val LshRecallFloor = 0.45
   val IvfRecallFloor = 0.58
 
-  /** IVF ANN against the memoized fit-once quantizer, probes ranked by
-    * the quantizer's own Euclidean metric. Same in-plan recall gate;
-    * IVF probing 4/16 cells must clear a higher floor than LSH. */
-  def qAnnIvf(spark: SparkSession, dir: String): DataFrame =
-    recallGated(ivfApprox(spark, dir), cachedBruteTop5(spark, dir),
-      floor = IvfRecallFloor)
-
-  /** Registered certificate form of [[qAnnIvf]]. */
+  /** q_ann_ivf: recall certificate of the in-memory IVF ANN. */
   def qAnnIvfCert(spark: SparkSession, dir: String): DataFrame =
     recallCert(ivfApprox(spark, dir), cachedBruteTop5(spark, dir),
       floor = IvfRecallFloor)
 
+  /** IVF ANN against the memoized fit-once quantizer, probes ranked by
+    * the quantizer's own Euclidean metric. */
   private def ivfApprox(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val p = cachedParams(spark, dir)
@@ -404,21 +353,17 @@ object SimilarityQueries {
       cachedQuantizer(spark, dir, p.nlist), p.nprobe, "vec_id", "embedding")
   }
 
-  /** The MATERIALIZED IVF path as a declared query: the index is written
-    * once per (session, dir) partitioned by cell, probes prune at
-    * file-listing time (PartitionFilters — asserted in SimilaritySpec),
-    * and the result carries the same recall gate as the in-memory path.
-    * This is the layout the 100 TB design statement promises — a probe
-    * reads nprobe/nlist of the files, not a filtered full scan. */
-  def qAnnIvfIndexed(spark: SparkSession, dir: String): DataFrame =
-    recallGated(ivfIndexedApprox(spark, dir), cachedBruteTop5(spark, dir),
-      floor = IvfRecallFloor)
-
-  /** Registered certificate form of [[qAnnIvfIndexed]]. */
+  /** q_ann_ivf_indexed: recall certificate of the MATERIALIZED IVF
+    * path, under the same floor as the in-memory path. */
   def qAnnIvfIndexedCert(spark: SparkSession, dir: String): DataFrame =
     recallCert(ivfIndexedApprox(spark, dir), cachedBruteTop5(spark, dir),
       floor = IvfRecallFloor)
 
+  /** The index is written once per (session, dir) partitioned by cell,
+    * and probes prune at file-listing time (PartitionFilters — asserted
+    * in SimilaritySpec). This is the layout the 100 TB design statement
+    * promises — a probe reads nprobe/nlist of the files, not a filtered
+    * full scan. */
   private def ivfIndexedApprox(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val p = cachedParams(spark, dir)
@@ -449,7 +394,7 @@ object SimilarityQueries {
   private def cachedPqIndex(spark: SparkSession,
                             dir: String): (ProductQuantization.PqModel, DataFrame) =
     pqIndexMemo.getOrElseUpdate(spark, dir) {
-      val path = newIndexTmp("graft-pq-index")
+      val path = graft.IoUtil.scratchDir("graft-pq-index").toString + "/idx"
       ProductQuantization.writePqIndex(
         Tables.embeddings(spark, dir), cachedPqModel(spark, dir), path)
       ProductQuantization.readPqIndex(spark, path)
@@ -464,21 +409,16 @@ object SimilarityQueries {
     * 2026-08-13). */
   val PqRecallFloor = 0.83
 
-  /** Product-quantization ANN (16 subspaces × 16 centroids → 4-bit
-    * codes, 32× compression of the 64-float embeddings) with exact
-    * top-50 rerank, recall-gated@5 against the in-plan brute-force
-    * ground truth like the other ANN tiers. The ADC scan reads codes
-    * only; the rerank joins ≤ |q|·50 candidates back to full vectors
-    * ([[ProductQuantization.pqTopK]]). */
-  def qAnnPq(spark: SparkSession, dir: String): DataFrame =
-    recallGated(pqApprox(spark, dir), cachedBruteTop5(spark, dir),
-      floor = PqRecallFloor)
-
-  /** Registered certificate form of [[qAnnPq]]. */
+  /** q_ann_pq: recall certificate of the product-quantization ANN. */
   def qAnnPqCert(spark: SparkSession, dir: String): DataFrame =
     recallCert(pqApprox(spark, dir), cachedBruteTop5(spark, dir),
       floor = PqRecallFloor)
 
+  /** Product-quantization ANN (16 subspaces × 16 centroids → 4-bit
+    * codes, 32× compression of the 64-float embeddings) with exact
+    * rerank. The ADC scan reads codes only; the rerank joins
+    * ≤ |q|·rerank candidates back to full vectors
+    * ([[ProductQuantization.pqTopK]]). */
   private def pqApprox(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val (model, codes) = cachedPqIndex(spark, dir)
@@ -517,9 +457,8 @@ object SimilarityQueries {
       // persisted PARTITIONED BY cell index layout. Partition count
       // tracks the data grain (~500 codes per block, cores-capped),
       // the cachedDocTokens rule.
-      val nVecs = Tables.embeddings(spark, dir).count()
       val parts = math.max(1, math.min(
-        math.ceil(nVecs / 500.0).toInt,
+        math.ceil(corpusCount(spark, dir) / 500.0).toInt,
         spark.sparkContext.defaultParallelism))
       val df = ProductQuantization.ivfPqCellCodes(
         Tables.embeddings(spark, dir),
@@ -530,24 +469,19 @@ object SimilarityQueries {
       df
     }
 
-  /** The IVF-PQ COMPOSED tier as a registered, recall-gated query — the
-    * two-level shape the 100 TB design statement promises (coarse probe
-    * prunes to nprobe/nlist cells, ADC scores only the probed cells'
-    * codes, shared exact-rerank tail): previously API + spec only
-    * ([[ProductQuantization.ivfPqTopK]], SimilaritySpec two-level
-    * brute-force identity); registering it puts the composition under
-    * the same per-round recall measurement as its two components.
-    * Probes the memoized cell-keyed code table, as a production caller
-    * would probe the persisted cell-partitioned codes. */
-  def qAnnIvfPq(spark: SparkSession, dir: String): DataFrame =
-    recallGated(ivfPqApprox(spark, dir), cachedBruteTop5(spark, dir),
-      floor = IvfPqRecallFloor)
-
-  /** Registered certificate form of [[qAnnIvfPq]]. */
+  /** q_ann_ivfpq: recall certificate of the IVF-PQ COMPOSED tier, which
+    * puts the composition under the same per-round recall measurement
+    * as its two components. */
   def qAnnIvfPqCert(spark: SparkSession, dir: String): DataFrame =
     recallCert(ivfPqApprox(spark, dir), cachedBruteTop5(spark, dir),
       floor = IvfPqRecallFloor)
 
+  /** The two-level shape the 100 TB design statement promises: the
+    * coarse probe prunes to nprobe/nlist cells, ADC scores only the
+    * probed cells' codes, and the exact-rerank tail is shared
+    * ([[ProductQuantization.ivfPqTopK]]). Probes the memoized
+    * cell-keyed code table, as a production caller would probe the
+    * persisted cell-partitioned codes. */
   private def ivfPqApprox(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val p = cachedParams(spark, dir)
@@ -569,25 +503,14 @@ object SimilarityQueries {
     * as [[LshRecallFloor]] (probe run 2026-08-13). */
   val SemanticRecallFloor = 0.79
 
-  /** Semantic (embedding-space) dedup, SemDeDup-shaped: same-cell exact
-    * cosine pairs at τ=0.45 via the memoized quantizer, then keep = "no
-    * smaller-id semantic duplicate" (the min-id representative of each
-    * direct dup relation survives). Emits one row per vector with its
-    * keep flag, GATED on pair recall against the exact blocked grid join
-    * computed in the same plan: if the cell blocking misses too many
-    * true pairs, every row vanishes and the driver's rows-only check
-    * fails — same contract as the ANN recall gates. */
-  def qSemanticDedup(spark: SparkSession, dir: String): DataFrame =
-    semanticDedupGated(spark, dir, SemanticRecallFloor)
-
-  /** Registered certificate form of [[qSemanticDedup]] (VERDICT r12 ask
-    * #4): computed over the UNGATED per-vector frame with the RAW
-    * pair-recall (a 4-dp-rounded recall could certify TRUE on a value
-    * the unrounded gate rejects — review r13), so a recall violation
-    * flips `recall_ok` to FALSE instead of vanishing the rows.
-    * `coverage_ok` pins the partition property (one output row per
-    * corpus vector); `kept_bounded` pins 1 ≤ kept ≤ n (at least every
-    * dup relation's min-id representative survives). */
+  /** q_semantic_dedup: certificate of the semantic (embedding-space)
+    * dedup over [[semanticRows]], with the RAW pair-recall (a
+    * 4-dp-rounded recall could certify TRUE on a value under the
+    * floor), so a recall violation flips
+    * `recall_ok` to FALSE. `coverage_ok` pins the partition property
+    * (one output row per corpus vector); `kept_bounded` pins
+    * 1 ≤ kept ≤ n (at least every dup relation's min-id representative
+    * survives). */
   def qSemanticDedupCert(spark: SparkSession, dir: String): DataFrame = {
     val nVecs = Tables.embeddings(spark, dir).agg(count(lit(1)).as("n_vecs"))
     semanticRows(spark, dir)
@@ -603,11 +526,10 @@ object SimilarityQueries {
   }
 
   /** The UNROUNDED semantic-dedup pair-recall scalar (one row,
-    * `pair_recall`) — ONE definition shared by the gate, the
-    * certificate and [[recallReport]], so measurement and enforcement
-    * cannot drift (the recallCert discipline; review r13 found three
-    * hand-mirrored copies). No exact pairs at this SF ⇒ recall is
-    * vacuously 1 (gate open, nothing to miss). */
+    * `pair_recall`) — ONE definition shared by the certificate and
+    * [[recallReport]], so measurement and enforcement cannot drift (the
+    * recallCert discipline: hand-mirrored copies drift). No exact pairs
+    * at this SF ⇒ recall is vacuously 1 (nothing to miss). */
   private def semanticPairRecall(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val p = cachedParams(spark, dir)
@@ -619,12 +541,12 @@ object SimilarityQueries {
       .agg(coalesce(avg(coalesce(col("hit"), lit(0))), lit(1.0)).as("pair_recall"))
   }
 
-  /** Ungated per-vector keep/drop frame with the RAW pair-recall column
-    * — the single source both the gate and the certificate filter or
-    * aggregate (the rounded surface is applied only at the gated API's
-    * output, so a certificate can never certify on a rounded-up
-    * recall). */
-  private def semanticRows(spark: SparkSession, dir: String): DataFrame = {
+  /** SemDeDup-shaped per-vector keep/drop frame: same-cell exact cosine
+    * pairs at τ=0.45 via the memoized quantizer, then keep = "no
+    * smaller-id semantic duplicate" (the min-id representative of each
+    * direct dup relation survives). One row per vector with its `kept`
+    * flag and the RAW pair-recall against the exact blocked grid join. */
+  private[graft] def semanticRows(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val p = cachedParams(spark, dir)
     val sem = Similarity.semanticDedupPairs(emb, 0.45,
@@ -636,17 +558,6 @@ object SimilarityQueries {
       .select(col("vec_id"), col("dup").isNull.cast("int").as("kept"),
         col("pair_recall"))
   }
-
-  /** Floor-parameterized body so the spec can sabotage the gate (an
-    * unreachable floor must zero the result). The gate compares the
-    * UNROUNDED recall; rounding happens only on the emitted column. */
-  private[graft] def semanticDedupGated(spark: SparkSession, dir: String,
-                                        floor: Double): DataFrame =
-    semanticRows(spark, dir)
-      .filter(col("pair_recall") >= floor)
-      .select(col("vec_id"), col("kept"),
-        rnd(col("pair_recall"), 4).as("pair_recall"))
-      .orderBy("vec_id")
 
   /** Cells / per-cell width for [[qClusterSample]] — interpolated into
     * BOTH engines so they cannot drift. */
@@ -688,17 +599,17 @@ object SimilarityQueries {
 
   /** One measured-recall row: registered query name, measured mean
     * recall (recall@5 for the ANN tiers, pair recall for semantic
-    * dedup), the floor its in-plan gate enforces, and the corpus/query
+    * dedup), the floor its certificate enforces, and the corpus/query
     * sizes the measurement ran at. */
   case class RecallRow(query: String, recall: Double, floor: Double,
                        corpusRows: Long, queryRows: Long)
 
-  /** Measured recall of every recall-gated registered query over one SF
-    * dir, via the SAME operator paths and [[perQueryRecall]] definition
-    * the in-plan gates use — the numbers behind the floor constants,
-    * emitted per round as `RECALL_r{N}.json` by [[graft.RecallProbe]]
-    * so recall drift across rounds is diffable instead of living in
-    * NOTES prose (VERDICT r8 ask #4). */
+  /** Measured recall of every recall-certified registered query over one
+    * SF dir, via the SAME operator paths and [[perQueryRecall]]
+    * definition the certificates use — the numbers behind the floor
+    * constants, emitted per round as `RECALL_r{N}.json` by
+    * [[graft.RecallProbe]] so recall drift across rounds is diffable
+    * instead of living in prose. */
   def recallReport(spark: SparkSession, dir: String): Seq[RecallRow] = {
     val emb = Tables.embeddings(spark, dir)
     val corpus = corpusCount(spark, dir)
@@ -800,11 +711,9 @@ object SimilarityQueries {
     "q_embedding_decontam" -> qEmbeddingDecontam _,
     "q_embedding_neardup" -> qEmbeddingNeardup _,
     "q_ann_bruteforce" -> qAnnBruteforce _,
-    // the 6 recall-gated entries are registered as their CERTIFICATE
-    // forms (constant-shape oracles → driver hash compare; VERDICT r12
-    // ask #4) — the rich per-query/per-vector surfaces remain the
-    // qAnnLsh/…/qSemanticDedup API + SimilaritySpec floor asserts, and
-    // the measured values ship per round in RECALL_r{N}.json
+    // the 6 recall-floored entries are CERTIFICATES (constant-shape
+    // oracles, hash-compared); the measured values ship per round in
+    // RECALL_r{N}.json
     "q_ann_lsh" -> qAnnLshCert _,
     "q_ann_ivf" -> qAnnIvfCert _,
     "q_ann_ivf_indexed" -> qAnnIvfIndexedCert _,
@@ -882,8 +791,8 @@ object SimilarityQueries {
     // certificate rows pinned to literals (the ML-cert precedent):
     // n_queries is [[AnnQueryIdBound]] at every SF (vec_id bound over
     // ≥ 500-vector fixtures — the bound lives ONCE and is interpolated
-    // into both engines), floor_pct the exact integer twin of the gate
-    // floor
+    // into both engines), floor_pct the exact integer twin of the
+    // recall floor
     "q_ann_lsh" -> recallCertSql(LshRecallFloor),
     "q_ann_ivf" -> recallCertSql(IvfRecallFloor),
     "q_ann_ivf_indexed" -> recallCertSql(IvfRecallFloor),

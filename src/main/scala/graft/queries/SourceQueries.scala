@@ -26,20 +26,6 @@ object SourceQueries {
     * cost itself is visible in the bench's cold/warmup accounting. */
   private val compactedMemo = new SessionMemo[String, String]("compactedMemo")
 
-  // same sweep discipline as MultimodalQueries' fixture dirs: ONE static
-  // shutdown hook draining a shared queue (not one hook per write)
-  private val compactedDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      var tmp = compactedDirs.poll()
-      while (tmp != null) {
-        try graft.IoUtil.deleteRecursively(tmp)
-        catch { case scala.util.control.NonFatal(_) => () }
-        tmp = compactedDirs.poll()
-      }
-    }))
-  }
-
   private val NFiles = 8
 
   /** Sink → source roundtrip over the compaction layout: write UP TO
@@ -49,8 +35,7 @@ object SourceQueries {
     * everything. Oracle = the source table verbatim. */
   def qCompactionRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val out = compactedMemo.getOrElseUpdate(spark, dir) {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-compaction")
-      compactedDirs.add(tmp)
+      val tmp = graft.IoUtil.scratchDir("graft-compaction")
       val path = tmp.toString + "/events"
       Sources.writeCompacted(
         Tables.events(spark, dir).select("event_id", "ts", "user_id", "event_type", "value"),
@@ -78,9 +63,9 @@ object SourceQueries {
   /** The bucketed (orders, customer) catalog tables for
     * [[qBucketedJoin]], written once per (session, dir) — the
     * cachedCorpusIndex pattern verbatim: per-JVM unique names, temp dirs
-    * swept by the shared shutdown hook, builds serialized because they
-    * side-effect the catalog. Each table is repartitioned onto its
-    * bucket column BEFORE the write — bucketBy hashing and
+    * swept at JVM exit, builds serialized (by the memo's build lock)
+    * because they side-effect the catalog. Each table is repartitioned
+    * onto its bucket column BEFORE the write — bucketBy hashing and
     * repartition() hashing are the same HashPartitioning, so every
     * writer task holds exactly one bucket's rows and the layout is one
     * file per bucket (many small files per bucket is the classic
@@ -89,26 +74,23 @@ object SourceQueries {
   private val bucketSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   private def cachedBucketedTables(spark: SparkSession, dir: String): (String, String) =
-    bucketSeq.synchronized {
-      bucketMemo.getOrElseUpdate(spark, dir) {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-bucketed")
-        compactedDirs.add(tmp)
-        val n = bucketSeq.incrementAndGet()
-        def writeBucketed(df: DataFrame, cols: Seq[String], key: String,
-                          name: String, path: String): String = {
-          df.select(cols.map(col): _*)
-            .repartition(NBuckets, col(key))
-            .write.format("parquet").bucketBy(NBuckets, key).sortBy(key)
-            .option("path", path).saveAsTable(name)
-          name
-        }
-        (writeBucketed(Tables.orders(spark, dir),
-            Seq("o_orderkey", "o_custkey", "o_totalprice"), "o_custkey",
-            s"graft_orders_bkt_$n", tmp.toString + "/orders"),
-          writeBucketed(Tables.customer(spark, dir),
-            Seq("c_custkey", "c_mktsegment"), "c_custkey",
-            s"graft_customer_bkt_$n", tmp.toString + "/customer"))
+    bucketMemo.getOrElseUpdate(spark, dir) {
+      val tmp = graft.IoUtil.scratchDir("graft-bucketed")
+      val n = bucketSeq.incrementAndGet()
+      def writeBucketed(df: DataFrame, cols: Seq[String], key: String,
+                        name: String, path: String): String = {
+        df.select(cols.map(col): _*)
+          .repartition(NBuckets, col(key))
+          .write.format("parquet").bucketBy(NBuckets, key).sortBy(key)
+          .option("path", path).saveAsTable(name)
+        name
       }
+      (writeBucketed(Tables.orders(spark, dir),
+          Seq("o_orderkey", "o_custkey", "o_totalprice"), "o_custkey",
+          s"graft_orders_bkt_$n", tmp.toString + "/orders"),
+        writeBucketed(Tables.customer(spark, dir),
+          Seq("c_custkey", "c_mktsegment"), "c_custkey",
+          s"graft_customer_bkt_$n", tmp.toString + "/customer"))
     }
 
   /** Bucketed co-located fact×dim join on the oracle gate (the spec-only
@@ -154,8 +136,7 @@ object SourceQueries {
       write: (DataFrame, String) => Unit,
       read: String => DataFrame): DataFrame = {
     val out = memo.getOrElseUpdate(spark, dir) {
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft-$prefix")
-      compactedDirs.add(tmp)
+      val tmp = graft.IoUtil.scratchDir(s"graft-$prefix")
       val path = tmp.toString + "/events"
       write(Tables.events(spark, dir)
         .select("event_id", "ts", "user_id", "event_type", "value"), path)
@@ -277,8 +258,7 @@ object SourceQueries {
     * mismatch — a loud failure, not a silent wrong answer. */
   def qValueRecon(spark: SparkSession, dir: String): DataFrame = {
     val out = reconMemo.getOrElseUpdate(spark, dir) {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-recon")
-      compactedDirs.add(tmp)
+      val tmp = graft.IoUtil.scratchDir("graft-recon")
       val path = tmp.toString + "/events"
       val ev = Tables.events(spark, dir)
         .withColumn("value_micros", expr("CAST(round(value * 1000000) AS LONG)"))

@@ -272,41 +272,24 @@ object TextDedup {
   /** The bucketed corpus index for [[qDedupIndexed]], built once per
     * (session, dir): Dedup.writeCorpusIndex over the same doc_id < 60
     * corpus slice q_dedup_incremental derives inline. The value is the
-    * index NAME (catalog tables); data lives in a temp dir swept by the
-    * shared shutdown hook. A per-JVM counter keeps names unique across
-    * sessions sharing one external catalog. */
+    * index NAME (catalog tables); data lives in a temp dir swept at JVM
+    * exit ([[graft.IoUtil.scratchDir]]). A per-JVM counter keeps names
+    * unique across sessions sharing one external catalog. */
   private val indexMemo = new SessionMemo[String, String]("indexMemo")
   private val indexSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val indexDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      var tmp = indexDirs.poll()
-      while (tmp != null) {
-        try graft.IoUtil.deleteRecursively(tmp)
-        catch { case scala.util.control.NonFatal(_) => () }
-        tmp = indexDirs.poll()
-      }
-    }))
-  }
 
+  // Catalog lifetime: the in-memory session catalog dies with the JVM,
+  // so table metadata cannot outlive the exit sweep of the backing
+  // temp dir. The memo's build lock serializes this side-effecting
+  // build, so a racing caller never writes a second set of tables.
   private def cachedCorpusIndex(spark: SparkSession, dir: String): String =
-    // synchronized: TrieMap.getOrElseUpdate may evaluate a racing
-    // builder twice, and THIS builder is side-effecting (it writes four
-    // catalog tables + a temp dir — the loser's tables would leak).
-    // Builds are rare (once per (session, dir)), so serializing them
-    // costs nothing. Catalog lifetime: the in-memory session catalog
-    // dies with the JVM, so table metadata cannot outlive the shutdown
-    // hook that sweeps the backing temp dirs.
-    indexSeq.synchronized {
-      indexMemo.getOrElseUpdate(spark, dir) {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-incr-index")
-        indexDirs.add(tmp)
-        val name = s"graft_incr_idx_${indexSeq.incrementAndGet()}"
-        Dedup.writeCorpusIndex(
-          Tables.documents(spark, dir).filter(col("doc_id") < 60),
-          name, tmp.toString)
-        name
-      }
+    indexMemo.getOrElseUpdate(spark, dir) {
+      val tmp = graft.IoUtil.scratchDir("graft-incr-index")
+      val name = s"graft_incr_idx_${indexSeq.incrementAndGet()}"
+      Dedup.writeCorpusIndex(
+        Tables.documents(spark, dir).filter(col("doc_id") < 60),
+        name, tmp.toString)
+      name
     }
 
   /** [[qDedupIncremental]]'s artifact-probing twin: the same batch

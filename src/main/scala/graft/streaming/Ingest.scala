@@ -216,27 +216,6 @@ object Ingest {
       }
   }
 
-  /** ST3 on the Spark 4 arbitrary-state v2 API ([[statefulPctAlerts]]'s
-    * modern twin): `transformWithState` with a typed [[PctAlertProcessor]]
-    * — per-key `ValueState` replaces raw GroupState, and state TTL is
-    * DECLARATIVE (`TTLConfig`) instead of hand-rolled timer arithmetic.
-    * Requires the RocksDB state store provider.
-    *
-    * `ttl = Some(d)` runs in processing-time mode with per-key TTL (the
-    * production form); `None` runs timeless — note that processing-time
-    * mode schedules micro-batches continuously (time always advances),
-    * so `processAllAvailable`-style test drivers should use `None` and
-    * cover TTL via the event-time path in [[statefulPctAlerts]]. */
-  def pctAlertsTws(events: Dataset[Event], pctThreshold: Double = 5.0,
-                   ttl: Option[java.time.Duration] = None): Dataset[PctAlert] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    events
-      .groupByKey(_.user_id)
-      .transformWithState(new PctAlertProcessor(pctThreshold, ttl), timeMode, OutputMode.Append())
-  }
-
   case class ZAnomaly(user_id: Long, event_id: Long, value: Double, z: Double)
 
   case class CountUpdate(user_id: Long, event_id: Long, n_total: Long)
@@ -283,20 +262,6 @@ object Ingest {
       .groupByKey(_.user_id)
       .transformWithState(new InactivityProcessor(gap.toMillis),
         TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  /** [[streamingZscoreAnomalies]]'s transformWithState twin — Welford
-    * moments ride in a typed product ValueState ([[ZScoreProcessor]]);
-    * same TTL/TimeMode contract as [[pctAlertsTws]]. */
-  def zscoreAnomaliesTws(events: Dataset[Event], threshold: Double = 3.0,
-                         minN: Long = 20,
-                         ttl: Option[java.time.Duration] = None): Dataset[ZAnomaly] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    events
-      .groupByKey(_.user_id)
-      .transformWithState(new ZScoreProcessor(threshold, minN, ttl), timeMode, OutputMode.Append())
   }
 
   /** Incremental streaming z-score anomalies: per-user Welford moments

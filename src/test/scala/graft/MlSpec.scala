@@ -138,6 +138,17 @@ class MlSpec extends AnyFunSuite {
     assert(Pipelines.evalRegressor(negated).filter(Pipelines.regressorGate).count() == 0)
   }
 
+  test("regressorGate fails a metrics row with an infinite rmse or mae above rmse") {
+    val healthy = Seq((100L, 0.7, 0.05, 0.0025, 0.03, -0.5))
+      .toDF("n", "dir_accuracy", "rmse", "mse", "mae", "r2")
+    assert(healthy.filter(Pipelines.regressorGate).count() == 1)
+    val infinite = healthy.withColumn("rmse", lit(Double.PositiveInfinity))
+    assert(infinite.filter(Pipelines.regressorGate).count() == 0)
+    // the power-mean inequality rules mae > rmse out for one population
+    val mixed = healthy.withColumn("mae", lit(0.06))
+    assert(mixed.filter(Pipelines.regressorGate).count() == 0)
+  }
+
   test("serving output ranks by predicted return descending") {
     val (train, test) = split
     val model = Pipelines.trainRegressor(train, maxIter = 3)
@@ -242,12 +253,12 @@ class MlSpec extends AnyFunSuite {
     }
   }
 
-  test("constructing qMlServe twice in one session builds the split once") {
+  test("constructing q_ml_serve twice in one session builds the split once") {
     import org.apache.spark.sql.execution.LogicalRDD
     def checkpoints(df: DataFrame): Set[Int] =
       df.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id }.toSet
-    val first = graft.queries.MlQueries.qMlServe(spark, TestSpark.Sf)
-    val (second, jobs, _) = countDuring(graft.queries.MlQueries.qMlServe(spark, TestSpark.Sf))
+    val first = graft.queries.MlQueries.qMlServeCert(spark, TestSpark.Sf)
+    val (second, jobs, _) = countDuring(graft.queries.MlQueries.qMlServeCert(spark, TestSpark.Sf))
     // an unmemoized split would checkpoint and collect the cutoff again
     assert(jobs == 0)
     assert(checkpoints(first).nonEmpty && checkpoints(first) == checkpoints(second))

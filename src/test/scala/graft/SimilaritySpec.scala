@@ -149,26 +149,27 @@ class SimilaritySpec extends AnyFunSuite {
     assert(plan.contains("PartitionFilters: [cell"), plan.take(1500))
   }
 
+  /** Measured recall per registered query, through the same operator
+    * paths the recall certificates aggregate. */
+  private lazy val recall =
+    queries.SimilarityQueries.recallReport(spark, TestSpark.Sf).map(r => r.query -> r).toMap
+
   test("ann recall gates: one recall row per query, measured means clear the floors") {
     import queries.SimilarityQueries
-    val lsh = SimilarityQueries.qAnnLsh(spark, TestSpark.Sf)
-      .select("query_id", "recall_at_5").as[(Long, Double)].collect()
-    val ivf = SimilarityQueries.qAnnIvf(spark, TestSpark.Sf)
-      .select("query_id", "recall_at_5").as[(Long, Double)].collect()
-    val idx = SimilarityQueries.qAnnIvfIndexed(spark, TestSpark.Sf)
-      .select("query_id", "recall_at_5").as[(Long, Double)].collect()
-    assert(lsh.length == 20, s"lsh gate collapsed: ${lsh.length} rows")
-    assert(ivf.length == 20, s"ivf gate collapsed: ${ivf.length} rows")
-    assert(idx.length == 20, s"indexed-ivf gate collapsed: ${idx.length} rows")
-    assert(lsh.forall(r => r._2 >= 0.0 && r._2 <= 1.0))
-    // a silent recall regression must fail HERE, not just collapse the
-    // driver rows — assert the measured means against the gate floors
-    assert(lsh.map(_._2).sum / 20 >= SimilarityQueries.LshRecallFloor,
-      s"lsh mean recall ${lsh.map(_._2).sum / 20} below floor")
-    assert(ivf.map(_._2).sum / 20 >= SimilarityQueries.IvfRecallFloor,
-      s"ivf mean recall ${ivf.map(_._2).sum / 20} below floor")
+    val floors = Seq("q_ann_lsh" -> SimilarityQueries.LshRecallFloor,
+      "q_ann_ivf" -> SimilarityQueries.IvfRecallFloor,
+      "q_ann_ivf_indexed" -> SimilarityQueries.IvfRecallFloor)
+    for ((q, floor) <- floors) {
+      val r = recall(q)
+      assert(r.queryRows == 20, s"$q measured over ${r.queryRows} queries")
+      assert(r.floor == floor)
+      assert(r.recall >= 0.0 && r.recall <= 1.0, s"$q mean recall ${r.recall}")
+      // a silent recall regression must fail HERE, not only flip the
+      // registered certificate's recall_ok cell
+      assert(r.recall >= floor, s"$q mean recall ${r.recall} below floor $floor")
+    }
     // the indexed path must not lose recall vs the in-memory path
-    assert(idx.sortBy(_._1).toSeq == ivf.sortBy(_._1).toSeq,
+    assert(recall("q_ann_ivf_indexed").recall == recall("q_ann_ivf").recall,
       "indexed IVF recall differs from in-memory IVF")
   }
 
@@ -304,18 +305,16 @@ class SimilaritySpec extends AnyFunSuite {
     assert(n == Similarity.semanticDedupPairs(emb, 0.98, km).select("a", "b").distinct().count())
   }
 
-  test("q_semantic_dedup: gated rows carry recall ≥ floor; unreachable floor zeroes") {
+  test("q_semantic_dedup: per-vector rows carry recall ≥ floor and drop some vectors") {
     import graft.queries.SimilarityQueries
-    val out = SimilarityQueries.qSemanticDedup(spark, TestSpark.Sf).cache()
+    val out = SimilarityQueries.semanticRows(spark, TestSpark.Sf).cache()
     val nVec = Tables.embeddings(spark, TestSpark.Sf).count()
-    assert(out.count() == nVec, "gate must be open on the fixture")
+    assert(out.count() == nVec, "one row per corpus vector")
     val rec = out.select("pair_recall").head().getDouble(0)
     assert(rec >= SimilarityQueries.SemanticRecallFloor,
       s"measured recall $rec under the declared floor")
     // some vectors must actually be dropped (planted near-dups exist)
     assert(out.filter($"kept" === 0).count() > 0)
-    // sabotage: a floor no measurement can reach must zero the result
-    assert(SimilarityQueries.semanticDedupGated(spark, TestSpark.Sf, 1.01).count() == 0)
     out.unpersist()
   }
 
@@ -398,12 +397,11 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("q_ann_pq gate: one recall row per query, measured mean clears the floor") {
     import queries.SimilarityQueries
-    val pq = SimilarityQueries.qAnnPq(spark, TestSpark.Sf)
-      .select("query_id", "recall_at_5").as[(Long, Double)].collect()
-    assert(pq.length == 20, s"pq gate collapsed: ${pq.length} rows")
-    assert(pq.forall(r => r._2 >= 0.0 && r._2 <= 1.0))
-    assert(pq.map(_._2).sum / 20 >= SimilarityQueries.PqRecallFloor,
-      s"pq mean recall ${pq.map(_._2).sum / 20} below floor")
+    val pq = recall("q_ann_pq")
+    assert(pq.queryRows == 20, s"pq measured over ${pq.queryRows} queries")
+    assert(pq.recall >= 0.0 && pq.recall <= 1.0)
+    assert(pq.recall >= SimilarityQueries.PqRecallFloor,
+      s"pq mean recall ${pq.recall} below floor")
   }
 
   test("pq index round-trip: persisted artifact == in-memory exactly; mismatches fail loudly") {

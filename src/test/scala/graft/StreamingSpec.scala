@@ -342,25 +342,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("transformWithState twin matches flatMapGroupsWithState pct semantics") {
-    withRocksDBProvider {
-      val src = MemoryStream[Event]
-      val q = Ingest.pctAlertsTws(src.toDS(), pctThreshold = 5.0)
-        .writeStream.format("memory").queryName("tws_out")
-        .outputMode(OutputMode.Append).start()
-      try {
-        src.addData(ev(1, 1, 1, 100.0), ev(2, 1, 1, 104.0, 1000L)) // +4% no alert
-        q.processAllAvailable()
-        src.addData(ev(3, 1, 1, 120.0, 2000L)) // +15.4% vs state 104 → alert
-        src.addData(ev(4, 1, 2, 100.0))        // first event, no alert
-        q.processAllAvailable()
-        val got = spark.table("tws_out").as[PctAlert].collect()
-        assert(got.map(_.event_id).toSet == Set(3L), s"got ${got.toSeq}")
-        assert(math.abs(got.head.pct - (120.0 - 104.0) / 104.0 * 100.0) < 1e-9)
-      } finally q.stop()
-    }
-  }
-
   test("session windows split on the gap and finalize on watermark passage") {
     val src = MemoryStream[Event]
     val MinNs = 60L * 1000000000L
@@ -694,26 +675,6 @@ class StreamingSpec extends AnyFunSuite {
       assert(got.map(_.event_id).toSet == Set(13L), s"got $got")
       assert(got.head.z > 3.0)
     } finally q.stop()
-  }
-
-  test("transformWithState z-score twin matches the v1 operator across batches") {
-    withRocksDBProvider {
-      val src = MemoryStream[Event]
-      val q = Ingest.zscoreAnomaliesTws(src.toDS(), threshold = 3.0, minN = 10)
-        .writeStream.format("memory").queryName("z_tws_out")
-        .outputMode(OutputMode.Append).start()
-      try {
-        src.addData((1 to 6).map(i => ev(i, 1, 1, 10.0 + (i % 3) - 1, i * 1000L)): _*)
-        q.processAllAvailable()
-        src.addData((7 to 12).map(i => ev(i, 1, 1, 10.0 + (i % 3) - 1, i * 1000L)): _*)
-        q.processAllAvailable()
-        src.addData(ev(13, 1, 1, 1000.0, 13000L), ev(14, 1, 1, 10.0, 14000L))
-        q.processAllAvailable()
-        val got = spark.table("z_tws_out").as[Ingest.ZAnomaly].collect()
-        assert(got.map(_.event_id).toSet == Set(13L), s"got ${got.toSeq}")
-        assert(got.head.z > 3.0)
-      } finally q.stop()
-    }
   }
 
   test("batch replay through startIngest writes landing + alert tables and pushes live") {

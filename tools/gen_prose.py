@@ -92,8 +92,7 @@ def oracles_line(args):
             "  hash-matching at sf0.001/sf0.01/sf0.1; the model-backed entries\n"
             "  (ANN tiers, semantic dedup, ML metrics) register as theorem\n"
             "  certificates — measured recall/metric invariants emitted as\n"
-            "  constant-pinned rows the oracle hash-compares — with the rich\n"
-            "  per-query surfaces in-plan recall-gated behind the same floors")
+            "  constant-pinned rows the oracle hash-compares")
 
 
 def check_operators_complete(verify_dir):
