@@ -67,6 +67,11 @@ object AsOfJoin {
     * output schema to [[asofBackward]]; oracle-checked via q_asof_join
     * and cross-checked against the composed form in PlanSpec.
     *
+    * The one binding of both surfaces (the SQL `asof_join` table
+    * function calls this method): names bind through the session
+    * resolver, an output name that collides with a left column and a
+    * key or timestamp type mismatch fail with named errors.
+    *
     * The strategy self-installs on the calling session (public
     * `spark.experimental.extraStrategies`), so driver-owned sessions
     * built without [[graft.plans.GraftExtensions]] still plan it. */
@@ -74,36 +79,60 @@ object AsOfJoin {
                          key: String, ts: String, rightVal: String,
                          outCol: String = "asof_value"): DataFrame = {
     import graft.plans.{AsOfJoinNode, AsOfJoinStrategy}
-    import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Max
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+    import org.apache.spark.sql.catalyst.types.DataTypeUtils
     val spark = left.sparkSession
     if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    // deterministic right frame, as in the composed form: max(value)
-    // per (key, ts) — DuckDB ASOF equally requires a unique right frame.
-    // The trailing self-alias select is load-bearing: when both sides
-    // derive from the SAME scan the analyzer's relation dedup re-ids the
-    // right subtree's attributes, which would orphan the attribute refs
-    // stored in the node — aliases at the subtree root keep their expr
-    // ids through that rewrite, so the refs stay valid.
-    val r2 = right.groupBy(col(key), col(ts)).agg(max(col(rightVal)).as(rightVal))
-    val rAliased = r2.select(r2.columns.toIndexedSeq.map(c => col(c).as(c)): _*)
+    val resolver = spark.sessionState.conf.resolver
     val lPlan = left.queryExecution.analyzed
-    val rPlan = rAliased.queryExecution.analyzed
-    def attr(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-             name: String): Attribute =
-      plan.output.filter(_.name == name) match {
+    val rPlan = right.queryExecution.analyzed
+    def attr(plan: LogicalPlan, name: String, side: String): Attribute =
+      plan.output.filter(a => resolver(a.name, name)) match {
         case Seq(a) => a
         case Seq() => throw new IllegalArgumentException(
-          s"column $name not found among ${plan.output.map(_.name).mkString(", ")}")
+          s"column `$name` not found on the $side side " +
+            s"(has: ${plan.output.map(_.name).mkString(", ")})")
         case many => throw new IllegalArgumentException(
           // first-match would silently bind the wrong side of a post-join
           // frame; fail like col(name) does on the composed path
-          s"column $name is ambiguous: ${many.size} attributes share the name")
+          s"column `$name` is ambiguous on the $side side (${many.size} matches)")
       }
-    val rv = attr(rPlan, rightVal)
-    val node = AsOfJoinNode(lPlan, rPlan,
-      attr(lPlan, key), attr(lPlan, ts), attr(rPlan, key), attr(rPlan, ts), rv,
+    // a colliding output name would leave two columns of that name, and
+    // downstream references (and SQL star expansion) die on ambiguity
+    if (lPlan.output.exists(a => resolver(a.name, outCol)))
+      throw new IllegalArgumentException(
+        s"output column `$outCol` collides with a left-side column; pass a distinct name")
+    val lk = attr(lPlan, key, "left")
+    val lt = attr(lPlan, ts, "left")
+    val rk = attr(rPlan, key, "right")
+    val rt = attr(rPlan, ts, "right")
+    val rv = attr(rPlan, rightVal, "right")
+    // a left int key vs a right long key would otherwise leave
+    // AsOfJoinNode unresolved (its `resolved` requires sameType) and die
+    // later as an opaque unresolved-operator failure
+    def requireSameType(l: Attribute, r: Attribute, what: String): Unit =
+      if (!DataTypeUtils.sameType(l.dataType, r.dataType))
+        throw new IllegalArgumentException(
+          s"$what column `${l.name}` is ${l.dataType.simpleString} on the left but " +
+            s"${r.dataType.simpleString} on the right; cast one side so the types match")
+    requireSameType(lk, rk, "key")
+    requireSameType(lt, rt, "timestamp")
+    // deterministic right frame, as in the composed form: max(value)
+    // per (key, ts) — DuckDB ASOF equally requires a unique right frame.
+    // The aggregate's outputs are fresh Aliases, which is load-bearing:
+    // when both sides derive from the SAME scan the analyzer's relation
+    // dedup re-ids the right subtree's attributes, and refs to alias
+    // expr ids at the subtree root survive that rewrite.
+    val kAlias = Alias(rk, key)()
+    val tAlias = Alias(rt, ts)()
+    val vAlias = Alias(Max(rv).toAggregateExpression(), rightVal)()
+    val dedupedRight = Aggregate(Seq(rk, rt), Seq(kAlias, tAlias, vAlias), rPlan)
+    val node = AsOfJoinNode(lPlan, dedupedRight, lk, lt,
+      kAlias.toAttribute, tAlias.toAttribute, vAlias.toAttribute,
       AttributeReference(outCol, rv.dataType, nullable = true)())
     org.apache.spark.sql.GraftBridge.ofRows(spark, node)
   }

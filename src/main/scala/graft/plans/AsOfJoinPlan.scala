@@ -39,6 +39,9 @@ import org.apache.spark.sql.execution.metric.SQLMetrics
   * keys/timestamps compare by their type's interpreted ordering; a null
   * key or ts on the left yields a null as-of value, null right keys/ts
   * never match.
+  *
+  * Built only by `operators.AsOfJoin.asofBackwardNative`, which the
+  * DataFrame API and the SQL table function both call.
   */
 case class AsOfJoinNode(
     left: LogicalPlan, right: LogicalPlan,
@@ -53,78 +56,6 @@ case class AsOfJoinNode(
   override protected def withNewChildrenInternal(
       newLeft: LogicalPlan, newRight: LogicalPlan): AsOfJoinNode =
     copy(left = newLeft, right = newRight)
-}
-
-/** SQL-surface placeholder produced by the `asof_join(...)` table
-  * function (GraftExtensions): carries only NAMES — the tables are still
-  * [[org.apache.spark.sql.catalyst.analysis.UnresolvedRelation]]s when
-  * the TVF builder runs, so attribute binding must wait for the analyzer.
-  * [[ResolveAsOfJoin]] rewrites it into a resolved [[AsOfJoinNode]]. */
-case class UnresolvedAsOfJoin(
-    left: LogicalPlan, right: LogicalPlan,
-    keyName: String, tsName: String, valName: String, outName: String)
-  extends BinaryNode {
-  override lazy val resolved: Boolean = false
-  override def output: Seq[Attribute] = Nil
-  override protected def withNewChildrenInternal(
-      newLeft: LogicalPlan, newRight: LogicalPlan): UnresolvedAsOfJoin =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Analyzer rule (injected via GraftExtensions.injectResolutionRule):
-  * once both children resolve, binds the named columns, wraps the right
-  * side in the same max-per-(key,ts) dedup aggregate the DataFrame path
-  * uses (AsOfJoin.asofBackwardNative), and emits [[AsOfJoinNode]]. The
-  * Aggregate's output attributes are fresh Aliases, which also satisfies
-  * the relation-dedup invariant: refs stored in the node point at alias
-  * exprIds that survive the analyzer's re-idding of shared scans. */
-object ResolveAsOfJoin extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.expressions.aggregate.Max
-  import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsUp {
-    case u: UnresolvedAsOfJoin if u.childrenResolved =>
-      def find(p: LogicalPlan, n: String, side: String): Attribute =
-        p.output.filter(a => conf.resolver(a.name, n)) match {
-          case Seq(a) => a
-          case Seq() => throw new IllegalArgumentException(
-            s"asof_join: column `$n` not found on the $side side " +
-              s"(has: ${p.output.map(_.name).mkString(", ")})")
-          case many => throw new IllegalArgumentException(
-            s"asof_join: column `$n` is ambiguous on the $side side (${many.size} matches)")
-        }
-      // the composed path rejects out-name clashes up front; the SQL
-      // surface must too — otherwise star expansion silently duplicates
-      // a column and downstream references die on ambiguity
-      if (u.left.output.exists(a => conf.resolver(a.name, u.outName)))
-        throw new IllegalArgumentException(
-          s"asof_join: output column `${u.outName}` collides with a left-side " +
-            "column; pass a distinct name as the 6th argument")
-      val lk = find(u.left, u.keyName, "left")
-      val lt = find(u.left, u.tsName, "left")
-      val rk0 = find(u.right, u.keyName, "right")
-      val rt0 = find(u.right, u.tsName, "right")
-      val rv0 = find(u.right, u.valName, "right")
-      // type check up front with a named error: a left int key vs right
-      // long key would otherwise leave AsOfJoinNode unresolved (its
-      // `resolved` requires sameType) and die later as an opaque
-      // unresolved-operator failure — or worse, reach the exec's ordering
-      // as a ClassCastException if built directly
-      def requireSameType(l: Attribute, r: Attribute, what: String): Unit =
-        if (!DataTypeUtils.sameType(l.dataType, r.dataType))
-          throw new IllegalArgumentException(
-            s"asof_join: $what column `${l.name}` is ${l.dataType.simpleString} on the " +
-              s"left but ${r.dataType.simpleString} on the right; cast one side so the types match")
-      requireSameType(lk, rk0, "key")
-      requireSameType(lt, rt0, "timestamp")
-      val kAlias = Alias(rk0, u.keyName)()
-      val tAlias = Alias(rt0, u.tsName)()
-      val vAlias = Alias(Max(rv0).toAggregateExpression(), u.valName)()
-      val dedupedRight = Aggregate(Seq(rk0, rt0), Seq(kAlias, tAlias, vAlias), u.right)
-      AsOfJoinNode(u.left, dedupedRight, lk, lt,
-        kAlias.toAttribute, tAlias.toAttribute, vAlias.toAttribute,
-        AttributeReference(u.outName, rv0.dataType, nullable = true)())
-  }
 }
 
 /** Plans [[AsOfJoinNode]] into [[AsOfJoinExec]]; a no-op on every other

@@ -511,15 +511,22 @@ object SimilarityQueries {
     * (one output row per corpus vector); `kept_bounded` pins
     * 1 ≤ kept ≤ n (at least every dup relation's min-id representative
     * survives). */
-  def qSemanticDedupCert(spark: SparkSession, dir: String): DataFrame = {
+  def qSemanticDedupCert(spark: SparkSession, dir: String): DataFrame =
+    semanticDedupCert(spark, dir, floor = SemanticRecallFloor)
+
+  /** [[qSemanticDedupCert]] at any recall floor — the floor is a
+    * parameter, as in [[recallCert]], so a spec can drive `recall_ok`
+    * to FALSE. */
+  private[graft] def semanticDedupCert(spark: SparkSession, dir: String,
+                                       floor: Double): DataFrame = {
     val nVecs = Tables.embeddings(spark, dir).agg(count(lit(1)).as("n_vecs"))
     semanticRows(spark, dir)
       .agg(count(lit(1)).as("n_rows"), sum(col("kept")).as("n_kept"),
         max(col("pair_recall")).as("pr"))
       .crossJoin(broadcast(nVecs))
       .select(
-        lit(math.round(SemanticRecallFloor * 100)).as("floor_pct"),
-        (col("pr") >= SemanticRecallFloor).as("recall_ok"),
+        lit(math.round(floor * 100)).as("floor_pct"),
+        (col("pr") >= floor).as("recall_ok"),
         (col("n_rows") === col("n_vecs")).as("coverage_ok"),
         (col("n_kept") >= 1L && col("n_kept") <= col("n_rows"))
           .as("kept_bounded"))

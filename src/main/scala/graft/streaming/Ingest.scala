@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
@@ -50,6 +50,52 @@ object Ingest {
       .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
       .withWatermark("event_time", delay)
       .as[EventT]
+  }
+
+  /** The keyed event-time fold under the four flatMapGroupsWithState
+    * operators below. Per micro-batch, a key's events fold through
+    * `step` in (ts, event_id) order, so replays are deterministic,
+    * starting from the stored state or `init`; the folded state is
+    * stored, and a key idle for `idleTimeout` of event time is evicted.
+    *
+    * The TTL is anchored to max(watermark, this batch's max event
+    * time): in the FIRST micro-batch the watermark is still 0, so a
+    * watermark-only anchor resolves to ~1970 + TTL and every batch-1
+    * key times out one batch later — the documented idle TTL would
+    * silently become "one batch of silence". Event-time (not
+    * processing-time) TTL is deliberate: it is replay/backfill-safe (a
+    * paused job does not mass-evict live state on resume) and it
+    * doesn't force the micro-batch engine into continuous empty batches
+    * the way processing-time timers do. Timeouts never fire in batch
+    * mode, where state is per-job anyway. */
+  private def keyedEventFold[K: Encoder, S: Encoder, O: Encoder](
+      events: Dataset[Event], watermarkDelay: String, idleTimeout: java.time.Duration)(
+      key: EventT => K, init: S)(step: (K, S, EventT) => (S, Option[O])): Dataset[O] = {
+    val streaming = events.isStreaming
+    watermarked(events, watermarkDelay)
+      .groupByKey(key)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (k: K, it: Iterator[EventT], state: GroupState[S]) =>
+          if (state.hasTimedOut) {
+            state.remove()
+            Iterator.empty
+          } else {
+            val sorted = it.toSeq.sortBy(e => (e.ts, e.event_id))
+            var st = if (state.exists) state.get else init
+            val out = sorted.flatMap { e =>
+              val (next, emitted) = step(k, st, e)
+              st = next
+              emitted
+            }
+            state.update(st)
+            if (streaming) {
+              val maxEventMs = if (sorted.nonEmpty) sorted.last.event_time.getTime else 0L
+              state.setTimeoutTimestamp(
+                math.max(state.getCurrentWatermarkMs(), maxEventMs) + idleTimeout.toMillis)
+            }
+            out.iterator
+          }
+      }
   }
 
   /** Epoch-nano long → event-time timestamp + calendar day columns. */
@@ -164,56 +210,25 @@ object Ingest {
 
   /** ST3 (true reference semantics — percentage_change > 5 vs the user's
     * previous event, spark_stream.py:38-46): per-key state holds the last
-    * value; arbitrary stateful processing via flatMapGroupsWithState.
+    * value; arbitrary stateful processing via flatMapGroupsWithState
+    * ([[keyedEventFold]]).
     *
     * State is TTL-bounded by EVENT time: a key whose last event is
     * `idleTimeout` behind the watermark is evicted (its next event then
     * has no baseline, like a new user) — without this, months of
-    * streaming accumulate one state slot per user ever seen. Event-time
-    * (not processing-time) TTL is deliberate: it is replay/backfill-safe
-    * (a paused job does not mass-evict live state on resume) and it
-    * doesn't force the micro-batch engine into continuous empty batches
-    * the way processing-time timers do. Timeouts never fire in batch
-    * mode, where state is per-job anyway. */
+    * streaming accumulate one state slot per user ever seen. A key
+    * without state starts from baseline 0.0, which never alerts (the
+    * percent change over a zero baseline is undefined): state is only
+    * ever written for a key that has seen an event. */
   def statefulPctAlerts(events: Dataset[Event], pctThreshold: Double = 5.0,
                         idleTimeout: java.time.Duration = java.time.Duration.ofDays(30),
                         watermarkDelay: String = "1 hour"): Dataset[PctAlert] = {
     import events.sparkSession.implicits._
-    val streaming = events.isStreaming
-    watermarked(events, watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, it: Iterator[EventT], state: GroupState[Double]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = it.toSeq.sortBy(e => (e.ts, e.event_id))
-            var prev = if (state.exists) Some(state.get) else None
-            val alerts = sorted.flatMap { e =>
-              val out = prev match {
-                case Some(p) if p != 0.0 =>
-                  val pct = (e.value - p) / p * 100.0
-                  if (pct > pctThreshold) Some(PctAlert(user, e.event_id, e.value, p, pct)) else None
-                case _ => None
-              }
-              prev = Some(e.value)
-              out
-            }
-            prev.foreach(state.update)
-            // TTL anchored to max(watermark, this batch's max event time):
-            // in the FIRST micro-batch the watermark is still 0, so a
-            // watermark-only anchor resolves to ~1970 + TTL and every
-            // batch-1 key times out one batch later — the documented
-            // idle TTL would silently become "one batch of silence"
-            if (streaming && state.exists) {
-              val maxEventMs = if (sorted.nonEmpty) sorted.last.event_time.getTime else 0L
-              state.setTimeoutTimestamp(
-                math.max(state.getCurrentWatermarkMs(), maxEventMs) + idleTimeout.toMillis)
-            }
-            alerts.iterator
-          }
-      }
+    keyedEventFold(events, watermarkDelay, idleTimeout)(_.user_id, init = 0.0) {
+      (user: Long, prev: Double, e: EventT) =>
+        val pct = if (prev == 0.0) None else Some((e.value - prev) / prev * 100.0)
+        (e.value, pct.filter(_ > pctThreshold).map(PctAlert(user, e.event_id, e.value, prev, _)))
+    }
   }
 
   case class ZAnomaly(user_id: Long, event_id: Long, value: Double, z: Double)
@@ -278,37 +293,15 @@ object Ingest {
     import events.sparkSession.implicits._
     import graft.functions.WelfordAggregator
     import graft.functions.WelfordAggregator.Moments
-    val streaming = events.isStreaming
-    watermarked(events, watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, it: Iterator[EventT], state: GroupState[Moments]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var m = if (state.exists) state.get else WelfordAggregator.zero
-            val sorted = it.toSeq.sortBy(e => (e.ts, e.event_id))
-            val out = sorted.flatMap { e =>
-              val alert =
-                if (m.n >= minN && m.stddevPop > 0) {
-                  val z = m.zscore(e.value)
-                  if (math.abs(z) > threshold) Some(ZAnomaly(user, e.event_id, e.value, z))
-                  else None
-                } else None
-              m = WelfordAggregator.update(m, e.value)
-              alert
-            }
-            state.update(m)
-            // same first-batch-watermark-0 anchor as statefulPctAlerts
-            if (streaming) {
-              val maxEventMs = if (sorted.nonEmpty) sorted.last.event_time.getTime else 0L
-              state.setTimeoutTimestamp(
-                math.max(state.getCurrentWatermarkMs(), maxEventMs) + idleTimeout.toMillis)
-            }
-            out.iterator
-          }
-      }
+    keyedEventFold(events, watermarkDelay, idleTimeout)(_.user_id, WelfordAggregator.zero) {
+      (user: Long, m: Moments, e: EventT) =>
+        val alert =
+          if (m.n >= minN && m.stddevPop > 0) {
+            val z = m.zscore(e.value)
+            if (math.abs(z) > threshold) Some(ZAnomaly(user, e.event_id, e.value, z)) else None
+          } else None
+        (WelfordAggregator.update(m, e.value), alert)
+    }
   }
 
   case class CusumState(sUp: Double, sDn: Double)
@@ -349,68 +342,41 @@ object Ingest {
     require(bins >= 2 && hi > lo && refSize > 0 && blockSize > 0,
       s"psiStream: need bins >= 2, hi > lo, positive sizes")
     import events.sparkSession.implicits._
-    val streaming = events.isStreaming
     val width = (hi - lo) / bins
-    watermarked(events, watermarkDelay)
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, it: Iterator[EventT], state: GroupState[PsiStreamState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var st = if (state.exists) state.get
-              else PsiStreamState(Seq.fill(bins)(0L), 0L, Seq.fill(bins)(0L), 0L)
-            val ref = st.ref.toArray
-            val cur = st.cur.toArray
-            var refN = st.refN
-            var curN = st.curN
-            var nonFinite = st.nonFinite
-            def binOf(v: Double): Int =
-              math.min(bins - 1, math.max(0, math.floor((v - lo) / width).toInt))
-            val sorted = it.toSeq.sortBy(e => (e.ts, e.event_id))
-            val out = sorted.flatMap { e =>
-              // NaN floors to bin 0 through the clamp — a NaN burst
-              // must read as BAD DATA, not low-value drift (advice
-              // r13): non-finite values bypass the histograms and
-              // accrue on a counter reported with the next block
-              if (!java.lang.Double.isFinite(e.value)) {
-                nonFinite += 1L
-                None
-              } else if (refN < refSize) {
-                ref(binOf(e.value)) += 1L; refN += 1L
-                None
-              } else {
-                cur(binOf(e.value)) += 1L; curN += 1L
-                if (curN >= blockSize) {
-                  // the batch psiDrift smoothing, verbatim
-                  var psi = 0.0
-                  var b = 0
-                  while (b < bins) {
-                    val pa = (ref(b) + 1.0) / (refN + bins.toDouble)
-                    val pb = (cur(b) + 1.0) / (curN + bins.toDouble)
-                    psi += (pa - pb) * math.log(pa / pb)
-                    b += 1
-                  }
-                  val report = DriftReport(key, e.event_id, refN, curN,
-                    psi, psi > threshold, nonFinite)
-                  java.util.Arrays.fill(cur, 0L)
-                  curN = 0L
-                  nonFinite = 0L
-                  Some(report)
-                } else None
-              }
+    def binOf(v: Double): Int =
+      math.min(bins - 1, math.max(0, math.floor((v - lo) / width).toInt))
+    val empty = Vector.fill(bins)(0L)
+    keyedEventFold(events, watermarkDelay, idleTimeout)(
+      _.event_type, PsiStreamState(empty, 0L, empty, 0L)) {
+      (key: String, st: PsiStreamState, e: EventT) =>
+        // NaN floors to bin 0 through the clamp — a NaN burst must read
+        // as BAD DATA, not low-value drift: non-finite values bypass the
+        // histograms and accrue on a counter reported with the next block
+        if (!java.lang.Double.isFinite(e.value)) {
+          (st.copy(nonFinite = st.nonFinite + 1L), None)
+        } else if (st.refN < refSize) {
+          val b = binOf(e.value)
+          (st.copy(ref = st.ref.updated(b, st.ref(b) + 1L), refN = st.refN + 1L), None)
+        } else {
+          val b = binOf(e.value)
+          val cur = st.cur.updated(b, st.cur(b) + 1L)
+          val curN = st.curN + 1L
+          if (curN >= blockSize) {
+            // the batch psiDrift smoothing, verbatim
+            var psi = 0.0
+            var i = 0
+            while (i < bins) {
+              val pa = (st.ref(i) + 1.0) / (st.refN + bins.toDouble)
+              val pb = (cur(i) + 1.0) / (curN + bins.toDouble)
+              psi += (pa - pb) * math.log(pa / pb)
+              i += 1
             }
-            state.update(PsiStreamState(ref.toSeq, refN, cur.toSeq, curN,
-              nonFinite))
-            if (streaming) {
-              val maxEventMs = if (sorted.nonEmpty) sorted.last.event_time.getTime else 0L
-              state.setTimeoutTimestamp(
-                math.max(state.getCurrentWatermarkMs(), maxEventMs) + idleTimeout.toMillis)
-            }
-            out.iterator
-          }
-      }
+            (st.copy(cur = empty, curN = 0L, nonFinite = 0L),
+              Some(DriftReport(key, e.event_id, st.refN, curN, psi, psi > threshold,
+                st.nonFinite)))
+          } else (st.copy(cur = cur, curN = curN), None)
+        }
+    }
   }
 
   /** Streaming CUSUM shift detector — the streaming twin of
@@ -432,42 +398,14 @@ object Ingest {
                   idleTimeout: java.time.Duration = java.time.Duration.ofDays(30),
                   watermarkDelay: String = "1 hour"): Dataset[CusumAlert] = {
     import events.sparkSession.implicits._
-    val streaming = events.isStreaming
-    watermarked(events, watermarkDelay)
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, it: Iterator[EventT], state: GroupState[CusumState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var st = if (state.exists) state.get else CusumState(0.0, 0.0)
-            val sorted = it.toSeq.sortBy(e => (e.ts, e.event_id))
-            val out = sorted.flatMap { e =>
-              var up = math.max(0.0, st.sUp + (e.value - baselineMean))
-              var dn = math.max(0.0, st.sDn + (baselineMean - e.value))
-              val alert =
-                if (up > h) {
-                  val a = CusumAlert(key, e.event_id, e.value, up, "up")
-                  up = 0.0
-                  Some(a)
-                } else if (dn > h) {
-                  val a = CusumAlert(key, e.event_id, e.value, dn, "down")
-                  dn = 0.0
-                  Some(a)
-                } else None
-              st = CusumState(up, dn)
-              alert
-            }
-            state.update(st)
-            if (streaming) {
-              val maxEventMs = if (sorted.nonEmpty) sorted.last.event_time.getTime else 0L
-              state.setTimeoutTimestamp(
-                math.max(state.getCurrentWatermarkMs(), maxEventMs) + idleTimeout.toMillis)
-            }
-            out.iterator
-          }
-      }
+    keyedEventFold(events, watermarkDelay, idleTimeout)(_.event_type, CusumState(0.0, 0.0)) {
+      (key: String, st: CusumState, e: EventT) =>
+        val up = math.max(0.0, st.sUp + (e.value - baselineMean))
+        val dn = math.max(0.0, st.sDn + (baselineMean - e.value))
+        if (up > h) (CusumState(0.0, dn), Some(CusumAlert(key, e.event_id, e.value, up, "up")))
+        else if (dn > h) (CusumState(up, 0.0), Some(CusumAlert(key, e.event_id, e.value, dn, "down")))
+        else (CusumState(up, dn), None)
+    }
   }
 
   /** ST6 extension: watermarked tumbling-window aggregation — event count

@@ -1116,6 +1116,18 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("every registered TVF rejects one argument too many with its usage string") {
+    val tvfs = graft.plans.GraftFunctions.tvfs
+    assert(tvfs.size == 105 && tvfs.map(_.name).distinct.size == tvfs.size)
+    withExtensionsSession { s2 =>
+      tvfs.foreach { t =>
+        val args = Seq.fill(t.tables + t.arity.max + 1)("'x'").mkString(", ")
+        val err = intercept[Exception](s2.sql(s"SELECT * FROM ${t.name}($args)").collect())
+        assert(err.getMessage.contains(t.usage), s"${t.name}: ${err.getMessage}")
+      }
+    }
+  }
+
   test("q_skew_join plans the salted shape: replicated right, shuffled join on (key, salt)") {
     val p = physical("q_skew_join")
     assert(p.contains("Generate explode"), p.take(2000)) // right side × buckets

@@ -23,6 +23,24 @@ class QueriesSmokeSpec extends AnyFunSuite {
     }
   }
 
+  test("every public q-method of the query objects is registered") {
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    // a public `def q…(spark: SparkSession, dir: String): DataFrame` that
+    // no `queries` map names is an unregistered twin of a registered query
+    val objects = Seq(queries.Relational, queries.TimeSeriesQueries, queries.TextStats,
+      queries.TextDedup, queries.SimilarityQueries, queries.MlQueries,
+      queries.ScalarQueries, queries.TemporalJoinQueries, queries.TrainingDataQueries,
+      queries.MultimodalQueries, queries.SourceQueries, queries.StatQueries)
+    val qMethods = objects.flatMap(_.getClass.getMethods.filter { m =>
+      m.getName.matches("q[A-Z0-9].*") &&
+        m.getParameterTypes.toSeq == Seq(classOf[SparkSession], classOf[String]) &&
+        classOf[DataFrame].isAssignableFrom(m.getReturnType)
+    }.map(m => s"${m.getDeclaringClass.getSimpleName}.${m.getName}"))
+    assert(qMethods.size == SparkEntry.queries.size,
+      s"${qMethods.size} q-methods vs ${SparkEntry.queries.size} registered: " +
+        qMethods.sorted.mkString(", "))
+  }
+
   test("every query has an oracle or is documented rows-only") {
     // the 4 q_ml_* metric queries moved OFF this list in round 10 and
     // the 6 recall-gated ANN/semantic entries in round 13: their

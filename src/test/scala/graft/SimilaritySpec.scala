@@ -210,6 +210,16 @@ class SimilaritySpec extends AnyFunSuite {
     assert(r(0).getBoolean(3), "kept_bounded FALSE")
   }
 
+  test("semantic dedup certificate: an unreachable floor flips only recall_ok") {
+    import queries.SimilarityQueries
+    val r = SimilarityQueries.semanticDedupCert(spark, TestSpark.Sf, floor = 1.01).collect()
+    assert(r.length == 1)
+    assert(r(0).getLong(0) == 101L, "floor_pct")
+    assert(!r(0).getBoolean(1), "recall_ok TRUE under an unreachable floor")
+    assert(r(0).getBoolean(2), "coverage_ok FALSE")
+    assert(r(0).getBoolean(3), "kept_bounded FALSE")
+  }
+
   test("balanced quantizer bounds the max cell fraction on a skewed corpus") {
     import org.apache.spark.ml.functions.array_to_vector
     // adversarial skew: 900 vectors in one dense blob (small internal

@@ -66,6 +66,28 @@ class TemporalOpsSpec extends AnyFunSuite {
     assert(dup == 9.0)
   }
 
+  test("asofBackwardNative: named errors for an output-name collision and a key type mismatch") {
+    val left = Seq((1L, "u1", 100L, 1.0)).toDF("event_id", "k", "ts", "v")
+    val right = Seq(("u1", 50L, 5.0)).toDF("k", "ts", "rv")
+    // an outCol equal to a left column would leave two columns of that name
+    val clash = intercept[IllegalArgumentException] {
+      AsOfJoin.asofBackwardNative(left, right, "k", "ts", "rv", outCol = "v")
+    }
+    assert(clash.getMessage.contains("collides"), clash.getMessage)
+    // int key on the left, long key on the right: a named error, not an
+    // unresolved-operator failure at execution
+    val typeErr = intercept[IllegalArgumentException] {
+      AsOfJoin.asofBackwardNative(
+        Seq((1L, 7, 100L)).toDF("event_id", "k", "ts"),
+        Seq((7L, 50L, 5.0)).toDF("k", "ts", "rv"), "k", "ts", "rv").collect()
+    }
+    assert(typeErr.getMessage.contains("cast one side"), typeErr.getMessage)
+    // names bind through the session resolver, as col(name) does
+    val got = AsOfJoin.asofBackwardNative(left, right, "K", "TS", "RV")
+      .select("asof_value").as[Double].head()
+    assert(got == 5.0)
+  }
+
   test("asofBackwardNative: null keys never match, null-ts right rows are skipped") {
     val left = Seq((1L, Option("u1"), 100L), (2L, Option.empty[String], 100L))
       .toDF("event_id", "k", "ts")
