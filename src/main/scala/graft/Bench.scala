@@ -9,9 +9,9 @@ import org.apache.spark.sql.GraftBridge
   *
   * Output contract (VERDICT r4 item 1 — the artifact must be parseable):
   * the driver tail-captures only the LAST ~2000 chars of stdout, and four
-  * rounds of one-big-line output never fit that window (every
-  * BENCH_r0N.json has parsed=null). So Bench now emits THREE artifacts,
-  * most-complete first, most-parseable last:
+  * rounds of one-big-line output never fit that window (each of those
+  * rounds' bench artifacts recorded parsed=null). So Bench now emits
+  * THREE artifacts, most-complete first, most-parseable last:
   *
   *  1. `bench_full.json` (cwd; path echoed in the summary line): the
   *     complete record — full-precision warm medians, cold first-reps,
@@ -370,12 +370,9 @@ object Bench {
     // keys (key-split amplification of the same table) through welford /
     // daily-dedup / pct-alert state, with an eviction proof (2-day TTL
     // over a month of event time must shrink state) and a kill-and-resume
-    // at full state. The full 5M-key study incl. HDFS/RocksDB A/B lives in
-    // streaming_scale.json (graft.StreamScale main); this compact leg is
-    // the per-round regression surface.
+    // at full state
     val streamScaleJson = leg("streaming scale leg")(StreamScale.study(spark, sfDir,
-      targetKeys = sys.env.getOrElse("SPARK_GRAFT_STREAM_KEYS", "1000000").toLong,
-      evPerKey = 4, nFiles = 6, compact = true))
+      targetKeys = sys.env.getOrElse("SPARK_GRAFT_STREAM_KEYS", "1000000").toLong))
 
     // native-vs-composed as-of A/B, pinned side by side from the SAME
     // measured reps as the per-query stats (re-running them here would

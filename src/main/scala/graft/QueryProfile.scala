@@ -53,8 +53,8 @@ object QueryProfile {
   }
 }
 
-/** Stage-completion trace for the profiling mains (QueryProfile,
-  * ScaleCurve): one record per completed stage, plus a job count.
+/** Stage-completion trace for [[QueryProfile]]: one record per
+  * completed stage, plus a job count.
   * Registers itself on `sc`. */
 final class StageTrace(sc: SparkContext) extends SparkListener {
   import StageTrace.Stage

@@ -8,8 +8,8 @@ import graft.streaming.Ingest
 
 /** Streaming state at production cardinality (VERDICT r19 ask #1): every
   * stateful cert runs at 1.5k-40k state keys, so the engine's
-  * "watermark-bounded state" claim had no measured leg. This study
-  * drives MILLIONS of distinct keys through the three production
+  * "watermark-bounded state" claim had no measured leg. [[study]]
+  * drives up to millions of distinct keys through the production
   * stateful shapes — Welford z-score (flatMapGroupsWithState),
   * percent-change alerts (the reference's spark_stream.py:38-46
   * semantics), and within-watermark daily dedup — as real file-source
@@ -18,10 +18,10 @@ import graft.streaming.Ingest
   * must shrink as the watermark passes idle keys' TTL), and a
   * kill-and-resume at full state (restart from checkpoint with
   * millions of state rows, output equivalence vs an uninterrupted
-  * run).
+  * run). Bench records it as `streaming_scale`.
   *
   * Input derivation: the SF events table amplified by key-splitting —
-  * each original user's first `evPerKey` events are replicated across
+  * each original user's first [[EvPerKey]] events are replicated across
   * `ampl` disjoint key ranges (user_id*ampl+r), preserving the real
   * table's event-time distribution (which drives the watermark and
   * therefore eviction) while scaling DISTINCT KEYS, the dimension
@@ -30,14 +30,14 @@ import graft.streaming.Ingest
   * watermark advances monotonically through the month, exactly like a
   * live feed.
   *
-  * Also home of [[replay]], Bench's raw-SF replay with its determinism
-  * and quarantine certificates.
-  *
-  * Run: tools/graft-java.sh graft.StreamScale [sfDir] [outJson]
-  * Env: STREAMSCALE_KEYS (default 5000000), STREAMSCALE_EV_PER_KEY (4),
-  *      STREAMSCALE_FILES (6); core count as in [[GraftSession]].
+  * Also home of [[replay]], Bench's raw-SF replay (`streaming`) with
+  * its determinism and quarantine certificates.
   */
 object StreamScale {
+
+  /** Events kept per original user, and staged files (one per micro-batch). */
+  private val EvPerKey = 4
+  private val NFiles = 6
 
   private val HdfsProvider =
     "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
@@ -69,7 +69,6 @@ object StreamScale {
 
   /** Stage the amplified event files; returns (nKeys, nRows, srcDir). */
   private def stage(spark: SparkSession, sfDir: String, targetKeys: Long,
-                    evPerKey: Int, nFiles: Int,
                     tmp: java.nio.file.Path): (Long, Long, String) = {
     val ev = Tables.normalizeTs(Tables.events(spark, sfDir))
       .select("event_id", "ts", "user_id", "event_type", "value")
@@ -78,7 +77,7 @@ object StreamScale {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy("ts", "event_id")
     val base = ev.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= evPerKey).drop("rn")
+      .filter(col("rn") <= EvPerKey).drop("rn")
     // key-splitting join: the range side is tiny (ampl rows) and MUST
     // broadcast — a shuffled cross join here would dominate the study
     // with staging cost that a real feed never pays
@@ -91,7 +90,7 @@ object StreamScale {
         (col("user_id") * ampl + col("r")).as("user_id"),
         col("event_type"), col("value"))
     val srcDir = tmp.resolve("events_amp").toString
-    amp.repartitionByRange(nFiles, col("ts"))
+    amp.repartitionByRange(NFiles, col("ts"))
       .write.mode("overwrite").parquet(srcDir)
     // FileStreamSource orders by MODIFICATION TIME, and a parquet job's
     // part files get mtimes in task-completion order — arbitrary. The
@@ -121,10 +120,8 @@ object StreamScale {
     * (the resume leg uses the file sink separately — the memory sink
     * cannot recover from a checkpoint), per-batch state telemetry
     * from StreamingQueryProgress. */
-  private def runLeg(spark: SparkSession, name: String, srcDir: String,
-                     ckpt: String, provider: String)
+  private def runLeg(spark: SparkSession, name: String, srcDir: String, ckpt: String)
                     (mk: Dataset[Ingest.Event] => Dataset[_]): Leg = {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
     val schema = spark.read.parquet(srcDir).schema
     val src = Ingest.typedEvents(
       spark.readStream.schema(schema)
@@ -150,74 +147,40 @@ object StreamScale {
     Leg(name -> Json.obj(Seq("wall_sec" -> Json.num(wall, 3), "rows" -> inRows,
       "rows_per_sec" -> (inRows / wall).round,
       "state_rows_peak" -> peakRows, "state_rows_final" -> finalRows,
-      "state_bytes_peak" -> peakBytes, "provider" -> Json.str(provider.split('.').last),
+      "state_bytes_peak" -> peakBytes, "provider" -> Json.str(RocksProvider.split('.').last),
       "batches" -> Json.arr(perBatch))), peakRows, finalRows)
   }
 
-  /** The full study. `compact` (Bench mode) runs the three core legs
-    * once under RocksDB; the standalone main adds the HDFS/RocksDB A/B
-    * and a warm replay. Returns one JSON object. */
-  def study(spark: SparkSession, sfDir: String, targetKeys: Long,
-            evPerKey: Int, nFiles: Int, compact: Boolean): String = {
+  /** The study: the three core legs once under RocksDB, then the
+    * kill-and-resume. Returns one JSON object. */
+  def study(spark: SparkSession, sfDir: String, targetKeys: Long): String = {
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass", RocksProvider)
     val tmp = java.nio.file.Files.createTempDirectory("graft-streamscale")
     try {
       val t0 = System.nanoTime()
-      val (nKeys, nRows, srcDir) = stage(spark, sfDir, targetKeys, evPerKey, nFiles, tmp)
+      val (nKeys, nRows, srcDir) = stage(spark, sfDir, targetKeys, tmp)
       val stageSec = (System.nanoTime() - t0) / 1e9
       System.err.println(f"[streamscale] staged $nRows rows / $nKeys keys " +
-        f"in ${stageSec}%.1f s ($nFiles files)")
+        f"in ${stageSec}%.1f s ($NFiles files)")
       def ck(n: String) = s"$tmp/ckpt/$n"
-      val legs = scala.collection.mutable.ArrayBuffer[(String, String)]()
 
       // 1. Welford z-score — the O(1)-per-key running-moments shape.
-      // Cold under RocksDB; the standalone study adds a warm replay
-      // (fresh checkpoint, warmed JVM) and the HDFS-provider A/B.
-      legs += runLeg(spark, "welford_rocks_cold", srcDir, ck("wr1"), RocksProvider)(
-        ev => Ingest.streamingZscoreAnomalies(ev)).entry
-      if (!compact) {
-        legs += runLeg(spark, "welford_rocks_warm", srcDir, ck("wr2"), RocksProvider)(
-          ev => Ingest.streamingZscoreAnomalies(ev)).entry
-        legs += runLeg(spark, "welford_hdfs", srcDir, ck("wh"), HdfsProvider)(
-          ev => Ingest.streamingZscoreAnomalies(ev)).entry
-        // pct alerts at the production 30-day TTL (no eviction inside
-        // the one-month window — the steady-state price of the shape)
-        legs += runLeg(spark, "pct_alerts_rocks", srcDir, ck("pa"), RocksProvider)(
-          ev => Ingest.statefulPctAlerts(ev)).entry
-      }
-
-      // 1b. Changelog-checkpointing A/B (STREAMSCALE_CHANGELOG=1, full
-      // mode): by default RocksDB uploads SST snapshots per commit —
-      // at production state sizes the upload IS the commit latency.
-      // Changelog mode (public conf, Spark 3.4+) writes per-batch
-      // deltas instead and snapshots in the background maintenance
-      // thread, trading restart replay for commit latency — the
-      // 100 TB-relevant knob. Measured here as a same-era pair: the
-      // welford leg under each mode (per-batch batch_ms carries the
-      // commit cost) — the resume story for changelog mode is the
-      // SAME file-sink restart path, replaying the delta log.
-      val ChangelogConf =
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-      if (!compact && sys.env.get("STREAMSCALE_CHANGELOG").contains("1")) {
-        spark.conf.set(ChangelogConf, "true")
-        try legs += runLeg(spark, "welford_rocks_changelog", srcDir,
-          ck("wrchg"), RocksProvider)(ev => Ingest.streamingZscoreAnomalies(ev)).entry
-        finally spark.conf.set(ChangelogConf, "false")
-      }
+      val welford = runLeg(spark, "welford_rocks_cold", srcDir, ck("wr1"))(
+        ev => Ingest.streamingZscoreAnomalies(ev))
 
       // 2. Daily dedup — state keyed (user, day) WITHIN the watermark:
       // the leg proves the within-watermark variant evicts closed days
       // as the watermark advances (peak state ≪ total distinct pairs).
-      legs += runLeg(spark, "dedup_daily_rocks", srcDir, ck("dd"), RocksProvider)(
-        ev => Ingest.dedupDaily(ev.toDF())).entry
+      val dedup = runLeg(spark, "dedup_daily_rocks", srcDir, ck("dd"))(
+        ev => Ingest.dedupDaily(ev.toDF()))
 
       // 3. Eviction proof — pct alerts with a 2-DAY idle TTL over a
       // month of event time: keys idle ≥2 days behind the watermark
       // MUST be evicted, so final state ≪ peak state. A flat curve
       // here would falsify the bounded-state claim.
-      val evict = runLeg(spark, "pct_ttl2d_evict", srcDir, ck("ev"), RocksProvider)(
+      val evict = runLeg(spark, "pct_ttl2d_evict", srcDir, ck("ev"))(
         ev => Ingest.statefulPctAlerts(ev,
           idleTimeout = java.time.Duration.ofDays(2)))
-      legs += evict.entry
 
       // 4. Kill-and-resume at FULL state: phase 1 streams the first
       // half of the files into pct-alert state, the query stops, a new
@@ -228,72 +191,62 @@ object StreamScale {
       // conservation check vacuous, as welford's minN=20 does at 4
       // events/key. Output conservation: phase1+phase2 rows/hash ==
       // an uninterrupted run over the same files.
-      def resumeLeg(label: String, changelog: Boolean): (String, String) = {
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", RocksProvider)
-        spark.conf.set(ChangelogConf, changelog.toString)
-        try {
-          val files = new java.io.File(srcDir).listFiles()
-            .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
-          val half = math.max(1, files.length / 2)
-          val linkDir = tmp.resolve(s"${label}_src")
-          java.nio.file.Files.createDirectory(linkDir)
-          def link(fs: Seq[java.io.File]): Unit = fs.foreach { f =>
-            java.nio.file.Files.createSymbolicLink(
-              linkDir.resolve(f.getName), f.toPath)
-          }
-          val schema = spark.read.parquet(srcDir).schema
-          // the memory sink cannot recover from a checkpoint; the FILE
-          // sink is the production restart path anyway — its
-          // _spark_metadata commit log makes the restarted query resume
-          // exactly-once into the same output directory
-          val splitOut = s"$tmp/${label}_out_split"
-          def phase(out: String, ckName: String): (Double, Long, Long) = {
-            val src = Ingest.typedEvents(
-              spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1").parquet(linkDir.toString))
-            val t = System.nanoTime()
-            val q = Ingest.statefulPctAlerts(src).writeStream
-              .format("parquet").option("path", out)
-              .option("checkpointLocation", ck(ckName))
-              .trigger(Trigger.AvailableNow()).start()
-            q.awaitTermination()
-            val wall = (System.nanoTime() - t) / 1e9
-            val prog = q.recentProgress.toSeq
-            (wall, peakState(prog)._1, prog.map(_.numInputRows).sum)
-          }
-          def dirHash(out: String): (Long, Long) = {
-            val df = spark.read.parquet(out)
-            (df.count(), orderFreeHash(df))
-          }
-          link(files.take(half).toSeq)
-          val (w1, state1, rows1) = phase(splitOut, label)
-          link(files.drop(half).toSeq)
-          val (w2, state2, rows2) = phase(splitOut, label)
-          val (nSplit, hSplit) = dirHash(splitOut)
-          // uninterrupted control over the same via-symlink source dir
-          val ctlOut = s"$tmp/${label}_out_ctl"
-          val (_, _, _) = phase(ctlOut, s"${label}_ctl")
-          val (nc, hc) = dirHash(ctlOut)
-          label -> Json.obj(Seq("phase1_sec" -> Json.num(w1, 3), "phase1_rows" -> rows1,
-            "state_at_kill" -> state1, "phase2_sec" -> Json.num(w2, 3),
-            "phase2_rows" -> rows2, "state_after_resume" -> state2,
-            "out_rows_split" -> nSplit, "out_rows_uninterrupted" -> nc,
-            "output_match" -> (nSplit == nc && hSplit == hc)))
-        } finally spark.conf.set(ChangelogConf, "false")
+      val resume = {
+        val label = "resume"
+        val files = new java.io.File(srcDir).listFiles()
+          .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
+        val half = math.max(1, files.length / 2)
+        val linkDir = tmp.resolve(s"${label}_src")
+        java.nio.file.Files.createDirectory(linkDir)
+        def link(fs: Seq[java.io.File]): Unit = fs.foreach { f =>
+          java.nio.file.Files.createSymbolicLink(
+            linkDir.resolve(f.getName), f.toPath)
+        }
+        val schema = spark.read.parquet(srcDir).schema
+        // the memory sink cannot recover from a checkpoint; the FILE
+        // sink is the production restart path anyway — its
+        // _spark_metadata commit log makes the restarted query resume
+        // exactly-once into the same output directory
+        val splitOut = s"$tmp/${label}_out_split"
+        def phase(out: String, ckName: String): (Double, Long, Long) = {
+          val src = Ingest.typedEvents(
+            spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", "1").parquet(linkDir.toString))
+          val t = System.nanoTime()
+          val q = Ingest.statefulPctAlerts(src).writeStream
+            .format("parquet").option("path", out)
+            .option("checkpointLocation", ck(ckName))
+            .trigger(Trigger.AvailableNow()).start()
+          q.awaitTermination()
+          val wall = (System.nanoTime() - t) / 1e9
+          val prog = q.recentProgress.toSeq
+          (wall, peakState(prog)._1, prog.map(_.numInputRows).sum)
+        }
+        def dirHash(out: String): (Long, Long) = {
+          val df = spark.read.parquet(out)
+          (df.count(), orderFreeHash(df))
+        }
+        link(files.take(half).toSeq)
+        val (w1, state1, rows1) = phase(splitOut, label)
+        link(files.drop(half).toSeq)
+        val (w2, state2, rows2) = phase(splitOut, label)
+        val (nSplit, hSplit) = dirHash(splitOut)
+        // uninterrupted control over the same via-symlink source dir
+        val ctlOut = s"$tmp/${label}_out_ctl"
+        val (_, _, _) = phase(ctlOut, s"${label}_ctl")
+        val (nc, hc) = dirHash(ctlOut)
+        label -> Json.obj(Seq("phase1_sec" -> Json.num(w1, 3), "phase1_rows" -> rows1,
+          "state_at_kill" -> state1, "phase2_sec" -> Json.num(w2, 3),
+          "phase2_rows" -> rows2, "state_after_resume" -> state2,
+          "out_rows_split" -> nSplit, "out_rows_uninterrupted" -> nc,
+          "output_match" -> (nSplit == nc && hSplit == hc)))
       }
-      legs += resumeLeg("resume", changelog = false)
-      // changelog-mode restart: the A/B's commit-latency win is only
-      // deployable if a kill at full state resumes THROUGH a delta-log
-      // checkpoint with the same output conservation — measured, not
-      // argued (same env gate as the throughput A/B)
-      if (!compact && sys.env.get("STREAMSCALE_CHANGELOG").contains("1"))
-        legs += resumeLeg("resume_changelog", changelog = true)
 
-      Json.obj(Seq("keys" -> nKeys, "rows" -> nRows, "files" -> nFiles,
-        "ev_per_key" -> evPerKey, "stage_sec" -> Json.num(stageSec, 3),
+      Json.obj(Seq("keys" -> nKeys, "rows" -> nRows, "files" -> NFiles,
+        "ev_per_key" -> EvPerKey, "stage_sec" -> Json.num(stageSec, 3),
         "eviction_proof" -> (evict.finalRows < evict.peakRows / 2),
         "eviction_peak" -> evict.peakRows, "eviction_final" -> evict.finalRows,
-        "legs" -> Json.obj(legs)))
+        "legs" -> Json.obj(Seq(welford.entry, dedup.entry, evict.entry, resume))))
     } finally {
       try IoUtil.deleteRecursively(tmp) catch { case _: Throwable => () }
     }
@@ -471,19 +424,5 @@ object StreamScale {
       // a failed replay leaks the most, mid-build checkpoints)
       try IoUtil.deleteRecursively(tmp) catch { case _: Throwable => () }
     }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val outJson = if (args.length > 1) args(1) else "streaming_scale.json"
-    val targetKeys = sys.env.getOrElse("STREAMSCALE_KEYS", "5000000").toLong
-    val evPerKey = sys.env.getOrElse("STREAMSCALE_EV_PER_KEY", "4").toInt
-    val nFiles = sys.env.getOrElse("STREAMSCALE_FILES", "6").toInt
-    val spark = GraftSession.local()
-    val json = study(spark, sfDir, targetKeys, evPerKey, nFiles, compact = false)
-    println(json)
-    java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
-      (json + "\n").getBytes("UTF-8"))
-    spark.stop()
   }
 }

@@ -91,11 +91,13 @@ object Dedup {
     * bill. The right parallelism lever for the byte-tiny/CPU-dense
     * candidate exchange is session-level: disable AQE partition
     * coalescing (spark.sql.adaptive.coalescePartitions.enabled=false —
-    * see ScaleCurve, which adopted it after measuring that a byte FLOOR
-    * cannot help: ~150 KB of signature bytes spreads only 2-3 ways
-    * under a 64 KiB minPartitionSize). That keeps the broadcast-probe
-    * plan byte-identical and restores full-width execution; production
-    * volumes never need it because their exchanges carry real bytes. */
+    * the scale-curve study, `git show
+    * f9c6fb8:src/main/scala/graft/ScaleCurve.scala`, adopted it after
+    * measuring that a byte FLOOR cannot help: ~150 KB of signature
+    * bytes spreads only 2-3 ways under a 64 KiB minPartitionSize).
+    * That keeps the broadcast-probe plan byte-identical and restores
+    * full-width execution; production volumes never need it because
+    * their exchanges carry real bytes. */
   def lshCandidates(sig: DataFrame, k: Int = 8, r: Int = 2, idCol: String = "doc_id"): DataFrame = {
     val buckets = bandBuckets(sig, k, r, idCol)
     val l = buckets.select(col("band"), col("key"), col(idCol).as("a"))
@@ -544,7 +546,8 @@ object Dedup {
     // dup-gram window's partitionBy(gh) below, so the plan holds ONE
     // exchange on the gram frame where groupBy(gh, doc) + window(gh)
     // paid two back-to-back (the incrementalClassify cands fusion,
-    // applied here; plans/r20/q_span_dedup_before.txt shows both).
+    // applied here; `git show f9c6fb8:plans/r20/q_span_dedup_before.txt`
+    // shows both).
     // Shuffle bytes are unchanged — collect_list partials carry every
     // position either way — and the per-gh partition bound is the same
     // docs-per-gram the window stage already had.

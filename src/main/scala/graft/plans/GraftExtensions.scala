@@ -85,7 +85,10 @@ final class TvfArgs private[plans] (op: String, values: Seq[Any]) {
     case n: Int => n.toLong
     case _ => throw wrongKind(i, "an integer")
   }
-  def int(i: Int): Int = lng(i).toInt
+  def int(i: Int): Int = {
+    val v = lng(i)
+    if (v.isValidInt) v.toInt else throw wrongKind(i, "a 32-bit integer")
+  }
   def dbl(i: Int): Double = values(i) match {
     case d: Double => d
     case l: Long => l.toDouble

@@ -728,9 +728,10 @@ object ScalarQueries {
     // and its pruned subtree canonicalized differently — ReuseExchange
     // never fired and the whole md5-digest pipeline (the query's real
     // compute) ran TWICE per execution (two Scan parquet + two
-    // Generate+HashAggregate chains in plans/r20/
-    // q_bootstrap_ci_before.txt). Every (type, blk) grid row carries
-    // the identical type totals (the posexplode is a constant fan-out),
+    // Generate+HashAggregate chains in `git show
+    // f9c6fb8:plans/r20/q_bootstrap_ci_before.txt`). Every (type, blk)
+    // grid row carries the identical type totals (the posexplode is a
+    // constant fan-out),
     // so any surviving slot row's cnt/sumc IS the type total and
     // max() over them reads the same value the old full-branch max
     // did; a type appears in the old inner join iff it has >= 1

@@ -182,7 +182,7 @@ object TextStats {
     // the shingle subtree with different prunings, so ReuseExchange
     // never fired and the tokenize+shingle explode — the query's
     // heaviest map work — ran TWICE per execution (two Generate
-    // pipelines in plans/r20/q_crossdoc_ngram_before.txt). The
+    // pipelines in `git show f9c6fb8:plans/r20/q_crossdoc_ngram_before.txt`). The
     // (sh, doc) grain keeps per-gram state bounded by docs-per-gram
     // (never a corpus-wide list), `occ` carries the within-doc
     // occurrence count, and nd-as-window-count equals the old

@@ -443,7 +443,8 @@ object TimeSeriesQueries {
     // optimization): the old grid-aggregate → broadcast-stats-back →
     // anomaly aggregate → stats⋈anom left join planned the fact scan +
     // cell rollup TWICE (the pushed-down anomaly filter de-canonicalized
-    // the second subtree — plans/r20/q_seasonal_baseline_before.txt) plus
+    // the second subtree — `git show
+    // f9c6fb8:plans/r20/q_seasonal_baseline_before.txt`) plus
     // two joins. The window hands every row its own cell's n/sumc/sumsq
     // (identical integer sums → identical moment doubles), the anomaly
     // test runs beside it, and the groupBy reuses the window's

@@ -470,7 +470,7 @@ object TrainingDataQueries {
     // optimization). The old shape — spine from a THIRD full fact scan
     // (ev.select(type).distinct()), spine⋈cells left join, tots rollup,
     // broadcast tots back — held three more exchanges and one more scan
-    // (plans/r20/q_psi_drift_before.txt: 3 Scan parquet in the final
+    // (`git show f9c6fb8:plans/r20/q_psi_drift_before.txt`: 3 Scan parquet in the final
     // plan). Deriving the spine from cells instead would put a second
     // consumer on the cells subtree, whose column pruning
     // de-canonicalizes the exchange and re-runs the binning pipeline
@@ -613,7 +613,7 @@ object TrainingDataQueries {
     // the per-(type, period) grain + a/b filter self-join planned as
     // TWO full fact scans — Catalyst pushes each period filter below
     // its aggregate, de-canonicalizing the subtrees so no exchange is
-    // ever shared (verified in plans/r20/q_ab_test_before.txt: two
+    // ever shared (verified in `git show f9c6fb8:plans/r20/q_ab_test_before.txt`: two
     // Scan parquet + two ObjectHashAggregate pipelines). Conditional
     // sums over the SAME exact integer cents produce bit-identical
     // moments in half the scans and drop the join outright. A type

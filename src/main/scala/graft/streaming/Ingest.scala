@@ -18,8 +18,9 @@ import graft.sources.Sources
   * is bounded and evicted; the landing write partitions by day, giving
   * the batch layer static+dynamic partition pruning (ST2 as idempotent
   * date-partitioned layout). Deployment note (measured — SCALE.md
-  * §Round-20, graft.StreamScale): at millions of state keys run the
-  * RocksDB provider with
+  * §Round-20; the 5M-key run is `git show
+  * f9c6fb8:streaming_scale_changelog.json`): at millions of state keys
+  * run the RocksDB provider with
   * `spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled=true`
   * — the per-commit SST snapshot upload is the commit-latency wall, and
   * changelog mode measured 1.42× faster at 5M keys with the restart

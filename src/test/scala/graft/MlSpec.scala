@@ -284,4 +284,41 @@ class MlSpec extends AnyFunSuite {
     Pipelines.evalRegressor(plain)
     assert(plain.storageLevel == StorageLevel.NONE)
   }
+
+  /** `f`'s result, with the ids of the persistent RDDs that appeared
+    * while it ran (a `localCheckpoint` registers its blocks as one). */
+  private def newPersistentRdds[A](f: => A): (A, Set[Int]) = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val a = f
+    (a, spark.sparkContext.getPersistentRDDs.keySet.toSet -- before)
+  }
+
+  private def sortedRows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  /** Re-reads `df` after its blocks were dropped: the read must return
+    * `expected` or fail naming a missing checkpoint block, never a silent
+    * empty or short result. */
+  private def sameRowsOrLoud(df: DataFrame, expected: Seq[String]): Unit =
+    try assert(sortedRows(df) == expected)
+    catch { case e: org.apache.spark.SparkException =>
+      val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+      assert(msg.contains("Checkpoint block rdd_") && msg.contains("not found"), msg)
+    }
+
+  test("a lost checkpoint block fails loudly: temporalSplit and the evaluators' metric rows") {
+    features.count() // the shared cache fills outside the watched calls
+    val ((train, test), splitIds) = newPersistentRdds(Pipelines.temporalSplit(features, 7))
+    val (_, score) = Pipelines.trainClassifier(train, maxIter = 3)
+    val reg = Pipelines.trainRegressor(train, maxIter = 3)
+    val (cls, clsIds) = newPersistentRdds(Pipelines.evalClassifier(score(test)))
+    val (regm, regIds) = newPersistentRdds(Pipelines.evalRegressor(reg.transform(test)))
+    assert(splitIds.nonEmpty && clsIds.nonEmpty && regIds.nonEmpty)
+    val frames = Seq(cls, regm, train, test)
+    val expected = frames.map(sortedRows)
+    assert(expected.forall(_.nonEmpty))
+    (splitIds ++ clsIds ++ regIds).foreach(id =>
+      spark.sparkContext.getPersistentRDDs(id).unpersist(blocking = true))
+    frames.zip(expected).foreach { case (df, rows) => sameRowsOrLoud(df, rows) }
+  }
 }

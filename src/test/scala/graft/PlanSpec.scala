@@ -1172,4 +1172,17 @@ class PlanSpec extends AnyFunSuite {
     assert("Scan parquet".r.findAllIn(physical("q_curriculum")).length == 1)
     assert("Scan parquet".r.findAllIn(physical("q_mode")).length == 1)
   }
+
+  test("integer TVF arguments outside the 32-bit range fail with the op name") {
+    withExtensionsSession { s2 =>
+      Tables.documents(s2, TestSpark.Sf).createOrReplaceTempView("docs_cd32")
+      Seq("4294967301", "-2147483649").foreach { n =>
+        val err = intercept[Exception] {
+          s2.sql(s"SELECT * FROM crossdoc_ngram('docs_cd32', 'doc_id', 'text', $n)").collect()
+        }
+        assert(err.getMessage.contains("crossdoc_ngram") &&
+          err.getMessage.contains("must be a 32-bit integer literal"), err.getMessage)
+      }
+    }
+  }
 }

@@ -963,4 +963,33 @@ class StreamingSpec extends AnyFunSuite {
       }
     } finally q.stop()
   }
+
+  test("StreamScale.study runs Bench's four streaming_scale legs: resume conserves, TTL evicts") {
+    import com.fasterxml.jackson.databind.ObjectMapper
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{max, row_number}
+    import scala.jdk.CollectionConverters._
+    // a child session: the legs set the state-store provider on theirs
+    val out = StreamScale.study(spark.newSession(), TestSpark.Sf, targetKeys = 2000)
+    val json = new ObjectMapper().readTree(out)
+    assert(json.fieldNames().asScala.toSet == Set("keys", "rows", "files", "ev_per_key",
+      "stage_sec", "eviction_proof", "eviction_peak", "eviction_final", "legs"), out)
+    assert(json.get("legs").fieldNames().asScala.toSet ==
+      Set("welford_rocks_cold", "dedup_daily_rocks", "pct_ttl2d_evict", "resume"), out)
+    assert(json.get("legs").get("resume").get("output_match").asBoolean(), out)
+    // Each user's keys carry its first four events. A key is evicted once
+    // the final watermark (last event - 1 h) passes its last event + 2 days.
+    // Here the staged events span three days, so only a few users go idle
+    // and eviction_proof (final < peak / 2) reads false; the count is exact.
+    val last = Tables.normalizeTs(Tables.events(spark, TestSpark.Sf))
+      .withColumn("rn", row_number().over(Window.partitionBy("user_id").orderBy("ts", "event_id")))
+      .filter($"rn" <= 4).groupBy("user_id").agg(max("ts").as("last"))
+    val end = last.agg(max("last")).head().getLong(0)
+    val idleUsers = last.filter($"last" + 2 * DayNs + DayNs / 24 < end).count()
+    val keysPerUser = json.get("keys").asLong() / last.count()
+    assert(idleUsers > 0)
+    assert(json.get("eviction_peak").asLong() == json.get("keys").asLong(), out)
+    assert(json.get("eviction_peak").asLong() - json.get("eviction_final").asLong() ==
+      idleUsers * keysPerUser, out)
+  }
 }
