@@ -198,8 +198,9 @@ object Bench {
       // feature frame + both fits + metric frames + serving pipeline —
       // the heavyweight chain, started first
       "ml" -> Seq("q_ml_importances", "q_ml_serve", "q_ml_classifier", "q_ml_regressor"),
-      // quantizer + brute ground truth + persisted index + PQ fit +
-      // cell-keyed code table; q_ann_ivf last — the _indexed warmer
+      // quantizer + brute ground truth + the one ANN index (PQ fit and
+      // cell-partitioned codes, shared by _indexed, _pq and _ivfpq);
+      // q_ann_ivf last — the _indexed warmer
       // builds the memos but not the in-memory ivfTopK scoring path's
       // codegen (VERDICT r15 ask #3). NOT split further (r21 measured:
       // an 8-family layout inflated warmup 34.3 -> 44.0 s — slot

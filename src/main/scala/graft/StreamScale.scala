@@ -111,6 +111,19 @@ object StreamScale {
     (users * ampl, staged.count(), srcDir)
   }
 
+  /** Staged keys still live when a `ttl` idle timeout has run to the
+    * final watermark (last event time − `delayMs`). A key expires once
+    * the watermark passes its last event + `ttl`; times are compared in
+    * ms, as the watermark and the timeout compare them. So the eviction
+    * leg's final state must hold exactly this many rows. */
+  private def liveKeys(spark: SparkSession, srcDir: String,
+                       ttl: java.time.Duration, delayMs: Long): Long = {
+    val last = spark.read.parquet(srcDir).groupBy("user_id")
+      .agg(max(expr("ts div 1000000")).as("last_ms"))
+    val finalWm = last.agg(max(col("last_ms"))).head().getLong(0) - delayMs
+    last.filter(col("last_ms") + ttl.toMillis >= finalWm).count()
+  }
+
   /** A leg's `name -> object` entry in the study's `legs`, plus the
     * state counts the eviction proof reads back. */
   private case class Leg(entry: (String, String), peakRows: Long, finalRows: Long)
@@ -176,11 +189,13 @@ object StreamScale {
 
       // 3. Eviction proof — pct alerts with a 2-DAY idle TTL over a
       // month of event time: keys idle ≥2 days behind the watermark
-      // MUST be evicted, so final state ≪ peak state. A flat curve
-      // here would falsify the bounded-state claim.
+      // MUST be evicted and the others kept, so the final state holds
+      // exactly the live keys. A flat curve here would falsify the
+      // bounded-state claim.
+      val ttl = java.time.Duration.ofDays(2)
       val evict = runLeg(spark, "pct_ttl2d_evict", srcDir, ck("ev"))(
-        ev => Ingest.statefulPctAlerts(ev,
-          idleTimeout = java.time.Duration.ofDays(2)))
+        ev => Ingest.statefulPctAlerts(ev, idleTimeout = ttl, watermarkDelay = "1 hour"))
+      val live = liveKeys(spark, srcDir, ttl, delayMs = 3600L * 1000)
 
       // 4. Kill-and-resume at FULL state: phase 1 streams the first
       // half of the files into pct-alert state, the query stops, a new
@@ -244,7 +259,7 @@ object StreamScale {
 
       Json.obj(Seq("keys" -> nKeys, "rows" -> nRows, "files" -> NFiles,
         "ev_per_key" -> EvPerKey, "stage_sec" -> Json.num(stageSec, 3),
-        "eviction_proof" -> (evict.finalRows < evict.peakRows / 2),
+        "eviction_proof" -> (evict.finalRows == live),
         "eviction_peak" -> evict.peakRows, "eviction_final" -> evict.finalRows,
         "legs" -> Json.obj(Seq(welford.entry, dedup.entry, evict.entry, resume))))
     } finally {

@@ -40,8 +40,11 @@ import graft.functions.VectorFunctions._
   *    full-precision cosine — one hash join, corpus-side scan untouched
   *    by |queries|.
   * IVF-PQ composition (cell-partitioned codes probed via
-  * [[Similarity.probeCells]]) is the same two pieces glued on `cell` —
-  * documented in SCALE.md rather than duplicated here.
+  * [[Similarity.probeCells]]) is the same two pieces glued on `cell`.
+  * One artifact serves every indexed tier: [[writeAnnIndex]] lands the
+  * corpus partitioned by IVF cell with `pq_code` beside each vector,
+  * and [[readAnnIndex]] checks both the codebook and the quantizer
+  * identity before handing back the relation.
   */
 object ProductQuantization {
 
@@ -57,14 +60,9 @@ object ProductQuantization {
       * a codes artifact can never be silently consumed with a codebook
       * it was not encoded under (stale ADC distances LOOK fine — recall
       * just collapses — which is why the guard must be loud). */
-    def fingerprint: String = {
-      val bos = new java.io.ByteArrayOutputStream()
-      val out = new java.io.DataOutputStream(bos)
+    def fingerprint: String = md5 { out =>
       out.writeInt(dsub)
       centroids.foreach(_.foreach(_.foreach(out.writeFloat)))
-      out.flush()
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(bos.toByteArray).map("%02x".format(_)).mkString
     }
   }
 
@@ -237,8 +235,8 @@ object ProductQuantization {
   }
 
   /** The full m-code array for one vector column (shared by
-    * [[pqEncode]] and the single-pass cell+code derivation in
-    * [[ivfPqTopK]]). */
+    * [[pqEncode]] and the single-pass cell+code derivation of
+    * [[writeAnnIndex]] and [[ivfPqTopK]]). */
   private def codesExpr(vec: Column, model: PqModel): Column =
     array((0 until model.m).map(j => codeExpr(vec, j, model)): _*)
 
@@ -248,58 +246,65 @@ object ProductQuantization {
     corpus.filter(col(vecCol).isNotNull)
       .select(col(idCol), codesExpr(col(vecCol), model).as("pq_code"))
 
-  /** Persist the PQ artifact (the [[Similarity.writeIvfIndex]]
-    * discipline applied to PQ — VERDICT r6 item 4: without this, every
-    * fresh session re-pays the m concurrent sub-fits):
-    *  - `<path>/codes` — the [[pqEncode]] output (map-side encode, one
-    *    corpus pass; at 100 TB these land beside the vectors),
-    *  - `<path>/model` — one row per (j, c) centroid (m·ksub rows of
-    *    driver metadata),
-    *  - `<path>/meta`  — one row (m, ksub, dsub, fit_hash) where
-    *    fit_hash is [[PqModel.fingerprint]]; [[readPqIndex]] refuses a
-    *    model/meta pair that does not hash-match (the `<name>_meta`
-    *    guard discipline from [[Dedup.writeCorpusIndex]]). */
-  /** Codes live under a FINGERPRINT-KEYED dir (`codes_<fp8>`), written
-    * before model and meta: a crashed or killed re-write over the same
-    * path can only leave (a) the old artifact fully intact — new codes
-    * dir written but old meta still points at the old codes dir — or
-    * (b) a model/meta mismatch that [[readPqIndex]] rejects loudly. It
-    * can never pair one fit's codes with another fit's codebooks behind
-    * a passing fingerprint check (the review finding on the naive
-    * codes/model/meta overwrite order, where a same-m refit crash
-    * served garbage ADC distances silently). */
-  def writePqIndex(corpus: DataFrame, model: PqModel, path: String,
-                   idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+  /** Write the session's ONE ANN artifact — the cell-partitioned IVF
+    * layout with the PQ codes beside each vector, serving the indexed
+    * IVF, PQ and IVF-PQ probes alike:
+    *  - `<path>/data_<fp8>_<q8>` — PARTITIONED BY cell: (idCol, vecCol,
+    *    `cn` norm, `pq_code`), one map-side pass (cell assignment and
+    *    encode are projections of the same scanned row), so a probe
+    *    reads nprobe/nlist of the files;
+    *  - `<path>/model` — one row per (j, c) codebook centroid (m·ksub
+    *    rows of driver metadata);
+    *  - `<path>/meta` — one row (m, ksub, dsub, fit_hash,
+    *    quantizer_hash): [[PqModel.fingerprint]] and
+    *    [[quantizerFingerprint]].
+    * The data dir is keyed by both identities and written FIRST: a
+    * crashed or killed re-write over the same path leaves either the
+    * old artifact intact (old meta still names the old data dir) or a
+    * model/meta mismatch that [[readAnnIndex]] refuses — it can never
+    * pair one fit's codes or cells with another fit's codebooks behind
+    * a passing check.
+    *
+    * WRITE-ONCE PER SESSION per path: the caller memoizes the relation
+    * [[readAnnIndex]] resolves, which pins the file listing; rebuild
+    * into a fresh path (or a new session), never over a probed one. */
+  def writeAnnIndex(corpus: DataFrame, km: org.apache.spark.ml.clustering.KMeansModel,
+                    model: PqModel, path: String,
+                    idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    pqEncode(corpus, model, idCol, vecCol)
-      .write.mode("overwrite").parquet(s"$path/codes_${model.fingerprint.take(8)}")
+    val fitHash = model.fingerprint
+    val qHash = quantizerFingerprint(km)
+    indexRows(corpus, km, model, idCol, vecCol)
+      .write.mode("overwrite").partitionBy("cell")
+      .parquet(s"$path/data_${fitHash.take(8)}_${qHash.take(8)}")
     model.centroids.zipWithIndex.flatMap { case (cs, j) =>
       cs.zipWithIndex.map { case (cc, c) => (j, c, cc.toSeq) }
     }.toDF("j", "c", "centroid")
       .write.mode("overwrite").parquet(s"$path/model")
-    Seq((model.m, model.ksub, model.dsub, model.fingerprint))
-      .toDF("m", "ksub", "dsub", "fit_hash")
+    Seq((model.m, model.ksub, model.dsub, fitHash, qHash))
+      .toDF("m", "ksub", "dsub", "fit_hash", "quantizer_hash")
       .write.mode("overwrite").parquet(s"$path/meta")
   }
 
-  /** Load a [[writePqIndex]] artifact: reconstruct the codebooks
-    * (driver-side read of m·ksub metadata rows — the bounded-collect
-    * precedent), validate shape AND fingerprint against the meta row,
-    * and return the model with its codes frame (parquet-backed — the
-    * ADC scan genuinely reads the codes files). A partially overwritten
-    * or mixed-generation artifact fails here, loudly, instead of
-    * producing plausible-looking garbage distances. */
-  def readPqIndex(spark: org.apache.spark.sql.SparkSession,
-                  path: String): (PqModel, DataFrame) = {
+  /** Load a [[writeAnnIndex]] artifact for probing under quantizer `km`:
+    * reconstruct the codebooks (driver-side read of m·ksub metadata
+    * rows), check shape, the codebook fingerprint AND `km`'s identity
+    * against the meta row, and return the model with the resolved
+    * cell-partitioned relation. Each mismatch fails here, loudly:
+    * stale ADC distances or cells from another quantizer LOOK fine —
+    * recall just collapses. */
+  def readAnnIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+                   km: org.apache.spark.ml.clustering.KMeansModel): (PqModel, DataFrame) = {
     val metaRows = spark.read.parquet(s"$path/meta").collect()
-    require(metaRows.length == 1, s"readPqIndex: expected 1 meta row, got ${metaRows.length}")
+    require(metaRows.length == 1, s"readAnnIndex: expected 1 meta row, got ${metaRows.length}")
     val meta = metaRows(0)
     val (m, ksub, dsub) = (meta.getAs[Int]("m"), meta.getAs[Int]("ksub"), meta.getAs[Int]("dsub"))
     val fitHash = meta.getAs[String]("fit_hash")
+    val qHash = meta.getAs[String]("quantizer_hash")
     val rows = spark.read.parquet(s"$path/model").collect()
     require(rows.length == m * ksub,
-      s"readPqIndex: model table has ${rows.length} rows, meta says m*ksub = ${m * ksub}")
+      s"readAnnIndex: model table has ${rows.length} rows, meta says m*ksub = ${m * ksub}")
     val byJ = rows.map(r => (r.getAs[Int]("j"), r.getAs[Int]("c"),
         r.getAs[scala.collection.Seq[Float]]("centroid").toArray))
       .groupBy(_._1)
@@ -307,26 +312,50 @@ object ProductQuantization {
       byJ(j).sortBy(_._2).map(_._3).toArray
     }.toVector)
     require(model.fingerprint == fitHash,
-      s"readPqIndex: codebook fingerprint ${model.fingerprint} != meta fit_hash $fitHash — " +
+      s"readAnnIndex: codebook fingerprint ${model.fingerprint} != meta fit_hash $fitHash — " +
         "the model and meta tables come from different fits; refusing to serve garbage ADC distances")
-    // the codes dir is keyed by the verified fingerprint, so codes from
-    // any other fit are unreachable by construction (a missing dir —
-    // e.g. a partially-written artifact — fails the read loudly here)
-    (model, spark.read.parquet(s"$path/codes_${fitHash.take(8)}"))
+    val probeHash = quantizerFingerprint(km)
+    require(probeHash == qHash,
+      s"readAnnIndex: probe quantizer fingerprint $probeHash != meta quantizer_hash $qHash — " +
+        "the index was partitioned under a different coarse quantizer; refusing to probe the wrong cells")
+    // the data dir is keyed by the verified identities, so cells or
+    // codes from any other fit are unreachable by construction
+    (model, spark.read.parquet(s"$path/data_${fitHash.take(8)}_${qHash.take(8)}"))
   }
 
-  /** [[pqTopKFromCodes]] against a persisted [[writePqIndex]] artifact:
-    * the cross-session path — no refit, no re-encode; `corpus` is read
-    * only for the bounded full-precision rerank. */
-  def pqTopKIndexed(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                    corpus: DataFrame, queries: DataFrame, k: Int,
-                    rerank: Int = 20,
-                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val (model, codes) = readPqIndex(spark, indexPath)
-    require(codes.columns.contains(idCol),
-      s"pqTopKIndexed: codes artifact has columns [${codes.columns.mkString(", ")}], " +
-        s"expected id column '$idCol' — the index was written under a different id column")
-    pqTopKFromCodes(corpus, codes, queries, k, model, rerank, idCol, vecCol)
+  /** md5 over the coarse quantizer's shape and every centre coordinate
+    * in order — its identity in the [[writeAnnIndex]] meta, the
+    * [[PqModel.fingerprint]] discipline applied to the IVF half. */
+  def quantizerFingerprint(km: org.apache.spark.ml.clustering.KMeansModel): String = md5 { out =>
+    val cs = km.clusterCenters
+    out.writeInt(cs.length)
+    out.writeInt(cs.headOption.map(_.size).getOrElse(0))
+    cs.foreach(_.toArray.foreach(out.writeDouble))
+  }
+
+  private def md5(write: java.io.DataOutputStream => Unit): String = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bos)
+    write(out)
+    out.flush()
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(bos.toByteArray).map("%02x".format(_)).mkString
+  }
+
+  /** The [[writeAnnIndex]] row — (idCol, vecCol, cn, cell, pq_code) — in
+    * ONE corpus pass: assignment and encode are both scan-local
+    * projections of the same row, so deriving them separately and
+    * equi-joining would shuffle the corpus against itself for nothing.
+    * NULL vectors belong to no cell (the [[Similarity.fitQuantizer]]
+    * contract). */
+  private def indexRows(corpus: DataFrame,
+                        km: org.apache.spark.ml.clustering.KMeansModel, model: PqModel,
+                        idCol: String, vecCol: String): DataFrame = {
+    import org.apache.spark.ml.functions.array_to_vector
+    km.transform(corpus.filter(col(vecCol).isNotNull)
+        .withColumn("__features", array_to_vector(col(vecCol))))
+      .select(col(idCol), col(vecCol), l2Norm(col(vecCol)).as("cn"),
+        col("__cell").as("cell"), codesExpr(col(vecCol), model).as("pq_code"))
   }
 
   /** ADC lookup table for one query row: `lut(j)(c)` = rank-equivalent
@@ -357,9 +386,9 @@ object ProductQuantization {
     * `rerank` candidates → full-precision cosine on the candidate set →
     * top k. With `rerank` ≥ corpus size this IS brute force (asserted in
     * SimilaritySpec); smaller rerank trades recall for a codes-only scan.
-    * Encodes inline — production callers encode ONCE ([[pqEncode]]),
-    * persist the codes beside the vectors, and use [[pqTopKFromCodes]]
-    * so the scan genuinely reads codes, not vectors. */
+    * Encodes inline — production callers write the codes beside the
+    * vectors ONCE ([[writeAnnIndex]]) and use [[pqTopKFromCodes]] so the
+    * scan genuinely reads codes, not vectors. */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int, model: PqModel,
              rerank: Int = 20,
              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
@@ -367,7 +396,8 @@ object ProductQuantization {
       queries, k, model, rerank, idCol, vecCol)
 
   /** [[pqTopK]] against a precomputed/persisted code table
-    * (`(idCol, pq_code array<int>)` — the [[pqEncode]] output schema):
+    * (`(idCol, pq_code array<int>)` — the [[pqEncode]] output, or the
+    * [[writeAnnIndex]] relation):
     * the artifact path, where the ADC scan touches only the codes and
     * `corpus` is read solely for the bounded candidate rerank. */
   def pqTopKFromCodes(corpus: DataFrame, codeTable: DataFrame,
@@ -379,7 +409,7 @@ object ProductQuantization {
     // length is guarded IN-PLAN: a codes table encoded under a different
     // m than the passed model would otherwise score on element_at nulls
     // — recall collapses with no error. (A same-m different-fit mismatch
-    // is caught earlier by readPqIndex's fingerprint check; this is the
+    // is caught earlier by readAnnIndex's fingerprint check; this is the
     // last line of defense for hand-assembled code tables.)
     val codes = codeTable.select(col(idCol).as("neighbor_id"),
       when(size(col("pq_code")) === model.m, col("pq_code"))
@@ -394,29 +424,10 @@ object ProductQuantization {
     rerankExact(cands, queries, corpus, k, idCol, vecCol)
   }
 
-  /** Cell-keyed code table in ONE corpus pass — assignment and encode
-    * are both scan-local projections of the same row, so deriving them
-    * separately and equi-joining would shuffle the corpus against
-    * itself for nothing. At scale this projection IS the persisted
-    * layout (cell-partitioned files with pq_code beside the vector);
-    * serving callers materialize it once ([[ivfPqTopKFromCellCodes]])
-    * — re-deriving it per query re-pays not just the encode pass but
-    * the PLAN cost of the m·ksub-literal argmin tree, which measured
-    * ~3 s/rep on the registered q_ann_ivfpq before it was memoized. */
-  def ivfPqCellCodes(corpus: DataFrame,
-                     km: org.apache.spark.ml.clustering.KMeansModel, model: PqModel,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.ml.functions.array_to_vector
-    km.transform(corpus.filter(col(vecCol).isNotNull) // fitQuantizer NULL contract
-        .withColumn("__features", array_to_vector(col(vecCol))))
-      .select(col(idCol).as("neighbor_id"), col("__cell").as("cell"),
-        codesExpr(col(vecCol), model).as("pq_code"))
-  }
-
-  /** IVF-PQ probe against a precomputed cell-keyed code table (the
-    * [[ivfPqCellCodes]] schema — materialized in memory or read back
-    * cell-partitioned from disk): coarse probe prunes to nprobe cells,
-    * ADC scores only their codes, shared exact-rerank tail. */
+  /** IVF-PQ probe against a cell-keyed code table — `(idCol, cell,
+    * pq_code)`, the [[writeAnnIndex]] schema, read back from disk or
+    * derived inline: coarse probe prunes to nprobe cells, ADC scores
+    * only their codes, shared exact-rerank tail. */
   def ivfPqTopKFromCellCodes(corpus: DataFrame, cellCodes: DataFrame,
                              queries: DataFrame, k: Int,
                              km: org.apache.spark.ml.clustering.KMeansModel, model: PqModel,
@@ -429,7 +440,8 @@ object ProductQuantization {
       idCol, vecCol).select("query_id", "cell")
     val qlut = queries.select(col(idCol).as("query_id"),
       lutExpr(col(vecCol), model).as("lut"))
-    val cands = cellCodes.join(broadcast(cellsOnly), Seq("cell"))
+    val cands = cellCodes.select(col(idCol).as("neighbor_id"), col("cell"), col("pq_code"))
+      .join(broadcast(cellsOnly), Seq("cell"))
       .join(broadcast(qlut), Seq("query_id"))
       .transform(adcCandidates(model, rerank))
     rerankExact(cands, queries, corpus, k, idCol, vecCol)
@@ -440,17 +452,17 @@ object ProductQuantization {
     * scores only the probed cells' CODES, and the exact rerank runs on
     * the bounded survivor set. The two-level composition SCALE.md
     * promises, as an API: at 100 TB the codes live cell-partitioned
-    * (the [[Similarity.writeIvfIndex]] layout with `pq_code` beside the
-    * vector), a probe reads nprobe/nlist of the files and 8 bytes per
-    * row. With nprobe = nlist and full-width rerank this IS brute force
-    * (asserted in SimilaritySpec — both pruning levels pass everything
-    * through). Derives the code table inline — serving callers
-    * materialize it once and use [[ivfPqTopKFromCellCodes]]. */
+    * (the [[writeAnnIndex]] layout, `pq_code` beside the vector), a
+    * probe reads nprobe/nlist of the files and 8 bytes per row. With
+    * nprobe = nlist and full-width rerank this IS brute force (asserted
+    * in SimilaritySpec — both pruning levels pass everything through).
+    * Derives the code table inline — serving callers write the index
+    * once and use [[ivfPqTopKFromCellCodes]]. */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                 km: org.apache.spark.ml.clustering.KMeansModel, model: PqModel,
                 nprobe: Int = 4, rerank: Int = 20,
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    ivfPqTopKFromCellCodes(corpus, ivfPqCellCodes(corpus, km, model, idCol, vecCol),
+    ivfPqTopKFromCellCodes(corpus, indexRows(corpus, km, model, idCol, vecCol),
       queries, k, km, model, nprobe, rerank, idCol, vecCol)
 
   /** Shared ADC candidate cut: score (pq_code, lut) pairs with the m

@@ -132,85 +132,6 @@ object Similarity {
       .fit(sampled.withColumn("__features", array_to_vector(col(vecCol))))
   }
 
-  /** Balanced coarse quantizer for adversarial distributions: the plain
-    * k-means|| fit (seeded, sample-able — same knobs as [[fitQuantizer]])
-    * lets a dense hot region collapse into ONE cell when its internal
-    * variance is small next to the spread of the rest of the corpus; a
-    * probe of that cell then scans an unbounded fraction of the data,
-    * which is exactly the failure IVF exists to prevent. This fit
-    * refines the centers until no cell holds more than `maxCellFrac` of
-    * the (sampled) corpus: each round 2-means-splits the fullest cell's
-    * members and replaces its centroid with the two children, growing
-    * the cell count past nlist only as far as the splits require
-    * (bounded by 2·nlist rounds). Stops early if a split makes no
-    * progress — a cell of bit-identical vectors is geometrically
-    * unsplittable by ANY quantizer, so the bound is best-effort there.
-    *
-    * Returns an ordinary KMeansModel (rebuilt from the refined centers),
-    * so the memoized-artifact, materialized-index, and probe paths all
-    * consume it unchanged. Asserted against a skewed fixture in
-    * SimilaritySpec. */
-  def fitBalancedQuantizer(corpus: DataFrame, nlist: Int, maxCellFrac: Double = 0.3,
-                           sampleFraction: Double = 1.0,
-                           vecCol: String = "embedding"): org.apache.spark.ml.clustering.KMeansModel = {
-    import org.apache.spark.ml.functions.array_to_vector
-    import org.apache.spark.ml.clustering.{GraftKMeansBridge, KMeans}
-    // up to 2·nlist rounds each add a net +1 cell to the initial nlist
-    require(maxCellFrac > 1.0 / (3.0 * nlist),
-      s"maxCellFrac=$maxCellFrac infeasible for at most ${3 * nlist} cells")
-    val sampled =
-      (if (sampleFraction >= 1.0) corpus
-       else corpus.sample(withReplacement = false, sampleFraction, seed = 42))
-        .filter(col(vecCol).isNotNull) // the fitQuantizer NULL contract
-        .select(array_to_vector(col(vecCol)).as("__features"))
-        .cache()
-    val n = sampled.count().toDouble
-    var km = new KMeans().setK(nlist).setSeed(42).setFeaturesCol("__features")
-      .setPredictionCol("__cell").fit(sampled)
-    // a split can leave the MAX unchanged when a second cell ties the one
-    // just split — only stop after several consecutive no-progress rounds
-    // (the degenerate unsplittable-cell case), not on the first plateau.
-    // Progress = the max dropping OR the number of over-threshold cells
-    // dropping: with many equal-size over-full clusters the max stays
-    // flat for rounds while each split genuinely fixes one cell, and a
-    // max-only plateau test would bail with the balance contract still
-    // violated
-    var prevHot = Long.MaxValue
-    var prevOver = Int.MaxValue
-    var stuck = 0
-    var done = false
-    var round = 0
-    while (!done && round < 2 * nlist) {
-      // one prediction pass per round serves both the histogram and the
-      // hot cell's member extraction
-      val assigned = km.transform(sampled).cache()
-      val counts = assigned.groupBy("__cell").count()
-        .collect().map(r => r.getInt(0) -> r.getLong(1)) // ≤ 3·nlist rows: driver metadata
-      // tie on count → smallest cell id, so scheduling order can't pick
-      // a different split target run-to-run (everything else is seeded)
-      val (hot, hotN) = counts.maxBy { case (c, cnt) => (cnt, -c) }
-      val nOver = counts.count(_._2 / n > maxCellFrac)
-      stuck = if (hotN >= prevHot && nOver >= prevOver) stuck + 1 else 0
-      if (hotN / n <= maxCellFrac || stuck >= 3) { assigned.unpersist(); done = true }
-      else {
-        val members = assigned.filter(col("__cell") === hot).drop("__cell")
-        val sub = new KMeans().setK(2).setSeed(42 + round).setFeaturesCol("__features")
-          .setPredictionCol("__cell").fit(members)
-        val kept = km.clusterCenters.zipWithIndex.collect {
-          case (c, i) if i != hot => c.toArray
-        }
-        km = GraftKMeansBridge.fromCenters(
-          kept ++ sub.clusterCenters.map(_.toArray), "__features", "__cell")
-        assigned.unpersist() // the 2-means fit above was the last consumer
-        prevHot = hotN
-        prevOver = nOver
-        round += 1
-      }
-    }
-    sampled.unpersist()
-    km
-  }
-
   /** IVF (inverted-file) ANN: the pre-fitted coarse quantizer partitions
     * the corpus into cells; each query probes its `nprobe` nearest cells
     * and scores only those vectors. The 100 TB shape: the corpus is
@@ -288,70 +209,28 @@ object Similarity {
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     ivfTopK(corpus, queries, k, fitQuantizer(corpus, nlist, 1.0, vecCol), nprobe, idCol, vecCol)
 
-  /** Materialize the IVF index: cell assignment is a map-side transform
-    * against the broadcast quantizer, the corpus lands PARTITIONED BY
-    * cell with per-vector norms precomputed — the layout the 100 TB
-    * design statement promises, so a probe reads nprobe/nlist of the
-    * files, not a filtered full scan.
-    *
-    * WRITE-ONCE PER SESSION per path: [[ivfTopKIndexed]] memoizes the
-    * resolved index relation per (session, path) — rebuild into a FRESH
-    * path (or a new session), never over a path the session has already
-    * probed (see indexRelationMemo). */
-  def writeIvfIndex(corpus: DataFrame, km: org.apache.spark.ml.clustering.KMeansModel,
-                    path: String,
-                    idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    import org.apache.spark.ml.functions.array_to_vector
-    km.transform(corpus.filter(col(vecCol).isNotNull)
-        .withColumn("__features", array_to_vector(col(vecCol))))
-      .select(col(idCol), col(vecCol), l2Norm(col(vecCol)).as("cn"), col("__cell").as("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
-  }
-
-  /** Probe a materialized IVF index: per-query probe cells come from the
-    * quantizer's centroids (nlist rows — driver metadata, like the
-    * centroid broadcast itself); their UNION becomes a literal partition
-    * filter on the index scan, so pruning happens at file-listing time
-    * (PartitionFilters — asserted in SimilaritySpec). Scoring then joins
-    * the broadcast probe set per cell exactly like the in-memory path,
-    * and returns identical results. */
-  def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                     queries: DataFrame, k: Int,
+  /** Probe a materialized IVF index — the cell-partitioned relation
+    * [[ProductQuantization.readAnnIndex]] returns (or any frame with
+    * idCol, vecCol, `cn` and a `cell` partition column): per-query probe
+    * cells come from the quantizer's centroids (nlist rows — driver
+    * metadata, like the centroid broadcast itself); their UNION becomes
+    * a literal partition filter on the index scan, so pruning happens at
+    * file-listing time (PartitionFilters — asserted in SimilaritySpec).
+    * Scoring then joins the broadcast probe set per cell exactly like
+    * the in-memory path, and returns identical results. */
+  def ivfTopKIndexed(index: DataFrame, queries: DataFrame, k: Int,
                      km: org.apache.spark.ml.clustering.KMeansModel, nprobe: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val probes = probeCells(spark, queries, km, nprobe, idCol, vecCol)
+    val probes = probeCells(index.sparkSession, queries, km, nprobe, idCol, vecCol)
     // the probed-cell union is bounded by nlist — driver metadata, and
     // the literal isin is what turns into a partition-pruning filter
     val probedCells = probes.select("cell").distinct()
       .collect().map(_.getInt(0)).sorted.toSeq
-    // resolve-once index relation (r20 optimization): re-resolving the
-    // partitioned index per probe paid the directory listing + footer
-    // read + DataSource resolution (~90 ms driver — the Tables.read
-    // memo rationale) on EVERY probe of a static artifact; catalog
-    // semantics per (session, path), partition pruning still happens
-    // per probe on the literal isin filter below
-    val rel = indexRelationMemo.getOrElseUpdate(spark, indexPath)(
-      spark.read.parquet(indexPath))
-    val cells = rel
+    val cells = index
       .filter(col("cell").isin(probedCells: _*))
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"), col("cn"), col("cell"))
     scoreProbes(probes, cells, k)
   }
-
-  /** Resolved-relation memo for [[ivfTopKIndexed]] index paths — the
-    * Tables.relationMemo discipline for operator-owned artifacts.
-    *
-    * CONTRACT (advice r20): an index path is WRITE-ONCE per session.
-    * The memo pins the file listing resolved at first probe, so
-    * rewriting an index at the same path within one session (the public
-    * API cannot stop write-then-rebuild) would leave later probes on
-    * the stale listing — failed reads after a compaction, or silently
-    * stale neighbors after an append. Rebuilders must write to a fresh
-    * path (every current caller uses per-build temp paths) or start a
-    * new session; [[writeIvfIndex]] documents the same rule at the
-    * write side. */
-  private val indexRelationMemo =
-    new graft.queries.SessionMemo[String, org.apache.spark.sql.DataFrame]("ivfIndexRelationMemo")
 
   /** All (a<b) pairs above a cosine threshold — embedding near-dup
     * detection, spec-baseline form. The `a < b` non-equi join plans as a

@@ -93,9 +93,13 @@ object SimilarityQueries {
     // the lambdas read bound attributes instead; CollapseProject keeps
     // the boundary because the aliases are non-cheap and multiply
     // referenced. Same expressions per row, computed once — values are
-    // bit-identical.
+    // bit-identical. The id rides the staging under its own fixed name
+    // too, so no idCol can collide with a helper name. It is renamed
+    // back in its own step: aliased inside the final select, the
+    // lambdas' `__sc` would resolve to that alias when idCol is `__sc`
+    // (a lateral column alias).
     val stagedE = filter(col(vecCol), x => x.isNotNull)
-    val staged = df.select(col(idCol), stagedE.as("__e"),
+    val staged = df.select(col(idCol).as("__id"), stagedE.as("__e"),
         array_min(stagedE).cast("double").as("__mn"),
         array_max(stagedE).cast("double").as("__mx"))
       .withColumn("__sc", (col("__mx") - col("__mn")) / 255.0)
@@ -113,9 +117,10 @@ object SimilarityQueries {
     })
     val mse = aggregate(err, lit(0.0), (acc, v) => acc + v) /
       size(e).cast("double")
-    staged.select(col(idCol), rnd(mnd, 6).as("mn"), rnd(mxd, 6).as("mx"),
+    staged.select(col("__id"), rnd(mnd, 6).as("mn"), rnd(mxd, 6).as("mx"),
       when(sc > 0.0, qsum).otherwise(lit(0L)).as("qsum"),
       rnd(when(sc > 0.0, mse).otherwise(lit(0.0)) * 1e6, 6).as("mse_e6"))
+      .withColumnRenamed("__id", idCol)
   }
 
   def qEmbeddingQuantize(spark: SparkSession, dir: String): DataFrame =
@@ -259,19 +264,29 @@ object SimilarityQueries {
       df
     }
 
-  /** Materialized IVF index written once per (session, dir) — the memo
-    * stores the path; the files are scratch, swept at JVM exit
+  /** The session's one ANN artifact per (session, dir): the corpus
+    * partitioned by IVF cell with its PQ codes
+    * ([[ProductQuantization.writeAnnIndex]] — the PQ fit happens here,
+    * once), read back identity-checked against the memoized quantizer.
+    * The memo holds the resolved relation, so every probe of
+    * q_ann_ivf_indexed, q_ann_pq and q_ann_ivfpq skips the directory
+    * listing and footer reads. The files are scratch, swept at JVM exit
     * ([[graft.IoUtil.scratchDir]]): repeated sessions would otherwise
-    * accumulate full parquet copies of the encoded corpus under /tmp. */
-  private val ivfIndexMemo = new SessionMemo[String, String]("ivfIndexMemo")
+    * accumulate full parquet copies of the encoded corpus under /tmp.
+    * The quantizer is fitted FIRST, so an empty or sub-nlist corpus
+    * fails through its loud-failure contract. */
+  private val annIndexMemo =
+    new SessionMemo[String, (ProductQuantization.PqModel, DataFrame)]("annIndexMemo")
 
-  private def cachedIvfIndex(spark: SparkSession, dir: String): String =
-    ivfIndexMemo.getOrElseUpdate(spark, dir) {
-      val path = graft.IoUtil.scratchDir("graft-ivf-index").toString + "/idx"
-      Similarity.writeIvfIndex(
-        Tables.embeddings(spark, dir),
-        cachedQuantizer(spark, dir, cachedParams(spark, dir).nlist), path)
-      path
+  private def cachedAnnIndex(spark: SparkSession,
+                             dir: String): (ProductQuantization.PqModel, DataFrame) =
+    annIndexMemo.getOrElseUpdate(spark, dir) {
+      val emb = Tables.embeddings(spark, dir)
+      val km = cachedQuantizer(spark, dir, cachedParams(spark, dir).nlist)
+      val path = graft.IoUtil.scratchDir("graft-ann-index").toString + "/idx"
+      ProductQuantization.writeAnnIndex(emb, km,
+        ProductQuantization.fitPq(emb, m = 16, ksub = 16), path)
+      ProductQuantization.readAnnIndex(spark, path, km)
     }
 
   /** Per-query recall@k of `approx` against `exact` ground truth — ONE
@@ -359,46 +374,18 @@ object SimilarityQueries {
     recallCert(ivfIndexedApprox(spark, dir), cachedBruteTop5(spark, dir),
       floor = IvfRecallFloor)
 
-  /** The index is written once per (session, dir) partitioned by cell,
-    * and probes prune at file-listing time (PartitionFilters — asserted
-    * in SimilaritySpec). This is the layout the 100 TB design statement
-    * promises — a probe reads nprobe/nlist of the files, not a filtered
-    * full scan. */
+  /** Probes the session's ANN index ([[cachedAnnIndex]]), which is
+    * partitioned by cell, so probes prune at file-listing time
+    * (PartitionFilters — asserted in SimilaritySpec). This is the layout
+    * the 100 TB design statement promises — a probe reads nprobe/nlist
+    * of the files, not a filtered full scan. */
   private def ivfIndexedApprox(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val p = cachedParams(spark, dir)
-    Similarity.ivfTopKIndexed(spark, cachedIvfIndex(spark, dir),
+    Similarity.ivfTopKIndexed(cachedAnnIndex(spark, dir)._2,
       emb.filter(col("vec_id") < AnnQueryIdBound), 5,
       cachedQuantizer(spark, dir, p.nlist), p.nprobe)
   }
-
-  /** Fit-once PQ codebooks per (session, dir) — the persisted-artifact
-    * discipline of [[cachedQuantizer]]; m·ksub·dsub floats of driver
-    * metadata. */
-  private val pqMemo = new SessionMemo[String, ProductQuantization.PqModel]("pqMemo")
-
-  private def cachedPqModel(spark: SparkSession, dir: String): ProductQuantization.PqModel =
-    pqMemo.getOrElseUpdate(spark, dir) {
-      ProductQuantization.fitPq(Tables.embeddings(spark, dir), m = 16, ksub = 16)
-    }
-
-  /** The persisted PQ artifact — [[ProductQuantization.writePqIndex]]
-    * once per (session, dir), read back fingerprint-validated. q_ann_pq
-    * serves from the ARTIFACT (parquet-backed codes, no refit, no
-    * re-encode), so the bench measures the cross-session path the
-    * Scaladoc promises, and a fresh session pays one bounded read
-    * instead of the m concurrent sub-fits. */
-  private val pqIndexMemo =
-    new SessionMemo[String, (ProductQuantization.PqModel, DataFrame)]("pqIndexMemo")
-
-  private def cachedPqIndex(spark: SparkSession,
-                            dir: String): (ProductQuantization.PqModel, DataFrame) =
-    pqIndexMemo.getOrElseUpdate(spark, dir) {
-      val path = graft.IoUtil.scratchDir("graft-pq-index").toString + "/idx"
-      ProductQuantization.writePqIndex(
-        Tables.embeddings(spark, dir), cachedPqModel(spark, dir), path)
-      ProductQuantization.readPqIndex(spark, path)
-    }
 
   /** Floor just under the minimum measured mean recall@5 across
     * sf0.001/0.01/0.1 — 0.89 / 0.90 / 0.98 for m=16, ksub=16 with the
@@ -416,13 +403,13 @@ object SimilarityQueries {
 
   /** Product-quantization ANN (16 subspaces × 16 centroids → 4-bit
     * codes, 32× compression of the 64-float embeddings) with exact
-    * rerank. The ADC scan reads codes only; the rerank joins
-    * ≤ |q|·rerank candidates back to full vectors
-    * ([[ProductQuantization.pqTopK]]). */
+    * rerank. The ADC scan reads the ANN index's codes only (every
+    * cell); the rerank joins ≤ |q|·rerank candidates back to full
+    * vectors ([[ProductQuantization.pqTopKFromCodes]]). */
   private def pqApprox(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val (model, codes) = cachedPqIndex(spark, dir)
-    ProductQuantization.pqTopKFromCodes(emb, codes,
+    val (model, index) = cachedAnnIndex(spark, dir)
+    ProductQuantization.pqTopKFromCodes(emb, index,
       emb.filter(col("vec_id") < AnnQueryIdBound), 5, model,
       rerank = cachedParams(spark, dir).rerank)
   }
@@ -436,39 +423,6 @@ object SimilarityQueries {
     * rerank step costs ≤ 0.02 recall over IVF alone at every SF. */
   val IvfPqRecallFloor = 0.56
 
-  /** Cell-keyed PQ code table per (session, dir) — the in-memory twin
-    * of the cell-partitioned persisted layout the 100 TB design serves
-    * from. Materialized once: deriving it inline per query re-paid the
-    * m·ksub-literal encode tree's PLAN cost on every execution
-    * (measured ~3 s/rep on q_ann_ivfpq before memoization — the encode
-    * arithmetic itself is trivial at fixture scale). */
-  private val ivfPqCodesMemo = new SessionMemo[String, DataFrame]("ivfPqCodesMemo")
-
-  private def cachedIvfPqCellCodes(spark: SparkSession, dir: String): DataFrame =
-    ivfPqCodesMemo.getOrElseUpdate(spark, dir) {
-      val p = cachedParams(spark, dir)
-      // CELL-partitioned, row-derived multi-block layout (r21): the
-      // memoized code table inherited the single-split embeddings
-      // scan's ONE partition, so every probe's ADC scoring stage ran
-      // on one core (StageProf: 210 ms single-task). Partitioning the
-      // cached blocks BY CELL both distributes the scoring and lets
-      // the InMemoryRelation's per-batch cell stats prune unprobed
-      // cells under the isin filter — the in-memory twin of the
-      // persisted PARTITIONED BY cell index layout. Partition count
-      // tracks the data grain (~500 codes per block, cores-capped),
-      // the cachedDocTokens rule.
-      val parts = math.max(1, math.min(
-        math.ceil(corpusCount(spark, dir) / 500.0).toInt,
-        spark.sparkContext.defaultParallelism))
-      val df = ProductQuantization.ivfPqCellCodes(
-        Tables.embeddings(spark, dir),
-        cachedQuantizer(spark, dir, p.nlist),
-        cachedPqIndex(spark, dir)._1)
-        .repartition(parts, col("cell")).cache()
-      df.count()
-      df
-    }
-
   /** q_ann_ivfpq: recall certificate of the IVF-PQ COMPOSED tier, which
     * puts the composition under the same per-round recall measurement
     * as its two components. */
@@ -479,15 +433,14 @@ object SimilarityQueries {
   /** The two-level shape the 100 TB design statement promises: the
     * coarse probe prunes to nprobe/nlist cells, ADC scores only the
     * probed cells' codes, and the exact-rerank tail is shared
-    * ([[ProductQuantization.ivfPqTopK]]). Probes the memoized
-    * cell-keyed code table, as a production caller would probe the
-    * persisted cell-partitioned codes. */
+    * ([[ProductQuantization.ivfPqTopK]]). Probes the session's ANN
+    * index, whose codes are persisted partitioned by cell. */
   private def ivfPqApprox(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val p = cachedParams(spark, dir)
-    val (model, _) = cachedPqIndex(spark, dir)
+    val (model, index) = cachedAnnIndex(spark, dir)
     ProductQuantization.ivfPqTopKFromCellCodes(
-      emb, cachedIvfPqCellCodes(spark, dir),
+      emb, index,
       emb.filter(col("vec_id") < AnnQueryIdBound), 5,
       cachedQuantizer(spark, dir, p.nlist), model,
       nprobe = p.nprobe, rerank = p.rerank)

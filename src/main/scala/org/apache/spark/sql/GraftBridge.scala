@@ -4,11 +4,9 @@ import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Bridge into the `private[sql]` and `private[spark]` APIs graft needs,
-  * one object per reachable package (the other is
-  * `org.apache.spark.ml.clustering.GraftKMeansBridge`, whose constructor
-  * is `private[ml]` and so unreachable from here). Everything in graft
-  * goes through these two; nothing else non-public is touched. */
+/** Bridge into the `private[sql]` and `private[spark]` APIs graft needs.
+  * Everything in graft goes through this one object; nothing else
+  * non-public is touched. */
 object GraftBridge {
   /** Column↔Expression converters — the supported pattern for extension
     * libraries shipping custom Catalyst expressions (Spark 4 wraps

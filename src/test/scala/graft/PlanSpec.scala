@@ -1019,6 +1019,21 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("embedding_quantize TVF: an id column named like a staging helper keeps its ids") {
+    withExtensionsSession { s2 =>
+      val emb = Tables.embeddings(s2, TestSpark.Sf).filter(col("vec_id") < 50)
+      val expected = graft.queries.SimilarityQueries.embeddingQuantize(emb)
+        .orderBy("vec_id").collect().toSeq
+      Seq("__sc", "__e", "__mn", "__mx").foreach { id =>
+        emb.withColumnRenamed("vec_id", id).createOrReplaceTempView("emb_helper_id")
+        val got = s2.sql(s"SELECT * FROM embedding_quantize('emb_helper_id', '$id', 'embedding') " +
+          s"ORDER BY `$id`").collect().toSeq
+        assert(got.map(_.getLong(0)) == expected.map(_.getLong(0)), s"idCol $id")
+        assert(got == expected, s"idCol $id")
+      }
+    }
+  }
+
   test("filter_funnel TVF: SQL == DataFrame, one global agg, no window/join") {
     withExtensionsSession { s2 =>
       Tables.documents(s2, TestSpark.Sf).createOrReplaceTempView("docs_fn")

@@ -133,12 +133,14 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("materialized IVF index: partition-pruned probes, identical results") {
+    import graft.operators.ProductQuantization
     val emb = Tables.embeddings(spark, TestSpark.Sf)
     val km = Similarity.fitQuantizer(emb, nlist = 8)
     val idx = java.nio.file.Files.createTempDirectory("graft-ivf").toString + "/idx"
-    Similarity.writeIvfIndex(emb, km, idx)
+    ProductQuantization.writeAnnIndex(emb, km, ProductQuantization.fitPq(emb, m = 8, ksub = 16), idx)
+    val (_, index) = ProductQuantization.readAnnIndex(spark, idx, km)
     val q = emb.filter($"vec_id" < 10)
-    val indexed = Similarity.ivfTopKIndexed(spark, idx, q, 5, km, nprobe = 3)
+    val indexed = Similarity.ivfTopKIndexed(index, q, 5, km, nprobe = 3)
     val inMem = Similarity.ivfTopK(emb, q, 5, km, 3, "vec_id", "embedding")
     assert(indexed.select("query_id", "neighbor_id", "rank").as[(Long, Long, Int)]
       .collect().sorted.toSeq ==
@@ -218,40 +220,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(!r(0).getBoolean(1), "recall_ok TRUE under an unreachable floor")
     assert(r(0).getBoolean(2), "coverage_ok FALSE")
     assert(r(0).getBoolean(3), "kept_bounded FALSE")
-  }
-
-  test("balanced quantizer bounds the max cell fraction on a skewed corpus") {
-    import org.apache.spark.ml.functions.array_to_vector
-    // adversarial skew: 900 vectors in one dense blob (small internal
-    // variance), 100 scattered far away — the plain fit spends its
-    // centroids chasing the scattered mass and leaves the blob as one
-    // hot cell holding ~90% of the corpus
-    val dim = 8
-    val rows = (0 until 900).map { i =>
-      (i.toLong, Array.tabulate(dim)(j => 1.0f + 0.05f * math.sin(i * 13 + j * 7).toFloat))
-    } ++ (0 until 100).map { i =>
-      (900L + i, Array.tabulate(dim)(j => 10.0f * math.cos(i * 31 + j * 11).toFloat))
-    }
-    val emb = rows.toDF("vec_id", "embedding")
-    def maxFrac(km: org.apache.spark.ml.clustering.KMeansModel): Double =
-      km.transform(emb.select(array_to_vector($"embedding").as("__features")))
-        .groupBy("__cell").count().agg(max("count")).as[Long].head() / 1000.0
-    val plain = Similarity.fitQuantizer(emb, nlist = 16)
-    assert(maxFrac(plain) > 0.5,
-      s"fixture not adversarial enough: plain max frac ${maxFrac(plain)}")
-    val balanced = Similarity.fitBalancedQuantizer(emb, nlist = 16, maxCellFrac = 0.3)
-    assert(maxFrac(balanced) <= 0.3, s"balanced max frac ${maxFrac(balanced)}")
-    // the refined model still drives the ordinary IVF probe path
-    val q = emb.filter($"vec_id" < 5)
-    val res = Similarity.ivfTopK(emb, q, 3, balanced, 4, "vec_id", "embedding")
-      .select("query_id", "rank").as[(Long, Int)].collect()
-    assert(res.groupBy(_._1).size == 5 && res.groupMapReduce(_._1)(_ => 1)(_ + _).values.forall(_ == 3))
-    // and round-trips through the MLWritable artifact like any quantizer
-    val dir = java.nio.file.Files.createTempDirectory("graft-balq").toString + "/km"
-    balanced.write.overwrite().save(dir)
-    val loaded = org.apache.spark.ml.clustering.KMeansModel.load(dir)
-    assert(loaded.clusterCenters.map(_.toArray.toSeq).toSeq ==
-      balanced.clusterCenters.map(_.toArray.toSeq).toSeq)
   }
 
   test("blocked near-dup pairs equal the all-pairs baseline exactly") {
@@ -416,30 +384,42 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("pq index round-trip: persisted artifact == in-memory exactly; mismatches fail loudly") {
     import graft.operators.ProductQuantization
+    import graft.operators.ProductQuantization._
     val emb = Tables.embeddings(spark, TestSpark.Sf)
     val q = emb.filter($"vec_id" < 10)
-    val model = ProductQuantization.fitPq(emb, m = 8, ksub = 16)
+    val model = fitPq(emb, m = 8, ksub = 16)
+    val km = Similarity.fitQuantizer(emb, nlist = 8)
     val tmp = java.nio.file.Files.createTempDirectory("pq-roundtrip").toString + "/idx"
-    ProductQuantization.writePqIndex(emb, model, tmp)
-    val (loaded, codes) = ProductQuantization.readPqIndex(spark, tmp)
+    writeAnnIndex(emb, km, model, tmp)
+    val (loaded, index) = readAnnIndex(spark, tmp, km)
     assert(loaded.fingerprint == model.fingerprint && loaded.dsub == model.dsub)
-    assert(codes.count() == emb.count(), "one code row per corpus vector")
-    // the persisted path must reproduce the in-memory path bit-for-bit
+    assert(index.count() == emb.count(), "one index row per corpus vector")
+    // the one artifact must reproduce both inline paths bit-for-bit:
+    // PQ scores every cell's codes, IVF-PQ only the probed cells'
     def key(df: org.apache.spark.sql.DataFrame) =
-      df.select($"query_id", $"neighbor_id", $"rank").as[(Long, Long, Int)]
+      df.select($"query_id", $"neighbor_id", $"cos", $"rank").as[(Long, Long, Double, Int)]
         .collect().sorted.toSeq
-    assert(key(ProductQuantization.pqTopKIndexed(spark, tmp, emb, q, 5, rerank = 20)) ==
-      key(ProductQuantization.pqTopK(emb, q, 5, model, rerank = 20)))
+    assert(key(pqTopKFromCodes(emb, index, q, 5, loaded, rerank = 20)) ==
+      key(pqTopK(emb, q, 5, model, rerank = 20)))
+    assert(key(ivfPqTopKFromCellCodes(emb, index, q, 5, km, loaded, nprobe = 3, rerank = 20)) ==
+      key(ivfPqTopK(emb, q, 5, km, model, nprobe = 3, rerank = 20)))
+    // a probe under another coarse quantizer is refused on read: its
+    // cells name different regions of the space, and probing them
+    // LOOKS fine (recall just collapses)
+    val qErr = intercept[IllegalArgumentException] {
+      readAnnIndex(spark, tmp, Similarity.fitQuantizer(emb, nlist = 6))
+    }
+    assert(qErr.getMessage.contains("quantizer fingerprint"), qErr.getMessage)
     // a model/meta pair from different fits must be refused on read —
     // stale ADC distances LOOK fine (recall just collapses), so the
     // failure must be loud, not statistical
-    Seq((model.m, model.ksub, model.dsub, "0" * 32))
-      .toDF("m", "ksub", "dsub", "fit_hash")
+    Seq((model.m, model.ksub, model.dsub, "0" * 32, quantizerFingerprint(km)))
+      .toDF("m", "ksub", "dsub", "fit_hash", "quantizer_hash")
       .write.mode("overwrite").parquet(s"$tmp/meta")
     val metaErr = intercept[IllegalArgumentException] {
-      ProductQuantization.readPqIndex(spark, tmp)
+      readAnnIndex(spark, tmp, km)
     }
-    assert(metaErr.getMessage.contains("fingerprint"), metaErr.getMessage)
+    assert(metaErr.getMessage.contains("codebook fingerprint"), metaErr.getMessage)
     // a codes table encoded under a different m than the query-time
     // model trips the in-plan guard, not silent element_at nulls
     val model16 = ProductQuantization.fitPq(emb, m = 16, ksub = 16)
