@@ -59,13 +59,18 @@ import org.apache.spark.sql.GraftBridge
   * - "asof_ab" settles the native-vs-composed as-of question with data:
   *   both run the same reps with medians AND shuffle bytes side by side.
   *
-  * The untimed warmup absorbs (a) first-run JIT/codegen + parquet footer
-  * and page-cache cost, and (b) every session memo the query layer
-  * shares — the ML feature frame, both GBT fits and their metric frames,
-  * the MinHash pair set, the IVF quantizer, brute-force ground truth and
-  * materialized index. Without (b), whichever ML/dedup/ANN query the map
-  * iterates first absorbs the shared build and the per-query numbers
-  * stop being plan costs.
+  * The untimed warmup absorbs (a) the fixture tables' first scans
+  * (parquet footers and page cache), and (b) every dir-keyed session
+  * artifact the query layer declares ([[warmSet]]) — the ML split, both
+  * GBT fits and their metric frames, the ANN index, the dedup pair sets
+  * and indexes, the diagnostic checkpoints and the roundtrip files.
+  * Without (b), whichever query the map iterates first absorbs the
+  * shared build and the per-query numbers stop being plan costs. A
+  * query's first-run JIT and codegen land in its first rep, which is
+  * priced in `cold` and kept out of the dispersion flags.
+  * `warmup_breakdown` is keyed by `scan_<table>` and by artifact name;
+  * `artifacts` carries each artifact's builds, hits and build seconds
+  * over the whole run.
   *
   * Execution: each query runs via `queryExecution.toRdd.count()` — the
   * query's OWN physical plan, fully materialized — NOT `df.count()`.
@@ -81,6 +86,16 @@ import org.apache.spark.sql.GraftBridge
   * carries de-noised medians without env coordination (r4 shipped reps=1
   * while local numbers were median-of-3 — un-auditable). */
 object Bench {
+  /** The artifacts the warmup builds: every dir-keyed declared session
+    * artifact, grouped by declaring object, each group in declaration
+    * order. Forcing the query map first initializes every declaring
+    * object. */
+  def warmSet: Seq[(String, Seq[graft.queries.SessionMemo[_, _]])] = {
+    SparkEntry.queries
+    val dirKeyed = graft.queries.SessionMemo.declared.filter(_.dirKeyed)
+    dirKeyed.map(_.owner).distinct.map(o => o -> dirKeyed.filter(_.owner == o))
+  }
+
   /** Best-effort /proc file read (None when unreadable — non-Linux). */
   private def readProc(path: String): Option[String] =
     try Some(new String(java.nio.file.Files.readAllBytes(
@@ -138,9 +153,9 @@ object Bench {
     val loadGateJson = Json.obj(Seq("initial_loadavg" -> gateLoad,
       "passed_loadavg" -> gatePassedLoad, "waited_sec" -> (gateWaitSec * 10).round / 10.0,
       "timed_out" -> gateTimedOut))
-    // FAIR so the parallel warmup's per-family pools share slots
+    // FAIR so the parallel warmup's per-object pools share slots
     // round-robin: under FIFO the GBT chain's hundreds of tiny
-    // latency-critical stages starve behind the dedup/ANN families'
+    // latency-critical stages starve behind the dedup/ANN builds'
     // wide stages (measured: q_ml_importances 17s solo -> 117s wall
     // under FIFO-contended warmup). The timed query loop below is
     // strictly sequential — one job at a time, where FAIR degenerates
@@ -167,58 +182,16 @@ object Bench {
       (out, shuffleBytes.get() - before, sec)
     }
 
-    // Warmup (VERDICT r18 ask #1 — cut the absolute cost): the leg is
-    // the round's era proxy AND its largest fixed wall-clock cost
-    // (fast-era 62-70 s at r18, measured sequential breakdown:
-    // q_ml_importances 17.1 + q_ml_serve 11.2 + the ANN/dedup families
-    // ~22 + scans 5.5 + the rest ~10). At sf0.1 nearly all of that is
-    // STAGE-SCHEDULING LATENCY on tiny data, not CPU — GBT fits are
-    // hundreds of sub-50ms stages — so independent memo FAMILIES now
-    // warm in parallel threads (each family sequential inside, in its
-    // memo-dependency order; Spark's scheduler interleaves the jobs on
-    // the 32 local slots). Cross-family races on a shared memo are
-    // at-most-once-build safe (SessionMemo double-checked locking).
-    // warmup is still best-effort: a missing table must not kill the
-    // run before the per-query loop gets to report -1s.
-    // Family structure is the r20 shape, MEASURED AND KEPT (r21,
-    // verdict ask #5 — trim the warmup tail): the "ml" family is the
-    // warmup's critical path (q_ml_importances 21.8 + q_ml_serve
-    // 11.6 s, sequential — essentially the classifier then regressor
-    // GBT fits riding the shared feature-frame memo). Splitting it so
-    // the two fits run CONCURRENTLY was tried and read WORSE three
-    // times over — warmup 34.3 s sequential vs 44.0 / 56.5 / 93.9 s
-    // split (the last on a 0.33-loadavg quiet start): a GBT fit is
-    // hundreds of tiny latency-critical stages, and two of them
-    // round-robining FAIR slots against the ANN/dedup families starve
-    // each other far past the 11.6 s the overlap could save. The
-    // importances warmer's cost IS the memoized classifier fit; there
-    // is no fat left beside it. The TIMED query loop below is
-    // untouched.
-    val warmerFamilies: Seq[(String, Seq[String])] = Seq(
-      // feature frame + both fits + metric frames + serving pipeline —
-      // the heavyweight chain, started first
-      "ml" -> Seq("q_ml_importances", "q_ml_serve", "q_ml_classifier", "q_ml_regressor"),
-      // quantizer + brute ground truth + the one ANN index (PQ fit and
-      // cell-partitioned codes, shared by _indexed, _pq and _ivfpq);
-      // q_ann_ivf last — the _indexed warmer
-      // builds the memos but not the in-memory ivfTopK scoring path's
-      // codegen (VERDICT r15 ask #3). NOT split further (r21 measured:
-      // an 8-family layout inflated warmup 34.3 -> 44.0 s — slot
-      // contention against the GBT fits; see the ml-family note above)
-      "ann" -> Seq("q_ann_ivf_indexed", "q_ann_lsh", "q_ann_pq", "q_ann_ivfpq", "q_ann_ivf"),
-      // MinHash pair memo, SimHash pair memo (r14), span-dedup output,
-      // bucketed corpus dedup index
-      "dedup" -> Seq("q_dedup_groups", "q_simhash_neardup", "q_span_dedup_rowhash",
-        "q_dedup_indexed"),
-      // shared corpus token frame; q_json_profile's per-row JSON C2
-      // compilation (the standing r13 dispersion flag); q_repetition's
-      // shingle-aggregate codegen (r21 — its c8 dispersion flag 2.97
-      // was a C2 convergence tail: the isolated 10-rep series decays
-      // monotonically 0.94 → 0.44 s with no layout sensitivity, so warm
-      // the compile like q_json_profile's)
-      "text" -> Seq("q_unigram_logprob", "q_json_profile", "q_repetition"),
-      // JIT/codegen + window path + PNG fixture synthesis
-      "core" -> Seq("q1_pricing_summary", "q_lag_lead", "q_multimodal_decode"))
+    // Warmup: the fixture scans, plus every dir-keyed session artifact
+    // (graft.queries.SessionMemo), built before the timed loop so a rep
+    // prices its query's plan, not a shared build. One thread per
+    // declaring object, each building its artifacts in declaration
+    // order (so the two GBT fits stay sequential, as r21 measured they
+    // must); an artifact another object needs is built once, and its
+    // other readers wait on that key alone. Best-effort: a missing
+    // table must not kill the run before the per-query loop gets to
+    // report -1s.
+    //
     // every failure by name — "warmer:<name>", "query:<name>" (any rep
     // threw), "leg:<name>" — so a crash is counted, never just a faster
     // total; any entry makes the main exit nonzero
@@ -227,8 +200,8 @@ object Bench {
     val warmupBreakdown = {
       import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        warmerFamilies.size + 1)
+      val groups = warmSet
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(groups.size + 1)
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
       def timed(name: String)(f: => Unit): (String, Double) = {
         val t0 = System.nanoTime()
@@ -245,16 +218,15 @@ object Bench {
         Seq("lineitem", "orders", "customer", "part", "events", "documents", "embeddings")
           .map(t => timed(s"scan_$t") { Tables.read(spark, sfDir, t).count(); () })
       }
-      val famFs = warmerFamilies.map { case (fam, qs) =>
+      val artifactFs = groups.map { case (owner, artifacts) =>
         Future {
-          // one FAIR pool per family (created on demand, weight 1):
-          // slots round-robin across pools, so no chain starves
-          spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"warm_$fam")
-          qs.map(q => timed(q) {
-            SparkEntry.queries(q)(spark, sfDir).queryExecution.toRdd.count(); () })
+          // one FAIR pool per declaring object (created on demand,
+          // weight 1): slots round-robin across pools, so no chain starves
+          spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"warm_$owner")
+          artifacts.map(a => timed(a.name)(a.warm(spark, sfDir)))
         }
       }
-      try Await.result(Future.sequence(scansF +: famFs), Duration.Inf).flatten
+      try Await.result(Future.sequence(scansF +: artifactFs), Duration.Inf).flatten
       finally pool.shutdown()
     }
     // per-warmer seconds above are wall-clock UNDER CONCURRENCY (they
@@ -429,6 +401,10 @@ object Bench {
       s""""growth_flagged":${
         Json.obj(growthFlagged.map { case (k, s) => k -> Json.num(s.growth, 3) })},""" +
       s""""reps_sec":$repArrays,""" +
+      s""""artifacts":${Json.obj(graft.queries.SessionMemo.declared.map { m =>
+        val (builds, hits, sec) = m.counts
+        m.name -> Json.obj(Seq("builds" -> builds, "hits" -> hits, "build_sec" -> Json.num(sec, 3)))
+      })},""" +
       s""""cold":$cold,"shuffle_bytes":$bytes,"queries":$qs}"""
     val outFile = new java.io.File(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")).getAbsoluteFile

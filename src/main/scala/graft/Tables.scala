@@ -25,11 +25,9 @@ object Tables {
     * catalog semantics, fine for the static star schema and wrong for
     * nothing in this repo (every call site reads driver-generated
     * fixtures, audited r15). */
-  private val relationMemo =
-    new graft.queries.SessionMemo[(String, String), DataFrame]
-
-  def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    relationMemo.getOrElseUpdate(spark, (dir, name)) {
+  private val relation = graft.queries.SessionMemo("Tables.relation") {
+    (spark, key: (String, String)) =>
+      val (dir, name) = key
       // Older fixture vintages write events.ts as TIMESTAMP(NANOS), which
       // Spark's vectorized reader rejects; the legacy flag reads those nanos
       // as epoch-nano longs. Newer vintages write timestamp[us]
@@ -39,7 +37,10 @@ object Tables {
       // same canonical type (see normalizeTs).
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       normalizeTs(spark.read.parquet(s"$dir/$name.parquet"))
-    }
+  }
+
+  def read(spark: SparkSession, dir: String, name: String): DataFrame =
+    relation(spark, (dir, name))
 
   /** Engine invariant: a column named `ts` is an epoch-NANOSECOND long.
     * Ordering, lag/window and interval arithmetic over the long are

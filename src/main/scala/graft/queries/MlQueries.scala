@@ -13,61 +13,49 @@ import graft.ml.Pipelines
   */
 object MlQueries {
 
-  /** Shared-feature memo (M15 made literal): the three training queries
-    * reuse ONE materialized feature split and ONE fitted regressor per
-    * (session, dir) instead of re-deriving and re-training — in a Verify/
-    * Bench run that executes all ML queries this is a 3× saving, and it
-    * mirrors production, where the feature table and model are artifacts,
-    * not per-query recomputations. */
-  private val regressorMemo = new SessionMemo[String, org.apache.spark.ml.PipelineModel]("regressorMemo")
-  private val classifierMemo = new SessionMemo[String, org.apache.spark.ml.PipelineModel]("classifierMemo")
+  /** The 7-day split, built once per (session, dir) and shared (M15
+    * made literal): the fits, evals and certificates all read ONE
+    * materialized split instead of re-deriving it — in a Verify/Bench
+    * run that executes all ML queries this is a 3× saving, and it
+    * mirrors production, where the feature table and model are
+    * artifacts, not per-query recomputations. temporalSplit is eager (a
+    * localCheckpoint of its input and a cutoff collect), and Bench
+    * re-runs every query constructor in each timed rep: unmemoized, each
+    * rep would pay a checkpoint job and pin another copy of the
+    * features. The features are cached only while the checkpoint is
+    * taken: a cached plan keeps its nproc shuffle partitions, which fixes
+    * the fits' partitioning (and so the models), and afterwards the
+    * checkpoint is the one copy pinned. */
+  private val cachedSplit = SessionMemo("MlQueries.split") { (spark, dir: String) =>
+    val features = Pipelines.featureFrame(spark, dir).cache()
+    try Pipelines.temporalSplit(features, 7) finally features.unpersist()
+  }
 
-  /** The 7-day split, built once per (session, dir). temporalSplit is
-    * eager (a localCheckpoint of its input and a cutoff collect), and
-    * Bench re-runs every query constructor in each timed rep:
-    * unmemoized, each rep would pay a checkpoint job and pin another
-    * copy of the features. The features are cached only while the
-    * checkpoint is taken: a cached plan keeps its nproc shuffle
-    * partitions, which fixes the fits' partitioning (and so the
-    * models), and afterwards the checkpoint is the one copy pinned. */
-  private val splitMemo = new SessionMemo[String, (DataFrame, DataFrame)]("splitMemo")
+  /** One fitted model per (session, dir). Declared classifier first: Bench
+    * warms an object's artifacts in declaration order on one thread, so
+    * the two GBT fits never run concurrently (two fits round-robining
+    * FAIR slots starve each other — measured r21). */
+  private val cachedClassifier = SessionMemo("MlQueries.classifier") { (spark, dir: String) =>
+    Pipelines.trainClassifier(cachedSplit(spark, dir)._1, maxIter = 10)._1
+  }
 
-  private def cachedSplit(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    splitMemo.getOrElseUpdate(spark, dir) {
-      val features = Pipelines.featureFrame(spark, dir).cache()
-      try Pipelines.temporalSplit(features, 7) finally features.unpersist()
-    }
-
-  private def cachedRegressor(spark: SparkSession, dir: String): org.apache.spark.ml.PipelineModel =
-    regressorMemo.getOrElseUpdate(spark, dir) {
-      val (train, _) = cachedSplit(spark, dir)
-      Pipelines.trainRegressor(train, maxIter = 10)
-    }
-
-  private def cachedClassifier(spark: SparkSession, dir: String): org.apache.spark.ml.PipelineModel =
-    classifierMemo.getOrElseUpdate(spark, dir) {
-      val (train, _) = cachedSplit(spark, dir)
-      Pipelines.trainClassifier(train, maxIter = 10)._1
-    }
+  private val cachedRegressor = SessionMemo("MlQueries.regressor") { (spark, dir: String) =>
+    Pipelines.trainRegressor(cachedSplit(spark, dir)._1, maxIter = 10)
+  }
 
   /** Holdout metric frames, evaluated once per (session, dir) — both the
     * metric queries and the gates on the importances/serving queries read
     * these (evalClassifier/evalRegressor localCheckpoint their 1-row
     * output, so the memoized frame is a materialized scalar, not a
     * re-scoring plan). */
-  private val clsMetricsMemo = new SessionMemo[String, DataFrame]("clsMetricsMemo")
-  private val regMetricsMemo = new SessionMemo[String, DataFrame]("regMetricsMemo")
-
-  private def cachedClassifierMetrics(spark: SparkSession, dir: String): DataFrame =
-    clsMetricsMemo.getOrElseUpdate(spark, dir) {
-      val (_, test) = cachedSplit(spark, dir)
-      Pipelines.evalClassifier(cachedClassifier(spark, dir).transform(test))
+  private val cachedClassifierMetrics =
+    SessionMemo("MlQueries.classifierMetrics") { (spark, dir: String) =>
+      Pipelines.evalClassifier(cachedClassifier(spark, dir).transform(cachedSplit(spark, dir)._2))
     }
 
-  private def cachedRegressorMetrics(spark: SparkSession, dir: String): DataFrame =
-    regMetricsMemo.getOrElseUpdate(spark, dir) {
-      val (_, test) = cachedSplit(spark, dir)
-      Pipelines.evalRegressor(cachedRegressor(spark, dir).transform(test))
+  private val cachedRegressorMetrics =
+    SessionMemo("MlQueries.regressorMetrics") { (spark, dir: String) =>
+      Pipelines.evalRegressor(cachedRegressor(spark, dir).transform(cachedSplit(spark, dir)._2))
     }
 
   /** Zero-or-one-row marker used to gate a dependent query's rows on a

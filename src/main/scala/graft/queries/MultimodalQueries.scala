@@ -92,17 +92,13 @@ object MultimodalQueries {
   /** PNG-bearing parquet fixture, written once per (session, dir) — the
     * stand-in for the binary media columns a production corpus carries
     * (the driver's sf tables are text-only). */
-  private val fixtureMemo = new SessionMemo[String, String]("fixtureMemo")
-
-  def fixturePath(spark: SparkSession, dir: String): String =
-    fixtureMemo.getOrElseUpdate(spark, dir) {
-      import spark.implicits._
-      val tmp = graft.IoUtil.scratchDir("graft-media")
-      val path = tmp.toString + "/media"
-      (0L until NumImages.toLong).map(id => Multimodal.MediaRecord(id, mimeFor(id), imageBytes(id)))
-        .toDF().repartition(4).write.mode("overwrite").parquet(path)
-      path
-    }
+  val fixturePath = SessionMemo("MultimodalQueries.fixture") { (spark, dir: String) =>
+    import spark.implicits._
+    val path = graft.IoUtil.scratchDir("graft-media").toString + "/media"
+    (0L until NumImages.toLong).map(id => Multimodal.MediaRecord(id, mimeFor(id), imageBytes(id)))
+      .toDF().repartition(4).write.mode("overwrite").parquet(path)
+    path
+  }
 
   /** Decode the fixture through the real mapPartitions ImageIO path and
     * emit one row per (doc_id, cell) — gated in-plan on the closed-form

@@ -310,19 +310,16 @@ object ScalarQueries {
     * CacheManager registration, so no other query's identical subplan
     * gets silently subsumed (the q_span_dedup lesson). The production
     * twin q_sketch_lean still prices the real one-pass plan fresh. */
-  private val sketchDiagMemo = new SessionMemo[String, DataFrame]("sketchDiagMemo")
-
-  private def sketchDiag(spark: SparkSession, dir: String): DataFrame =
-    sketchDiagMemo.getOrElseUpdate(spark, dir) {
-      val ev = Tables.events(spark, dir)
-      val total = ev.agg(count(lit(1)).as("total"))
-      val h = graft.functions.TextFunctions.hash32(
-        concat(col("event_id").cast("string"), lit("|sketchdiag")))
-      ev.crossJoin(broadcast(total))
-        .filter(h * col("total") < lit(SketchDiagCap) * lit(4294967296L))
-        .select("event_type", "user_id", "value")
-        .localCheckpoint(true)
-    }
+  private val sketchDiag = SessionMemo("ScalarQueries.sketchDiag") { (spark, dir: String) =>
+    val ev = Tables.events(spark, dir)
+    val total = ev.agg(count(lit(1)).as("total"))
+    val h = graft.functions.TextFunctions.hash32(
+      concat(col("event_id").cast("string"), lit("|sketchdiag")))
+    ev.crossJoin(broadcast(total))
+      .filter(h * col("total") < lit(SketchDiagCap) * lit(4294967296L))
+      .select("event_type", "user_id", "value")
+      .localCheckpoint(true)
+  }
 
   def qApproxSketch(spark: SparkSession, dir: String): DataFrame = {
     val diag = sketchDiag(spark, dir)
@@ -460,20 +457,17 @@ object ScalarQueries {
     * recipe on the other fact table (narrowed to the three profiled
     * measures BEFORE the checkpoint, so the materialized block carries
     * no dead columns). */
-  private val profDiagMemo = new SessionMemo[String, DataFrame]("profDiagMemo")
-
-  private def profDiag(spark: SparkSession, dir: String): DataFrame =
-    profDiagMemo.getOrElseUpdate(spark, dir) {
-      val li = Tables.lineitem(spark, dir)
-      val total = li.agg(count(lit(1)).as("total"))
-      val h = graft.functions.TextFunctions.hash32(
-        concat(col("l_orderkey").cast("string"), lit("_"),
-          col("l_linenumber").cast("string"), lit("|profdiag")))
-      li.crossJoin(broadcast(total))
-        .filter(h * col("total") < lit(SketchDiagCap) * lit(4294967296L))
-        .select("l_quantity", "l_extendedprice", "l_discount")
-        .localCheckpoint(true)
-    }
+  private val profDiag = SessionMemo("ScalarQueries.profDiag") { (spark, dir: String) =>
+    val li = Tables.lineitem(spark, dir)
+    val total = li.agg(count(lit(1)).as("total"))
+    val h = graft.functions.TextFunctions.hash32(
+      concat(col("l_orderkey").cast("string"), lit("_"),
+        col("l_linenumber").cast("string"), lit("|profdiag")))
+    li.crossJoin(broadcast(total))
+      .filter(h * col("total") < lit(SketchDiagCap) * lit(4294967296L))
+      .select("l_quantity", "l_extendedprice", "l_discount")
+      .localCheckpoint(true)
+  }
 
   def qProfile(spark: SparkSession, dir: String): DataFrame = {
     val diag = profDiag(spark, dir)

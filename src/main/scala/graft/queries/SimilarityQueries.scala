@@ -231,38 +231,28 @@ object SimilarityQueries {
 
   /** Corpus row count per (session, dir) — the scalar [[annParams]]
     * keys off; one count, memoized like the quantizer it parameterizes. */
-  private val corpusCountMemo = new SessionMemo[String, java.lang.Long]("corpusCountMemo")
-
-  private def corpusCount(spark: SparkSession, dir: String): Long =
-    corpusCountMemo.getOrElseUpdate(spark, dir) {
-      java.lang.Long.valueOf(Tables.embeddings(spark, dir).count())
-    }
+  private val corpusCount = SessionMemo("SimilarityQueries.corpusCount") { (spark, dir: String) =>
+    Tables.embeddings(spark, dir).count()
+  }
 
   private def cachedParams(spark: SparkSession, dir: String): AnnParams =
     annParams(corpusCount(spark, dir))
 
   /** Fit-once IVF quantizer per (session, dir, nlist) — the artifact the
     * 100 TB design persists; evicted with the owning session's context. */
-  private val quantMemo =
-    new SessionMemo[(String, Int), org.apache.spark.ml.clustering.KMeansModel]("quantMemo")
+  private val cachedQuantizer = SessionMemo("SimilarityQueries.quantizer") {
+    (spark, key: (String, Int)) => Similarity.fitQuantizer(Tables.embeddings(spark, key._1), key._2)
+  }
 
   /** The exact top-5 ground truth every recall certificate compares
     * against — computed once per (session, dir) and kept cached (100
     * rows). */
-  private val bruteMemo = new SessionMemo[String, DataFrame]("bruteMemo")
-
-  private def cachedQuantizer(spark: SparkSession, dir: String, nlist: Int) =
-    quantMemo.getOrElseUpdate(spark, (dir, nlist)) {
-      Similarity.fitQuantizer(Tables.embeddings(spark, dir), nlist)
-    }
-
-  private def cachedBruteTop5(spark: SparkSession, dir: String): DataFrame =
-    bruteMemo.getOrElseUpdate(spark, dir) {
-      val emb = Tables.embeddings(spark, dir)
-      val df = Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < AnnQueryIdBound), 5).cache()
-      df.count()
-      df
-    }
+  private val cachedBruteTop5 = SessionMemo("SimilarityQueries.bruteTop5") { (spark, dir: String) =>
+    val emb = Tables.embeddings(spark, dir)
+    val df = Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < AnnQueryIdBound), 5).cache()
+    df.count()
+    df
+  }
 
   /** The session's one ANN artifact per (session, dir): the corpus
     * partitioned by IVF cell with its PQ codes
@@ -275,19 +265,14 @@ object SimilarityQueries {
     * accumulate full parquet copies of the encoded corpus under /tmp.
     * The quantizer is fitted FIRST, so an empty or sub-nlist corpus
     * fails through its loud-failure contract. */
-  private val annIndexMemo =
-    new SessionMemo[String, (ProductQuantization.PqModel, DataFrame)]("annIndexMemo")
-
-  private def cachedAnnIndex(spark: SparkSession,
-                             dir: String): (ProductQuantization.PqModel, DataFrame) =
-    annIndexMemo.getOrElseUpdate(spark, dir) {
-      val emb = Tables.embeddings(spark, dir)
-      val km = cachedQuantizer(spark, dir, cachedParams(spark, dir).nlist)
-      val path = graft.IoUtil.scratchDir("graft-ann-index").toString + "/idx"
-      ProductQuantization.writeAnnIndex(emb, km,
-        ProductQuantization.fitPq(emb, m = 16, ksub = 16), path)
-      ProductQuantization.readAnnIndex(spark, path, km)
-    }
+  private val cachedAnnIndex = SessionMemo("SimilarityQueries.annIndex") { (spark, dir: String) =>
+    val emb = Tables.embeddings(spark, dir)
+    val km = cachedQuantizer(spark, (dir, cachedParams(spark, dir).nlist))
+    val path = graft.IoUtil.scratchDir("graft-ann-index").toString + "/idx"
+    ProductQuantization.writeAnnIndex(emb, km,
+      ProductQuantization.fitPq(emb, m = 16, ksub = 16), path)
+    ProductQuantization.readAnnIndex(spark, path, km)
+  }
 
   /** Per-query recall@k of `approx` against `exact` ground truth — ONE
     * definition shared by the recall certificates below and by
@@ -365,7 +350,7 @@ object SimilarityQueries {
     val emb = Tables.embeddings(spark, dir)
     val p = cachedParams(spark, dir)
     Similarity.ivfTopK(emb, emb.filter(col("vec_id") < AnnQueryIdBound), 5,
-      cachedQuantizer(spark, dir, p.nlist), p.nprobe, "vec_id", "embedding")
+      cachedQuantizer(spark, (dir, p.nlist)), p.nprobe, "vec_id", "embedding")
   }
 
   /** q_ann_ivf_indexed: recall certificate of the MATERIALIZED IVF
@@ -384,7 +369,7 @@ object SimilarityQueries {
     val p = cachedParams(spark, dir)
     Similarity.ivfTopKIndexed(cachedAnnIndex(spark, dir)._2,
       emb.filter(col("vec_id") < AnnQueryIdBound), 5,
-      cachedQuantizer(spark, dir, p.nlist), p.nprobe)
+      cachedQuantizer(spark, (dir, p.nlist)), p.nprobe)
   }
 
   /** Floor just under the minimum measured mean recall@5 across
@@ -442,7 +427,7 @@ object SimilarityQueries {
     ProductQuantization.ivfPqTopKFromCellCodes(
       emb, index,
       emb.filter(col("vec_id") < AnnQueryIdBound), 5,
-      cachedQuantizer(spark, dir, p.nlist), model,
+      cachedQuantizer(spark, (dir, p.nlist)), model,
       nprobe = p.nprobe, rerank = p.rerank)
   }
 
@@ -494,7 +479,7 @@ object SimilarityQueries {
     val emb = Tables.embeddings(spark, dir)
     val p = cachedParams(spark, dir)
     val sem = Similarity.semanticDedupPairs(emb, 0.45,
-      cachedQuantizer(spark, dir, p.semNlist), passign = p.passign)
+      cachedQuantizer(spark, (dir, p.semNlist)), passign = p.passign)
     val exact = Similarity.nearDupPairsBlocked(emb, 0.45)
     exact.select(col("a"), col("b"))
       .join(sem.select(col("a"), col("b"), lit(1).as("hit")), Seq("a", "b"), "left")
@@ -510,7 +495,7 @@ object SimilarityQueries {
     val emb = Tables.embeddings(spark, dir)
     val p = cachedParams(spark, dir)
     val sem = Similarity.semanticDedupPairs(emb, 0.45,
-      cachedQuantizer(spark, dir, p.semNlist), passign = p.passign)
+      cachedQuantizer(spark, (dir, p.semNlist)), passign = p.passign)
     val dropped = sem.select(col("b").as("vec_id")).distinct().withColumn("dup", lit(1))
     emb.select(col("vec_id"))
       .join(dropped, Seq("vec_id"), "left")

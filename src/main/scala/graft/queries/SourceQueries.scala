@@ -24,7 +24,18 @@ object SourceQueries {
   /** Compacted copy written once per (session, dir) — reps in the bench
     * then measure the read-back plan, not a repeated write; the write
     * cost itself is visible in the bench's cold/warmup accounting. */
-  private val compactedMemo = new SessionMemo[String, String]("compactedMemo")
+  private val compacted = SessionMemo("SourceQueries.compacted") { (spark, dir: String) =>
+    val tmp = graft.IoUtil.scratchDir("graft-compaction")
+    val path = tmp.toString + "/events"
+    Sources.writeCompacted(
+      Tables.events(spark, dir).select("event_id", "ts", "user_id", "event_type", "value"),
+      path, Seq("ts", "event_id"), nFiles = NFiles)
+    val files = new java.io.File(path).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    require(files.length >= 1 && files.length <= NFiles,
+      s"compaction wrote ${files.length} files, contract is 1..$NFiles")
+    path
+  }
 
   private val NFiles = 8
 
@@ -34,18 +45,7 @@ object SourceQueries {
     * contract prescribes for exact file counts — read them back, emit
     * everything. Oracle = the source table verbatim. */
   def qCompactionRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = compactedMemo.getOrElseUpdate(spark, dir) {
-      val tmp = graft.IoUtil.scratchDir("graft-compaction")
-      val path = tmp.toString + "/events"
-      Sources.writeCompacted(
-        Tables.events(spark, dir).select("event_id", "ts", "user_id", "event_type", "value"),
-        path, Seq("ts", "event_id"), nFiles = NFiles)
-      val files = new java.io.File(path).listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      require(files.length >= 1 && files.length <= NFiles,
-        s"compaction wrote ${files.length} files, contract is 1..$NFiles")
-      path
-    }
+    val out = compacted(spark, dir)
     // ts compared at MICROsecond grain: DuckDB reads parquet
     // TIMESTAMP(NANOS) at its native micro precision, so raw nanos can
     // never hash-match — the roundtrip itself still moves full nanos
@@ -59,22 +59,21 @@ object SourceQueries {
   /** Bucket count for [[qBucketedJoin]]'s tables. Fixture-scale; a real
     * deployment sizes buckets so each holds one task's worth of data. */
   private val NBuckets = 8
+  private val bucketSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** The bucketed (orders, customer) catalog tables for
     * [[qBucketedJoin]], written once per (session, dir) — the
-    * cachedCorpusIndex pattern verbatim: per-JVM unique names, temp dirs
-    * swept at JVM exit, builds serialized (by the memo's build lock)
-    * because they side-effect the catalog. Each table is repartitioned
+    * cachedCorpusIndex pattern verbatim: temp dirs swept at JVM exit,
+    * and table names unique per JVM — the build runs once per (session,
+    * dir) and numbers its tables from an AtomicInteger, so no two builds
+    * write the same catalog name. Each table is repartitioned
     * onto its bucket column BEFORE the write — bucketBy hashing and
     * repartition() hashing are the same HashPartitioning, so every
     * writer task holds exactly one bucket's rows and the layout is one
     * file per bucket (many small files per bucket is the classic
     * bucketed-write mistake; it also voids the sortBy metadata). */
-  private val bucketMemo = new SessionMemo[String, (String, String)]("bucketMemo")
-  private val bucketSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private def cachedBucketedTables(spark: SparkSession, dir: String): (String, String) =
-    bucketMemo.getOrElseUpdate(spark, dir) {
+  private val cachedBucketedTables =
+    SessionMemo("SourceQueries.bucketedTables") { (spark, dir: String) =>
       val tmp = graft.IoUtil.scratchDir("graft-bucketed")
       val n = bucketSeq.incrementAndGet()
       def writeBucketed(df: DataFrame, cols: Seq[String], key: String,
@@ -121,32 +120,27 @@ object SourceQueries {
       .orderBy("c_mktsegment")
   }
 
-  /** Shared format-roundtrip plumbing (review r13 leg 4: the ORC and
-    * CSV paths had grown near-verbatim copies of the memo + tempdir +
+  /** Shared format-roundtrip plumbing (review r13 leg 4: the ORC, CSV
+    * and JSON paths had grown near-verbatim copies of the tempdir +
     * write + read-back + projection recipe — it lives once, like the
-    * shared [[RoundtripOracleSql]]): write the event frame once per
-    * (session, dir) through `write`, read it back through `read`, and
-    * emit the micro-grain comparison projection (DuckDB reads parquet
-    * TIMESTAMP(NANOS) at micro precision, so raw nanos can never
-    * hash-match; the written/reread column is the untouched epoch-nano
-    * long). */
-  private def formatRoundtrip(spark: SparkSession, dir: String,
-                              memo: SessionMemo[String, String],
-                              prefix: String)(
-      write: (DataFrame, String) => Unit,
-      read: String => DataFrame): DataFrame = {
-    val out = memo.getOrElseUpdate(spark, dir) {
-      val tmp = graft.IoUtil.scratchDir(s"graft-$prefix")
-      val path = tmp.toString + "/events"
-      write(Tables.events(spark, dir)
-        .select("event_id", "ts", "user_id", "event_type", "value"), path)
-      path
-    }
-    read(out)
-      .select(col("event_id"), expr("ts DIV 1000").as("ts_us"),
+    * shared [[RoundtripOracleSql]]): each format's artifact writes the
+    * event frame once per (session, dir) through [[writeEvents]], and
+    * [[readBack]] emits the micro-grain comparison projection (DuckDB
+    * reads parquet TIMESTAMP(NANOS) at micro precision, so raw nanos can
+    * never hash-match; the written/reread column is the untouched
+    * epoch-nano long). */
+  private def writeEvents(spark: SparkSession, dir: String, prefix: String)(
+      write: (DataFrame, String) => Unit): String = {
+    val path = graft.IoUtil.scratchDir(s"graft-$prefix").toString + "/events"
+    write(Tables.events(spark, dir)
+      .select("event_id", "ts", "user_id", "event_type", "value"), path)
+    path
+  }
+
+  private def readBack(df: DataFrame): DataFrame =
+    df.select(col("event_id"), expr("ts DIV 1000").as("ts_us"),
         col("user_id"), col("event_type"), col("value"))
       .orderBy("event_id")
-  }
 
   /** The parity-by-identity oracle every format roundtrip compares
     * against — ONE copy for parquet/ORC/CSV. */
@@ -158,7 +152,9 @@ object SourceQueries {
     * of [[qCompactionRoundtrip]] (S-family: a lakehouse ingests what it
     * is handed; ORC is the other columnar interchange format Spark
     * reads natively). */
-  private val orcMemo = new SessionMemo[String, String]("orcMemo")
+  private val orc = SessionMemo("SourceQueries.orc") { (spark, dir: String) =>
+    writeEvents(spark, dir, "orc")((df, path) => df.write.mode("overwrite").orc(path))
+  }
 
   /** Sink → source roundtrip through ORC: the epoch-nano `ts` long
     * survives verbatim (a LONG column has identical semantics in both
@@ -167,11 +163,7 @@ object SourceQueries {
     * surface as parquet (`PushedFilters` in .explain), so the engine's
     * scan layer is format-agnostic at any scale. */
   def qOrcRoundtrip(spark: SparkSession, dir: String): DataFrame =
-    formatRoundtrip(spark, dir, orcMemo, "orc")(
-      (df, path) => df.write.mode("overwrite").orc(path),
-      path => spark.read.orc(path))
-
-  private val csvMemo = new SessionMemo[String, String]("csvMemo")
+    readBack(spark.read.orc(orc(spark, dir)))
 
   /** S1's oracle-gated form — events written as header CSV and read
     * back under an EXPLICIT schema (inferSchema's per-run re-parse is
@@ -185,7 +177,25 @@ object SourceQueries {
     * hold for values the fixture doesn't happen to exercise).
     * Completes the format triangle beside q_compaction_roundtrip
     * (parquet) and q_orc_roundtrip (ORC). */
-  private val jsonMemo = new SessionMemo[String, String]("jsonMemo")
+  private val csv = SessionMemo("SourceQueries.csv") { (spark, dir: String) =>
+    writeEvents(spark, dir, "csv")((df, path) => df.write.mode("overwrite")
+      .option("header", "true")
+      .option("ignoreLeadingWhiteSpace", "false")
+      .option("ignoreTrailingWhiteSpace", "false")
+      // a distinct NULL token: with the default nullValue="" the
+      // READER maps BOTH an unquoted empty field and a quoted ""
+      // back to NULL (univocity compares nullValue after unquoting),
+      // silently merging empty-string and NULL cells — the r18
+      // hostile twin's ''-typed event came back NULL. \N in, \N out
+      // keeps the two distinguishable, CSV's only faithful encoding
+      .option("nullValue", "\\N")
+      .option("emptyValue", "\"\"")
+      .csv(path))
+  }
+
+  private val json = SessionMemo("SourceQueries.json") { (spark, dir: String) =>
+    writeEvents(spark, dir, "json")((df, path) => df.write.mode("overwrite").json(path))
+  }
 
   /** S8's source-side twin — events written as JSON LINES and read back
     * under an EXPLICIT schema (schema inference re-parses the corpus
@@ -196,45 +206,42 @@ object SourceQueries {
     * [[RoundtripOracleSql]] identity oracle. FAILFAST for the same
     * loud-failure contract as the CSV read. */
   def qJsonRoundtrip(spark: SparkSession, dir: String): DataFrame =
-    formatRoundtrip(spark, dir, jsonMemo, "json")(
-      (df, path) => df.write.mode("overwrite").json(path),
-      path => spark.read
-        .schema("event_id LONG, ts LONG, user_id LONG, event_type STRING, " +
-          "value DOUBLE")
-        .option("mode", "FAILFAST")
-        .json(path))
+    readBack(spark.read
+      .schema("event_id LONG, ts LONG, user_id LONG, event_type STRING, " +
+        "value DOUBLE")
+      .option("mode", "FAILFAST")
+      .json(json(spark, dir)))
 
   def qCsvRoundtrip(spark: SparkSession, dir: String): DataFrame =
-    formatRoundtrip(spark, dir, csvMemo, "csv")(
-      (df, path) => df.write.mode("overwrite")
-        .option("header", "true")
-        .option("ignoreLeadingWhiteSpace", "false")
-        .option("ignoreTrailingWhiteSpace", "false")
-        // a distinct NULL token: with the default nullValue="" the
-        // READER maps BOTH an unquoted empty field and a quoted ""
-        // back to NULL (univocity compares nullValue after unquoting),
-        // silently merging empty-string and NULL cells — the r18
-        // hostile twin's ''-typed event came back NULL. \N in, \N out
-        // keeps the two distinguishable, CSV's only faithful encoding
-        .option("nullValue", "\\N")
-        .option("emptyValue", "\"\"")
-        .csv(path),
-      path => spark.read
-        .schema("event_id LONG, ts LONG, user_id LONG, event_type STRING, " +
-          "value DOUBLE")
-        .option("header", "true")
-        .option("nullValue", "\\N")
-        .option("emptyValue", "")
-        // multiLine: a string cell containing a quoted line separator
-        // must not split records (costs line-split read parallelism —
-        // the correctness query pays it; a bulk ingest that bans
-        // embedded newlines would not); FAILFAST: a mangled record
-        // fails LOUDLY instead of PERMISSIVE's silent null padding
-        .option("multiLine", "true")
-        .option("mode", "FAILFAST")
-        .csv(path))
+    readBack(spark.read
+      .schema("event_id LONG, ts LONG, user_id LONG, event_type STRING, " +
+        "value DOUBLE")
+      .option("header", "true")
+      .option("nullValue", "\\N")
+      .option("emptyValue", "")
+      // multiLine: a string cell containing a quoted line separator
+      // must not split records (costs line-split read parallelism —
+      // the correctness query pays it; a bulk ingest that bans
+      // embedded newlines would not); FAILFAST: a mangled record
+      // fails LOUDLY instead of PERMISSIVE's silent null padding
+      .option("multiLine", "true")
+      .option("mode", "FAILFAST")
+      .csv(csv(spark, dir)))
 
-  private val reconMemo = new SessionMemo[String, String]("reconMemo")
+  private val recon = SessionMemo("SourceQueries.recon") { (spark, dir: String) =>
+    val path = graft.IoUtil.scratchDir("graft-recon").toString + "/events"
+    val ev = Tables.events(spark, dir)
+      .withColumn("value_micros", expr("CAST(round(value * 1000000) AS LONG)"))
+    ev.filter(col("event_id") % 5 =!= 0)
+      .select("event_id", "ts", "user_id", "event_type", "value_micros")
+      .write.mode("overwrite").parquet(path)
+    ev.filter(col("event_id") % 5 === 0)
+      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
+        (col("value_micros") - 13L).as("value_micros_base"),
+        lit(13L).as("value_micros_change"))
+      .write.mode("append").parquet(path)
+    path
+  }
 
   /** Schema-drift reconstruction (SURVEY §1.3, wave 5 — the reference's
     * missing-price path, spark_stream.py:123-128): the staged source
@@ -257,22 +264,7 @@ object SourceQueries {
     * the identity oracle would immediately flag as a row-count
     * mismatch — a loud failure, not a silent wrong answer. */
   def qValueRecon(spark: SparkSession, dir: String): DataFrame = {
-    val out = reconMemo.getOrElseUpdate(spark, dir) {
-      val tmp = graft.IoUtil.scratchDir("graft-recon")
-      val path = tmp.toString + "/events"
-      val ev = Tables.events(spark, dir)
-        .withColumn("value_micros", expr("CAST(round(value * 1000000) AS LONG)"))
-      ev.filter(col("event_id") % 5 =!= 0)
-        .select("event_id", "ts", "user_id", "event_type", "value_micros")
-        .write.mode("overwrite").parquet(path)
-      ev.filter(col("event_id") % 5 === 0)
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-          (col("value_micros") - 13L).as("value_micros_base"),
-          lit(13L).as("value_micros_change"))
-        .write.mode("append").parquet(path)
-      path
-    }
-    val merged = spark.read.option("mergeSchema", "true").parquet(out)
+    val merged = spark.read.option("mergeSchema", "true").parquet(recon(spark, dir))
     Sources.reconstructColumn(merged, "value_micros",
         col("value_micros_base") + col("value_micros_change"))
       .select("event_id", "value_micros")

@@ -41,20 +41,17 @@ object TextDedup {
     * scan. localCheckpoint truncates lineage to executor blocks and
     * registers nothing, so the twin is cheap and the headline stays
     * honest. */
-  private val spanMemo = new SessionMemo[String, DataFrame]("spanMemo")
-
-  private def cachedSpanDedup(spark: SparkSession, dir: String): DataFrame =
-    spanMemo.getOrElseUpdate(spark, dir) {
-      // repartition(1) before the checkpoint (r20): the build inherits
-      // the token memo's multi-block layout, but the OUTPUT is a
-      // 5k-row diagnostic artifact whose only consumer does one md5
-      // projection — reading it as 32 blocks cost ~3x the consumer's
-      // wall in task scheduling (bench wave-2: 0.108 -> 0.327 s).
-      // Single-block layout for a tiny artifact; the heavy build
-      // stages above the final shuffle keep their parallelism.
-      Dedup.spanDedupOf(cachedDocTokens(spark, dir), 5)
-        .repartition(1).localCheckpoint(true)
-    }
+  private val cachedSpanDedup = SessionMemo("TextDedup.spanDedup") { (spark, dir: String) =>
+    // repartition(1) before the checkpoint (r20): the build inherits
+    // the token memo's multi-block layout, but the OUTPUT is a
+    // 5k-row diagnostic artifact whose only consumer does one md5
+    // projection — reading it as 32 blocks cost ~3x the consumer's
+    // wall in task scheduling (bench wave-2: 0.108 -> 0.327 s).
+    // Single-block layout for a tiny artifact; the heavy build
+    // stages above the final shuffle keep their parallelism.
+    Dedup.spanDedupOf(cachedDocTokens(spark, dir), 5)
+      .repartition(1).localCheckpoint(true)
+  }
 
   /** [[qSpanDedup]] with clean_text replaced by its md5 — the per-row
     * hash localizer: a corpus-level hash-gate trip on q_span_dedup now
@@ -275,22 +272,21 @@ object TextDedup {
     * index NAME (catalog tables); data lives in a temp dir swept at JVM
     * exit ([[graft.IoUtil.scratchDir]]). A per-JVM counter keeps names
     * unique across sessions sharing one external catalog. */
-  private val indexMemo = new SessionMemo[String, String]("indexMemo")
   private val indexSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // Catalog lifetime: the in-memory session catalog dies with the JVM,
   // so table metadata cannot outlive the exit sweep of the backing
-  // temp dir. The memo's build lock serializes this side-effecting
-  // build, so a racing caller never writes a second set of tables.
-  private def cachedCorpusIndex(spark: SparkSession, dir: String): String =
-    indexMemo.getOrElseUpdate(spark, dir) {
-      val tmp = graft.IoUtil.scratchDir("graft-incr-index")
-      val name = s"graft_incr_idx_${indexSeq.incrementAndGet()}"
-      Dedup.writeCorpusIndex(
-        Tables.documents(spark, dir).filter(col("doc_id") < 60),
-        name, tmp.toString)
-      name
-    }
+  // temp dir. The build runs once per (session, dir), so a racing
+  // caller waits for it instead of writing a second set of tables, and
+  // builds for other sessions take fresh names from the AtomicInteger.
+  private val cachedCorpusIndex = SessionMemo("TextDedup.corpusIndex") { (spark, dir: String) =>
+    val tmp = graft.IoUtil.scratchDir("graft-incr-index")
+    val name = s"graft_incr_idx_${indexSeq.incrementAndGet()}"
+    Dedup.writeCorpusIndex(
+      Tables.documents(spark, dir).filter(col("doc_id") < 60),
+      name, tmp.toString)
+    name
+  }
 
   /** [[qDedupIncremental]]'s artifact-probing twin: the same batch
     * classified against the PERSISTED bucketed corpus index instead of
@@ -410,18 +406,15 @@ object TextDedup {
     * stays priced by [[qSimhashWide]] itself. localCheckpoint, not
     * cache(), so qSimhashWide's identical fresh plan is never subsumed
     * (the q_span_dedup lesson). */
-  private val wideSigMemo = new SessionMemo[String, DataFrame]("wideSigMemo")
-
-  private def cachedWideSig(spark: SparkSession, dir: String): DataFrame =
-    wideSigMemo.getOrElseUpdate(spark, dir) {
-      // repartition(1): same tiny-artifact layout rationale as
-      // cachedSpanDedup — one signature row per doc, light banding
-      // consumers (wave-2 bench: both wide-neardup twins read ~2.5x
-      // their old wall from multi-block task scheduling alone)
-      Dedup.simhashWideOf(cachedDocTokens(spark, dir)
-        .select(col("doc_id"), explode(col("ts")).as("t")))
-        .repartition(1).localCheckpoint(true)
-    }
+  private val cachedWideSig = SessionMemo("TextDedup.wideSig") { (spark, dir: String) =>
+    // repartition(1): same tiny-artifact layout rationale as
+    // cachedSpanDedup — one signature row per doc, light banding
+    // consumers (wave-2 bench: both wide-neardup twins read ~2.5x
+    // their old wall from multi-block task scheduling alone)
+    Dedup.simhashWideOf(cachedDocTokens(spark, dir)
+      .select(col("doc_id"), explode(col("ts")).as("t")))
+      .repartition(1).localCheckpoint(true)
+  }
 
   /** Near-dup pairs on the wide signature at Hamming ≤ 3 — exact by
     * the same 4-band pigeonhole as q_simhash_neardup, with 32,768
@@ -457,19 +450,16 @@ object TextDedup {
     * cost and started measuring redundant session work (~1.1 s apiece
     * in-bench, all identical), and a production pipeline materializes
     * the pair table once per corpus snapshot anyway. The build is
-    * priced visibly in the bench's untimed warmup (memoWarmers), like
-    * every other session memo. */
-  private val simhashPairsMemo = new SessionMemo[String, DataFrame]("simhashPairsMemo")
-
-  private[queries] def simhashPairs3(spark: SparkSession, dir: String): DataFrame =
-    simhashPairsMemo.getOrElseUpdate(spark, dir) {
-      val p = Dedup.simhashPairsFrom(
-        Dedup.simhashOf(cachedDocTokens(spark, dir)
-          .select(col("doc_id"), explode(col("ts")).as("t"))), maxDist = 3)
-        .cache()
-      p.count()
-      p
-    }
+    * priced visibly in the bench's untimed warmup, like every other
+    * session artifact. */
+  private[queries] val simhashPairs3 = SessionMemo("TextDedup.simhashPairs") { (spark, dir: String) =>
+    val p = Dedup.simhashPairsFrom(
+      Dedup.simhashOf(cachedDocTokens(spark, dir)
+        .select(col("doc_id"), explode(col("ts")).as("t"))), maxDist = 3)
+      .cache()
+    p.count()
+    p
+  }
 
   /** Comparison-prefix length / distance cap for [[qEditdistNeardup]] —
     * interpolated into BOTH engines so they cannot drift. The prefix
@@ -574,15 +564,11 @@ object TextDedup {
   /** The MinHash+LSH dup-pair set shared by q_dedup_minhash and
     * q_dedup_groups — computed once per (session, dir) and kept cached
     * (the pair list is tiny: bounded ids, high threshold). */
-  private val pairsMemo = new SessionMemo[String, DataFrame]("pairsMemo")
-
-  private def cachedMinhashPairs(spark: SparkSession, dir: String): DataFrame =
-    pairsMemo.getOrElseUpdate(spark, dir) {
-      val docs = Tables.documents(spark, dir).filter(col("doc_id") < 100)
-      val p = Dedup.minhashDedupPairs(docs).cache()
-      p.count()
-      p
-    }
+  private val cachedMinhashPairs = SessionMemo("TextDedup.minhashPairs") { (spark, dir: String) =>
+    val p = Dedup.minhashDedupPairs(Tables.documents(spark, dir).filter(col("doc_id") < 100)).cache()
+    p.count()
+    p
+  }
 
   /** The canonical-group labels over [[cachedMinhashPairs]], memoized at
     * the same (session, dir) grain: canonicalGroups runs a driver-paced
@@ -592,10 +578,8 @@ object TextDedup {
     * no amount of executor parallelism hides. The label table is tiny
     * (≤ one row per doc in any pair); caching it makes both queries
     * measure plan cost, not loop orchestration. */
-  private val labelsMemo = new SessionMemo[String, DataFrame]("labelsMemo")
-
-  private def cachedCanonicalLabels(spark: SparkSession, dir: String): DataFrame =
-    labelsMemo.getOrElseUpdate(spark, dir) {
+  private val cachedCanonicalLabels =
+    SessionMemo("TextDedup.canonicalLabels") { (spark, dir: String) =>
       val l = Dedup.canonicalGroups(cachedMinhashPairs(spark, dir)).cache()
       l.count()
       l

@@ -788,32 +788,29 @@ object TextStats {
     * measures the operator, not the cache. At 100 TB this is exactly
     * the "tokenize once, reuse" artifact a real pipeline materializes
     * as a table. */
-  private val tokArrMemo = new SessionMemo[String, DataFrame]("tokArrMemo")
-
-  private[queries] def cachedDocTokens(spark: SparkSession, dir: String): DataFrame =
-    tokArrMemo.getOrElseUpdate(spark, dir) {
-      // Tables.distributed BEFORE the tokenize (r20 optimization): the
-      // single-row-group documents file scans as ONE partition, so the
-      // cached frame held one block and EVERY consumer's shingle/
-      // explode/hash map stage — the text family's heaviest work — ran
-      // on one core until its first exchange. Repartitioning the raw
-      // rows once at build time distributes the tokenize itself AND
-      // hands every downstream query a multi-block cached frame; at
-      // production split counts the helper is a no-op. Partition count
-      // is ROW-DERIVED (>= ~500 docs per block, cores-capped): the
-      // first cut used the bare core count and a 32-way layout of 5k
-      // docs made the family's ~30 LIGHT consumers pay more per-task
-      // scheduling than the heavy shingle pipelines saved (wave-2
-      // bench: q_bm25 2.5x, q_pmi_bigrams 2.2x, q_wordcount 1.5x) —
-      // the corpus grain, not the core budget, bounds useful fan-out.
-      val raw = Tables.documents(spark, dir)
-      val parts = math.ceil(raw.count() / 500.0).toInt
-      val t = Tables.distributed(raw, "doc_id", parts)
-        .select(col("doc_id"), tokens(col("text")).as("ts"))
-        .cache()
-      t.count()
-      t
-    }
+  private[queries] val cachedDocTokens = SessionMemo("TextStats.docTokens") { (spark, dir: String) =>
+    // Tables.distributed BEFORE the tokenize (r20 optimization): the
+    // single-row-group documents file scans as ONE partition, so the
+    // cached frame held one block and EVERY consumer's shingle/
+    // explode/hash map stage — the text family's heaviest work — ran
+    // on one core until its first exchange. Repartitioning the raw
+    // rows once at build time distributes the tokenize itself AND
+    // hands every downstream query a multi-block cached frame; at
+    // production split counts the helper is a no-op. Partition count
+    // is ROW-DERIVED (>= ~500 docs per block, cores-capped): the
+    // first cut used the bare core count and a 32-way layout of 5k
+    // docs made the family's ~30 LIGHT consumers pay more per-task
+    // scheduling than the heavy shingle pipelines saved (wave-2
+    // bench: q_bm25 2.5x, q_pmi_bigrams 2.2x, q_wordcount 1.5x) —
+    // the corpus grain, not the core budget, bounds useful fan-out.
+    val raw = Tables.documents(spark, dir)
+    val parts = math.ceil(raw.count() / 500.0).toInt
+    val t = Tables.distributed(raw, "doc_id", parts)
+      .select(col("doc_id"), tokens(col("text")).as("ts"))
+      .cache()
+    t.count()
+    t
+  }
 
   /** TF-IDF: whitespace-token term weights, smooth idf ln((N+1)/(df+1));
     * document frequency is corpus-global, output bounded to doc_id < 20

@@ -285,28 +285,9 @@ class MlSpec extends AnyFunSuite {
     assert(plain.storageLevel == StorageLevel.NONE)
   }
 
-  /** `f`'s result, with the ids of the persistent RDDs that appeared
-    * while it ran (a `localCheckpoint` registers its blocks as one). */
-  private def newPersistentRdds[A](f: => A): (A, Set[Int]) = {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val a = f
-    (a, spark.sparkContext.getPersistentRDDs.keySet.toSet -- before)
-  }
-
-  private def sortedRows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
-
-  /** Re-reads `df` after its blocks were dropped: the read must return
-    * `expected` or fail naming a missing checkpoint block, never a silent
-    * empty or short result. */
-  private def sameRowsOrLoud(df: DataFrame, expected: Seq[String]): Unit =
-    try assert(sortedRows(df) == expected)
-    catch { case e: org.apache.spark.SparkException =>
-      val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .map(_.getMessage).mkString(" | ")
-      assert(msg.contains("Checkpoint block rdd_") && msg.contains("not found"), msg)
-    }
-
   test("a lost checkpoint block fails loudly: temporalSplit and the evaluators' metric rows") {
+    import BlockLoss.{sameRowsOrLoud, sortedRows}
+    def newPersistentRdds[A](f: => A) = BlockLoss.newPersistentRdds(spark)(f)
     features.count() // the shared cache fills outside the watched calls
     val ((train, test), splitIds) = newPersistentRdds(Pipelines.temporalSplit(features, 7))
     val (_, score) = Pipelines.trainClassifier(train, maxIter = 3)
